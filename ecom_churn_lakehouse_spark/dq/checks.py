@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
+    "DQGateFailure",
+    "assert_single_value",
     "compile_check",
     "run_checks",
     "observe_checks",
@@ -114,18 +116,69 @@ class DQReport:
             json.dump(self.to_dict(), f, indent=2)
 
 
-def assert_single_value(df: DataFrame, column: str) -> Any:
+class DQGateFailure(ValueError):
+    """Critical DQ failure: publish blocked (dq.py:87-91 semantics)."""
+
+
+def assert_single_value(df: DataFrame, *columns: str) -> tuple:
     """A8 single-distinct-value assertion (version homogeneity gate,
-    build_training_snapshot.py:32-38 / train_stub.py:44-50): the column
-    must hold exactly one distinct value across the frame; returns it.
-    Bounded driver work: collects at most 2 rows."""
-    vals = [r[0] for r in df.select(column).distinct().limit(2).collect()]
-    if len(vals) != 1:
-        raise ValueError(
-            f"column {column!r} must be homogeneous; found "
-            + ("no rows" if not vals else f"multiple values (e.g. {vals})")
+    build_training_snapshot.py:32-38 / train_stub.py:44-50): each
+    column must hold exactly one distinct value across the frame;
+    returns the values. All columns share one bounded pass: at most
+    2 distinct rows are collected."""
+    rows = df.select(*columns).distinct().limit(2).collect()
+    if not rows:
+        raise ValueError(f"columns {list(columns)} must be homogeneous; found no rows")
+    for c in columns:
+        if len(rows) > 1 and rows[0][c] != rows[1][c]:
+            raise ValueError(
+                f"column {c!r} must be homogeneous; found multiple values "
+                f"(e.g. {[r[c] for r in rows]})"
+            )
+    return tuple(rows[0])
+
+
+def _check_aggs(row_checks: list[dict[str, Any]]) -> list[Column]:
+    """Row count plus one conditional violation count per row check —
+    the single aggregation both :func:`run_checks` and
+    :func:`observe_checks` evaluate."""
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    for i, spec in enumerate(row_checks):
+        # coalesce: SUM over an empty frame is NULL, not 0
+        aggs.append(
+            F.coalesce(
+                F.sum(F.when(compile_check(spec), 1).otherwise(0)), F.lit(0)
+            ).alias(f"__c{i}")
         )
-    return vals[0]
+    return aggs
+
+
+def _report(counts, checks: list[dict[str, Any]], unique_bad=None) -> DQReport:
+    """Severity-gated report: row checks first (counts from
+    :func:`_check_aggs`), then ``unique`` checks with their duplicate
+    key-group counts (``unique_bad``; all 0 when omitted)."""
+    row_checks = [c for c in checks if c["type"] != "unique"]
+    unique_checks = [c for c in checks if c["type"] == "unique"]
+    named = [
+        (spec, spec.get("name", f"{spec['type']}_{i}"), int(counts[f"__c{i}"]))
+        for i, spec in enumerate(row_checks)
+    ] + [
+        (spec, spec.get("name", "unique_" + "_".join(spec["keys"])), int(bad))
+        for spec, bad in zip(unique_checks, unique_bad or [0] * len(unique_checks))
+    ]
+    return DQReport(
+        row_count=int(counts["__n"]),
+        results=[
+            CheckResult(
+                name=name,
+                check_type=spec["type"],
+                severity=spec.get("severity", "critical"),
+                bad_rows=bad,
+                passed=bad == 0,
+            )
+            for spec, name, bad in named
+        ],
+    )
 
 
 def observe_checks(df: DataFrame, checks: list[dict[str, Any]]):
@@ -134,46 +187,28 @@ def observe_checks(df: DataFrame, checks: list[dict[str, Any]]):
     :func:`run_checks` costs one dedicated aggregation job per table;
     at 100 TB that is a full extra scan before every publish. This
     variant rides the metrics on whatever action consumes the returned
-    DataFrame (e.g. the publish write itself): Spark's observe API
-    accumulates the conditional counts on the executors as rows stream
-    through, for free.
+    DataFrame (``ManagedTable.merge`` rides them on its staged snapshot
+    write): Spark's observe API accumulates the conditional counts on
+    the executors as rows stream through, for free.
 
     Returns ``(observed_df, observation)``; feed the observation to
     :func:`report_from_observation` AFTER the action has run. Only
     row-predicate checks are supported (``unique`` is group-based and
-    still needs its own pass — or an approx_count_distinct screen).
+    still needs its own pass — ``merge`` answers it with its key probe).
     """
     from pyspark.sql import Observation
 
-    row_checks = [c for c in checks if c["type"] != "unique"]
-    if len(row_checks) != len(checks):
+    if any(c["type"] == "unique" for c in checks):
         raise ValueError("observe_checks supports row-predicate checks only")
     obs = Observation()
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for i, spec in enumerate(row_checks):
-        bad = compile_check(spec)
-        aggs.append(
-            F.coalesce(F.sum(F.when(bad, 1).otherwise(0)), F.lit(0)).alias(f"__c{i}")
-        )
-    return df.observe(obs, *aggs), obs
+    return df.observe(obs, *_check_aggs(checks)), obs
 
 
 def report_from_observation(obs, checks: list[dict[str, Any]]) -> DQReport:
-    """Build a :class:`DQReport` from a completed observation."""
-    got = obs.get
-    report = DQReport(row_count=int(got["__n"]))
-    for i, spec in enumerate(checks):
-        bad_rows = int(got[f"__c{i}"])
-        report.results.append(
-            CheckResult(
-                name=spec.get("name", f"{spec['type']}_{i}"),
-                check_type=spec["type"],
-                severity=spec.get("severity", "critical"),
-                bad_rows=bad_rows,
-                passed=bad_rows == 0,
-            )
-        )
-    return report
+    """Build a :class:`DQReport` from a completed observation. ``unique``
+    checks in ``checks`` are reported as passed: the caller answered
+    them before the action ran (``ManagedTable.merge``'s key probe)."""
+    return _report(obs.get, checks)
 
 
 def run_checks(
@@ -191,55 +226,22 @@ def run_checks(
     """
     row_checks = [c for c in checks if c["type"] != "unique"]
     unique_checks = [c for c in checks if c["type"] == "unique"]
-
-    agg_cols = [F.count("*").alias("__n")]
-    predicates: list[Column] = []
-    for i, spec in enumerate(row_checks):
-        bad = compile_check(spec)
-        predicates.append(bad)
-        # coalesce: SUM over an empty frame is NULL, not 0
-        agg_cols.append(
-            F.coalesce(F.sum(F.when(bad, 1).otherwise(0)), F.lit(0)).alias(f"__c{i}")
-        )
-    counts = df.agg(*agg_cols).collect()[0]
-
-    report = DQReport(row_count=int(counts["__n"]))
-    for i, spec in enumerate(row_checks):
-        bad_rows = int(counts[f"__c{i}"])
-        report.results.append(
-            CheckResult(
-                name=spec.get("name", f"{spec['type']}_{i}"),
-                check_type=spec["type"],
-                severity=spec.get("severity", "critical"),
-                bad_rows=bad_rows,
-                passed=bad_rows == 0,
-            )
-        )
-        if bad_rows and quarantine_dir:
-            df.filter(predicates[i]).limit(sample_rows).write.mode(
-                "overwrite"
-            ).parquet(f"{quarantine_dir}/{report.results[-1].name}")
-
-    for spec in unique_checks:
-        keys = spec["keys"]
-        dup_groups = df.groupBy(*keys).count().filter(F.col("count") > 1)
-        n_dup_groups = dup_groups.count()
-        report.results.append(
-            CheckResult(
-                name=spec.get("name", "unique_" + "_".join(keys)),
-                check_type="unique",
-                severity=spec.get("severity", "critical"),
-                bad_rows=n_dup_groups,
-                passed=n_dup_groups == 0,
-            )
-        )
-        if n_dup_groups and quarantine_dir:
-            # Failed-row extraction via semi-join back to the duplicate
-            # key set (J5, dq.py:31-35).
-            df.join(
-                dup_groups.select(*keys), on=keys, how="left_semi"
-            ).limit(sample_rows).write.mode("overwrite").parquet(
-                f"{quarantine_dir}/{report.results[-1].name}"
-            )
-
+    counts = df.agg(*_check_aggs(row_checks)).collect()[0]
+    dup_groups = [
+        df.groupBy(*c["keys"]).count().filter(F.col("count") > 1)
+        for c in unique_checks
+    ]
+    report = _report(counts, checks, [d.count() for d in dup_groups])
+    if quarantine_dir:
+        # Failed-row extraction: the check predicate, or a semi-join
+        # back to the duplicate key set (J5, dq.py:31-35).
+        violating = [df.filter(compile_check(c)) for c in row_checks] + [
+            df.join(d.select(*c["keys"]), on=c["keys"], how="left_semi")
+            for c, d in zip(unique_checks, dup_groups)
+        ]
+        for result, bad in zip(report.results, violating):
+            if result.bad_rows:
+                bad.limit(sample_rows).write.mode("overwrite").parquet(
+                    f"{quarantine_dir}/{result.name}"
+                )
     return report

@@ -7,8 +7,8 @@ The reference's blocking DQ gate is driven by YAML expectation files
 ``src/common/dq.py:19-39``. This repo's engine compiles the same
 check types from JSON contracts (``pipelines/medallion.py``); this
 module accepts the YAML format too, normalizing it onto the engine's
-spec dicts so :func:`dq.checks.run_checks` /
-:func:`dq.checks.observe_checks` run either config unchanged.
+spec dicts so :func:`dq.checks.run_checks` and the gated
+``ManagedTable.merge(df, checks=...)`` run either config unchanged.
 
 Normalization:
 - ``not_null``  → engine ``not_null`` (``columns`` list, as-is)

@@ -27,10 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ecom_churn_lakehouse_spark.dq.checks import run_checks
 from ecom_churn_lakehouse_spark.pipelines.medallion import (
     _GOLD_GATES,
-    DQGateFailure,
     StageResult,
     _contract,
     _write_stage_metadata,
@@ -60,6 +58,12 @@ def incremental_gold_update(
     those customers (asserted in tests/test_incremental.py), because
     the feature plan is per-customer decomposable.
     """
+    gold = ManagedTable(spark, gold_path, keys=["customer_id", "as_of_date"])
+    if not gold.exists():
+        raise ValueError(
+            "incremental update requires an existing gold table; run the "
+            "full gold_features publish first"
+        )
     silver = ManagedTable(spark, silver_path, keys=["order_id"]).read()
     keys = changed_keys.select("customer_id").distinct()
     scoped = silver.join(keys, on="customer_id", how="left_semi")
@@ -80,22 +84,6 @@ def incremental_gold_update(
         .withColumn("_gold_ts", F.current_timestamp())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # Same blocking gates as the full run, evaluated over the delta
-    # slice only (the untouched remainder already passed its gates).
-    report = run_checks(feats, _GOLD_GATES)
-    if not report.ok:
-        feats.unpersist()
-        raise DQGateFailure(
-            f"incremental gold gates failed: "
-            f"{[r.name for r in report.blocking_failures]}"
-        )
-    n = feats.count()
-    gold = ManagedTable(spark, gold_path, keys=["customer_id", "as_of_date"])
-    if not gold.exists():
-        raise ValueError(
-            "incremental update requires an existing gold table; run the "
-            "full gold_features publish first"
-        )
     # Changed keys with NO surviving orders (full CDC erasure) produce
     # no feature row — without a tombstone their stale gold row would
     # outlive the data that justified it. merge(delete_col=...) removes
@@ -112,7 +100,13 @@ def incremental_gold_update(
     source = feats.withColumn("_deleted", F.lit(False)).unionByName(
         vanished.select(*feats.columns).withColumn("_deleted", F.lit(True))
     )
-    gold.merge(source, delete_col="_deleted")
+    # Same blocking gates as the full run, observed on the delta
+    # slice's upserts only (the untouched remainder already passed).
+    try:
+        report = gold.merge(source, checks=_GOLD_GATES, delete_col="_deleted")
+    finally:
+        feats.unpersist()
+    n = report.row_count
     log_event(
         "gold_incremental_published",
         run_id,
@@ -134,5 +128,4 @@ def incremental_gold_update(
             "gates": report.to_dict(),
         },
     )
-    feats.unpersist()
     return StageResult(rows_published=n, metadata=report.to_dict())

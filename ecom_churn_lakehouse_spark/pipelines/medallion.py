@@ -5,12 +5,18 @@ reference's stage semantics end-to-end (SURVEY.md §3):
 
 - bronze: fingerprint-idempotent append with lineage stamping + audit
   (``orders_to_bronze.py:188-324``)
-- silver: normalize → preclean split → W1 dedup → quarantine → DQ gate
-  → MERGE on order_id (``orders_bronze_to_silver.py:93-221``)
-- gold: point-in-time feature snapshot + quality gates → MERGE on
+- silver: normalize → preclean split → W1 dedup → quarantine → gated
+  MERGE on order_id (``orders_bronze_to_silver.py:93-221``)
+- gold: point-in-time feature snapshot → gated MERGE on
   (customer_id, as_of_date) (``customer_features_daily.py:215-310``)
 - labels / training snapshot / latest-features export
   (``labels.py``, ``build_training_snapshot.py``, ``build_latest_features.py``)
+
+Every keyed publish is ONE call, ``ManagedTable.merge(df, checks=...)``:
+the stage's blocking DQ gates and its row count are observed on the
+publish write itself, the grain check is answered by MERGE's key
+probe, and a failing gate raises :class:`DQGateFailure` before the
+commit, so readers never see ungated data.
 
 Fixes the reference's recompute defect (§3.2): multi-action lineages
 are persisted once instead of re-derived per action.
@@ -31,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from ecom_churn_lakehouse_spark.contracts import Contract
-from ecom_churn_lakehouse_spark.dq import assert_single_value, run_checks
+from ecom_churn_lakehouse_spark.dq import DQGateFailure, assert_single_value
 from ecom_churn_lakehouse_spark.logging_util import log_event
 from ecom_churn_lakehouse_spark.operators.windows import dedup_top1
 from ecom_churn_lakehouse_spark.plans.churn import (
@@ -83,10 +89,6 @@ def _write_stage_metadata(path: str, run_id: str, payload: dict) -> None:
     os.makedirs(meta_dir, exist_ok=True)
     with open(os.path.join(meta_dir, f"run-{run_id}.json"), "w") as f:
         json.dump(payload, f, indent=2, default=str)
-
-
-class DQGateFailure(RuntimeError):
-    """Critical DQ failure: publish blocked (dq.py:87-91 semantics)."""
 
 
 @dataclass
@@ -228,27 +230,23 @@ def silver_publish(
     ]
     deduped = dedup_top1(clean, ["order_id"], order)
 
-    n_invalid = invalid.count()
-    n_clean = clean.count()
-    n_dedup = deduped.count()
+    n_invalid, n_clean = normalized.agg(F.count_if(~valid), F.count_if(valid)).first()
     if n_invalid:
         invalid.write.mode("overwrite").parquet(f"{quarantine_dir}/preclean_invalid")
-    n_rejected_dups = n_clean - n_dedup
 
     silver_out = (
         deduped.withColumn("_silver_run_id", F.lit(run_id))
         .withColumn("_silver_ts", F.current_timestamp())
         .withColumn("_schema_version", F.lit(_contract("silver_orders").contract_hash))
     )
-
-    report = run_checks(silver_out, _SILVER_DQ_CHECKS, quarantine_dir=quarantine_dir)
-    if not report.ok:
-        normalized.unpersist()
-        raise DQGateFailure(
-            f"critical DQ failures: {[r.name for r in report.blocking_failures]}"
+    try:
+        report = ManagedTable(spark, silver_path, keys=["order_id"]).merge(
+            silver_out, checks=_SILVER_DQ_CHECKS
         )
-
-    ManagedTable(spark, silver_path, keys=["order_id"]).merge(silver_out)
+    finally:
+        normalized.unpersist()
+    n_dedup = report.row_count
+    n_rejected_dups = n_clean - n_dedup
     log_event(
         "silver_published", run_id,
         rows=n_dedup, invalid=n_invalid, duplicate_rejects=n_rejected_dups,
@@ -258,7 +256,6 @@ def silver_publish(
         run_id,
         {"stage": "silver", "rows_published": n_dedup, "dq": report.to_dict()},
     )
-    normalized.unpersist()
     return StageResult(
         rows_published=n_dedup,
         rows_rejected=n_invalid + n_rejected_dups,
@@ -280,19 +277,17 @@ def gold_features(
     as_of_date: str,
     run_id: str,
     feature_version: str | None = None,
-    observed_gates: bool = False,
 ) -> StageResult:
-    """Point-in-time feature snapshot + gates + MERGE on the grain.
+    """Point-in-time feature snapshot, published by one gated MERGE on
+    the grain.
 
-    ``observed_gates=True`` switches from the reference's
-    gate-then-publish (one dedicated ``run_checks`` aggregation job,
-    then the MERGE — two scans of the feature frame) to
-    :meth:`ManagedTable.merge_gated`: the row-predicate gates ride the
-    staged publish write via ``df.observe`` and the HEAD swap happens
-    only if they pass. The contract's ``grain_unique`` gate is not a
-    row predicate, but MERGE's own unique-source probe enforces the
-    identical (customer_id, as_of_date) grain, so nothing is lost. At
-    100 TB this removes a full extra pass over gold per publish.
+    The reference gates, then publishes: a dedicated check job, then
+    the MERGE, two scans of the feature frame. Here the contract's
+    row-predicate gates ride the staged publish write (``df.observe``)
+    and ``grain_unique`` is MERGE's own unique-source probe on the same
+    (customer_id, as_of_date) keys; the commit happens only if every
+    gate passes. At 100 TB this removes a full extra pass over gold per
+    publish.
     """
     silver = ManagedTable(spark, silver_path, keys=["order_id"]).read()
     orders = silver.select(
@@ -316,24 +311,13 @@ def gold_features(
         .withColumn("_gold_ts", F.current_timestamp())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    table = ManagedTable(spark, gold_path, keys=["customer_id", "as_of_date"])
-    if observed_gates:
-        row_gates = [g for g in _GOLD_GATES if g["type"] != "unique"]
-        try:
-            report = table.merge_gated(feats, row_gates)
-        except ValueError as exc:
-            feats.unpersist()
-            raise DQGateFailure(f"gold gates failed: {exc}") from exc
-        n = report.row_count
-    else:
-        report = run_checks(feats, _GOLD_GATES)
-        if not report.ok:
-            feats.unpersist()
-            raise DQGateFailure(
-                f"gold gates failed: {[r.name for r in report.blocking_failures]}"
-            )
-        n = feats.count()
-        table.merge(feats)
+    try:
+        report = ManagedTable(
+            spark, gold_path, keys=["customer_id", "as_of_date"]
+        ).merge(feats, checks=_GOLD_GATES)
+    finally:
+        feats.unpersist()
+    n = report.row_count
     log_event("gold_published", run_id, rows=n, as_of_date=as_of_date, snapshot_id=snapshot_id)
     _write_stage_metadata(
         gold_path,
@@ -347,7 +331,6 @@ def gold_features(
             "gates": report.to_dict(),
         },
     )
-    feats.unpersist()
     return StageResult(rows_published=n, metadata=report.to_dict())
 
 
@@ -385,29 +368,25 @@ def label_snapshot(
         {"name": "label_domain", "type": "domain", "column": "churn_label", "allowed": [0, 1]},
     ]
     labels = labels.persist(StorageLevel.MEMORY_AND_DISK)
-    report = run_checks(labels, gates)
-    if not report.ok:
+    try:
+        if labels.isEmpty() and not orders.isEmpty():
+            # Eligibility gate (labels.py:154-163): churn_labels' broadcast
+            # bound frame yields an EMPTY spine when as_of + horizon exceeds
+            # max(order_date). Publishing that would silently produce an
+            # empty training set, so fail loudly like the reference does.
+            end = orders.agg(F.max("order_date")).collect()[0][0]
+            raise DQGateFailure(
+                "Requested as_of_date is not training-eligible because the full "
+                "future label window is not observable. "
+                f"as_of_date={as_of_date}, label_horizon_days={horizon_days}, "
+                f"dataset_end_date={end}"
+            )
+        report = ManagedTable(
+            spark, labels_path, keys=["customer_id", "as_of_date"]
+        ).merge(labels, checks=gates)
+    finally:
         labels.unpersist()
-        raise DQGateFailure(
-            f"label gates failed: {[r.name for r in report.blocking_failures]}"
-        )
-    n = labels.count()
-    if n == 0 and orders.limit(1).count() > 0:
-        # Eligibility gate (labels.py:154-163): churn_labels' broadcast
-        # bound frame yields an EMPTY spine when as_of + horizon exceeds
-        # max(order_date). Publishing that would silently produce an
-        # empty training set, so fail loudly like the reference does.
-        labels.unpersist()
-        end = orders.agg(F.max("order_date")).collect()[0][0]
-        raise DQGateFailure(
-            "Requested as_of_date is not training-eligible because the full "
-            "future label window is not observable. "
-            f"as_of_date={as_of_date}, label_horizon_days={horizon_days}, "
-            f"dataset_end_date={end}"
-        )
-    ManagedTable(spark, labels_path, keys=["customer_id", "as_of_date"]).merge(labels)
-    labels.unpersist()
-    return StageResult(rows_published=n, metadata=report.to_dict())
+    return StageResult(rows_published=report.row_count, metadata=report.to_dict())
 
 
 # ------------------------------------------- training snapshot + serving
@@ -438,12 +417,10 @@ def training_snapshot_publish(
     )
     # A8 version-homogeneity gates (build_training_snapshot.py:32-38):
     # exactly one feature version and one label horizon in the snapshot.
-    fv = assert_single_value(snap, "_feature_version")
-    assert_single_value(snap, "_label_horizon_days")
-    n = snap.count()
-    ManagedTable(
+    fv, _ = assert_single_value(snap, "_feature_version", "_label_horizon_days")
+    n = ManagedTable(
         spark, snapshot_path, keys=["customer_id", "as_of_date"]
-    ).merge(snap)
+    ).merge(snap).row_count
     _write_stage_metadata(
         snapshot_path,
         run_id,

@@ -34,10 +34,18 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecom_churn_lakehouse_spark.dq.checks import (
+    DQGateFailure,
+    DQReport,
+    observe_checks,
+    report_from_observation,
+    run_checks,
+)
 from ecom_churn_lakehouse_spark.session import HAVE_DELTA
 
 __all__ = ["ManagedTable"]
@@ -137,23 +145,32 @@ class ManagedTable:
     # lag); WRITERS always resolve their base snapshot from the log so
     # no committed merge can be overwritten by a stale racer.
 
-    def _commit_seq(self) -> int:
-        """Highest claimed commit sequence (-1 for an empty table).
-        Falls back to the HEAD name for pre-log tables."""
-        seqs = [-1]
+    def _claimed_seqs(self) -> list[int]:
+        """Claimed commit sequences in the log, ascending."""
         cdir = os.path.join(self.path, _COMMITS)
+        seqs = []
         if os.path.isdir(cdir):
             for fn in os.listdir(cdir):
                 try:
                     seqs.append(int(fn.split(".")[0]))
                 except ValueError:
                     continue
+        return sorted(seqs)
+
+    def _claim_name(self, seq: int) -> str:
+        """Version name recorded by claim ``seq`` ('' if unreadable)."""
+        try:
+            with open(os.path.join(self.path, _COMMITS, f"{seq:08d}.commit")) as f:
+                return f.read().strip()
+        except OSError:
+            return ""
+
+    def _commit_seq(self) -> int:
+        """Highest claimed commit sequence (-1 for an empty table).
+        Falls back to the HEAD name for pre-log tables."""
+        seqs = [-1] + self._claimed_seqs()
         if self.exists():
-            head = os.path.basename(self._head_dir())
-            try:
-                seqs.append(int(head.split("-")[1]))
-            except (IndexError, ValueError):
-                pass
+            seqs.append(self._version_seq(os.path.basename(self._head_dir())))
         return max(seqs)
 
     def _committed_dir(self) -> str | None:
@@ -169,39 +186,25 @@ class ManagedTable:
         briefly and then SKIPPED in favor of the next-highest
         committed seq instead of blocking the table forever; the
         abandoned seq stays claimed so no writer ever reuses it."""
-        seqs: list[int] = []
-        cdir = os.path.join(self.path, _COMMITS)
-        if os.path.isdir(cdir):
-            for fn in os.listdir(cdir):
-                try:
-                    seqs.append(int(fn.split(".")[0]))
-                except ValueError:
-                    continue
+        seqs = self._claimed_seqs()
         if not seqs:  # pre-log table: HEAD is it
             return self._head_dir() if self.exists() else None
-        for retries, seq in zip((200, 10, 1), sorted(seqs, reverse=True)):
-            commit_file = os.path.join(cdir, f"{seq:08d}.commit")
+        for retries, seq in zip((200, 10, 1), reversed(seqs)):
             for _ in range(retries):  # top seq: <= ~2 s, normally 1st hit
-                try:
-                    with open(commit_file) as f:
-                        name = f.read().strip()
-                except OSError:
-                    name = ""
-                if name:
-                    d = os.path.join(self.path, name)
-                    if os.path.isdir(d):
-                        return d
+                name = self._claim_name(seq)
+                if name and os.path.isdir(os.path.join(self.path, name)):
+                    return os.path.join(self.path, name)
                 time.sleep(0.01)
         raise RuntimeError(
             f"no commit at {self.path} resolves to a snapshot "
-            f"(claimed seqs: {sorted(seqs)[-3:]})"
+            f"(claimed seqs: {seqs[-3:]})"
         )
 
-    def _read_committed(self) -> DataFrame:
+    def _read_committed(self, spark: SparkSession | None = None) -> DataFrame:
         d = self._committed_dir()
         if d is None:
             raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        return self.spark.read.parquet(d)
+        return (spark or self.spark).read.parquet(d)
 
     def _stage(self, df: DataFrame, partition_by: list[str] | None) -> str:
         """Stage a snapshot in a hidden dir (the WRITE half of a
@@ -242,22 +245,8 @@ class ManagedTable:
         - HEAD is replaced only if ``version``'s seq is >= the seq of
           the version HEAD currently names.
         """
-        cdir = os.path.join(self.path, _COMMITS)
-        committed: list[tuple[int, str]] = []
-        if os.path.isdir(cdir):
-            for fn in os.listdir(cdir):
-                try:
-                    seq = int(fn.split(".")[0])
-                except ValueError:
-                    continue
-                try:
-                    with open(os.path.join(cdir, fn)) as f:
-                        name = f.read().strip()
-                except OSError:
-                    continue
-                if name:
-                    committed.append((seq, name))
-        committed.sort()
+        seqs = self._claimed_seqs()
+        committed = [(q, n) for q in seqs if (n := self._claim_name(q))]
         keep = {name for _, name in committed[-2:]} or {version}
         top_seq = committed[-1][0] if committed else self._version_seq(version)
         # seq-ordered HEAD swap: never point HEAD at an older commit
@@ -286,13 +275,11 @@ class ManagedTable:
                 and self._version_seq(d) < top_seq
             ):
                 shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-        if os.path.isdir(cdir):
-            logs = sorted(os.listdir(cdir))
-            for fn in logs[:-16]:
-                try:
-                    os.remove(os.path.join(cdir, fn))
-                except OSError:
-                    pass
+        for seq in seqs[:-16]:
+            try:
+                os.remove(os.path.join(self.path, _COMMITS, f"{seq:08d}.commit"))
+            except OSError:
+                pass
 
     def _try_publish(
         self,
@@ -833,12 +820,16 @@ class ManagedTable:
         partition_by: list[str] | None = None,
         base_dependent: bool = True,
         max_retries: int = 8,
+        gate=None,
     ) -> None:
         """Optimistic-concurrency publish loop: stage ``build()``,
         CAS-claim the next seq, and on conflict re-read + re-apply
         (``base_dependent=True``, the MERGE/append path — the frame
         must be recomputed against the winner's snapshot) or just
-        re-claim (``base_dependent=False``, blind overwrite)."""
+        re-claim (``base_dependent=False``, blind overwrite).
+
+        ``gate()`` runs after each stage and before its claim; if it
+        raises, the staged dir is abandoned and nothing is committed."""
         staged: str | None = None
         try:
             for _ in range(max_retries + 1):
@@ -851,6 +842,8 @@ class ManagedTable:
                     if staged is not None:
                         self._abandon_staged(staged)
                     staged = self._stage(build(), partition_by)
+                    if gate is not None:
+                        gate()
                     # a commit that landed while we were staging makes
                     # our frame stale — claim only our read's successor
                 if self._try_publish(staged, base_seq + 1, partition_by):
@@ -914,37 +907,69 @@ class ManagedTable:
     def merge(
         self,
         source: DataFrame,
+        checks: Sequence[dict] = (),
         delete_col: str | None = None,
         evolve_schema: bool = False,
-    ) -> None:
-        """S7 keyed upsert: update-all when matched, insert-all otherwise.
+    ) -> DQReport:
+        """S7 keyed upsert behind blocking DQ gates: update-all when
+        matched, insert-all otherwise. Returns the :class:`DQReport`.
 
         Requires ``source`` unique per key (the reference guarantees
         this upstream via W1 dedup / snapshot grain; we enforce it —
-        a non-unique source makes MERGE nondeterministic).
+        a non-unique source makes MERGE nondeterministic). That key
+        probe also answers every ``unique`` check in ``checks`` whose
+        keys are the table's keys; a ``unique`` check on other keys
+        raises :class:`ValueError`.
+
+        The row-predicate checks and the row count of the upserts are
+        observed (``df.observe``) on the staged snapshot write itself —
+        no extra scan — and checked before the commit claim. A failing
+        critical check (or key probe) raises
+        :class:`~ecom_churn_lakehouse_spark.dq.checks.DQGateFailure`;
+        the staged snapshot is abandoned, so ``_HEAD`` and the commit
+        log are untouched, exactly like a failed Delta transaction.
 
         ``delete_col`` names a boolean column in ``source`` marking CDC
         tombstones: matched target rows are DELETED instead of updated,
         and unmatched tombstones are ignored. The flag column itself
-        never lands in the table.
+        never lands in the table, and tombstones are not gated.
 
         ``evolve_schema=True`` lets the source carry columns the table
         doesn't have yet; the table widens and existing rows backfill
         NULL (Delta ``autoMerge`` semantics).
         """
+        unique = [c for c in checks if c["type"] == "unique"]
+        if any(sorted(c["keys"]) != sorted(self.keys) for c in unique):
+            raise ValueError(
+                f"merge answers unique checks on its keys {self.keys} only; "
+                "other checks must be row-predicate checks"
+            )
+        row_checks = [c for c in checks if c["type"] != "unique"]
         dup = (
             source.groupBy(*self.keys).count().filter(F.col("count") > 1).limit(1)
         )
         if dup.count() > 0:
-            raise ValueError(f"merge source not unique on keys {self.keys}")
+            raise DQGateFailure(f"merge source not unique on keys {self.keys}")
         if delete_col is not None:
             upserts = source.filter(~F.col(delete_col)).drop(delete_col)
         else:
             upserts = source
-        if not self.exists():
-            self.overwrite(upserts)
-            return
+
+        def passed(report: DQReport) -> DQReport:
+            if not report.ok:
+                raise DQGateFailure(
+                    "critical DQ failures: "
+                    f"{[r.name for r in report.blocking_failures]}"
+                )
+            return report
+
         if HAVE_DELTA:
+            # Delta MERGE is its own transaction; observation semantics
+            # across the MERGE command aren't guaranteed, so gate first.
+            report = passed(run_checks(upserts, checks))
+            if not self.exists():
+                self.overwrite(upserts)
+                return report
             from delta.tables import DeltaTable  # type: ignore
 
             if evolve_schema:
@@ -972,97 +997,43 @@ class ManagedTable:
                     )
                     .execute()
                 )
-            return
+            return report
+
+        attempt: dict = {}
+
         def build() -> DataFrame:
+            # A fresh Observation per OCC attempt: an observation
+            # reports only the first action that consumes it.
+            observed, attempt["obs"] = observe_checks(upserts, row_checks)
+            if self._committed_dir() is None:  # first publish
+                return observed
             # Re-resolved from the commit LOG on every (re)try: a racer
             # that lost the CAS re-applies its upserts on top of the
             # winner's snapshot — serializable outcome, no lost update.
-            current = self._read_committed()
+            # Read through the source's session: an observation fires
+            # only for actions of its own session, and a foreachBatch
+            # source lives in a cloned one.
+            current = self._read_committed(source.sparkSession)
             # Deletes and upserts alike displace the current row for
             # their key; only upserts come back in.
             kept = current.join(
                 source.select(*self.keys), on=self.keys, how="left_anti"
             )
             if evolve_schema:
-                return kept.unionByName(upserts, allowMissingColumns=True)
+                return kept.unionByName(observed, allowMissingColumns=True)
             extra = set(upserts.columns) - set(current.columns)
             if extra:
                 raise ValueError(
                     f"merge source has columns not in table: {sorted(extra)}; "
                     "pass evolve_schema=True to widen the table"
                 )
-            return kept.unionByName(upserts.select(*current.columns))
+            return kept.unionByName(observed.select(*current.columns))
 
-        self._occ_publish(build, None)
+        def gate() -> None:
+            attempt["report"] = passed(report_from_observation(attempt["obs"], checks))
 
-    def merge_gated(self, source: DataFrame, checks: list[dict]) -> "DQReport":
-        """Keyed MERGE with DQ gates observed DURING the publish write.
-
-        The classic gate-then-publish (``run_checks`` + ``merge``) scans
-        the source twice; here the row-predicate counts ride the staged
-        snapshot write itself (``df.observe`` — executor-side
-        accumulation, zero extra jobs) and the HEAD swap happens only if
-        every critical check passes. On failure the staged snapshot is
-        abandoned: readers never see it, exactly like a failed Delta
-        transaction. Raises :class:`ValueError` listing the failures.
-
-        Returns the :class:`DQReport` either way the gates pass.
-        """
-        from ecom_churn_lakehouse_spark.dq.checks import (
-            observe_checks,
-            report_from_observation,
-            run_checks,
-        )
-
-        if HAVE_DELTA:
-            # Delta MERGE is its own transaction; observation semantics
-            # across the MERGE command aren't guaranteed, so gate first.
-            report = run_checks(source, checks)
-            if not report.ok:
-                raise ValueError(
-                    "merge_gated blocked: "
-                    f"{[r.name for r in report.blocking_failures]}"
-                )
-            self.merge(source)
-            return report
-
-        dup = source.groupBy(*self.keys).count().filter(F.col("count") > 1).limit(1)
-        if dup.count() > 0:
-            raise ValueError(f"merge source not unique on keys {self.keys}")
-        report = None
-        for _ in range(9):
-            # Read the base seq BEFORE resolving the base snapshot
-            # (mirrors _occ_publish; r8 ADVICE #1): if a concurrent
-            # commit lands at base_seq+1 after this point, our claim of
-            # base_seq+1 FAILS and we re-read — the stale-overwrite
-            # ordering (snapshot first, seq later) could silently
-            # clobber that interleaved merge.
-            base_seq = self._commit_seq()
-            observed, obs = observe_checks(source, checks)
-            if self.exists():
-                current = self._read_committed()
-                kept = current.join(
-                    source.select(*self.keys), on=self.keys, how="left_anti"
-                )
-                frame = kept.unionByName(observed.select(*current.columns))
-            else:
-                frame = observed
-            staged = self._stage(frame, None)
-            report = report_from_observation(obs, checks)
-            if not report.ok:
-                self._abandon_staged(staged)
-                raise ValueError(
-                    "merge_gated blocked: "
-                    f"{[r.name for r in report.blocking_failures]}"
-                )
-            if self._try_publish(staged, base_seq + 1):
-                return report
-            # lost the CAS: a concurrent commit landed while the gated
-            # write ran — abandon and re-observe against the new base
-            self._abandon_staged(staged)
-        raise RuntimeError(
-            f"managed-table commit contention in merge_gated at {self.path}"
-        )
+        self._occ_publish(build, None, gate=gate)
+        return attempt["report"]
 
     # ------------------------------------------------------- maintenance
 

@@ -1,4 +1,5 @@
 import sys
+import threading
 from pathlib import Path
 
 import pytest
@@ -19,3 +20,29 @@ def spark():
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture
+def within():
+    """``within(fn, seconds)`` runs ``fn`` in a daemon thread and fails
+    the test, instead of hanging the suite, if it has not returned in
+    time. Returns ``fn()``'s value and re-raises its exception."""
+
+    def run(fn, seconds=120):
+        out = {}
+
+        def target():
+            try:
+                out["value"] = fn()
+            except Exception as exc:  # re-raised in the test thread
+                out["error"] = exc
+
+        t = threading.Thread(target=target, daemon=True)
+        t.start()
+        t.join(seconds)
+        assert not t.is_alive(), f"blocked for more than {seconds} s"
+        if "error" in out:
+            raise out["error"]
+        return out["value"]
+
+    return run

@@ -18,12 +18,13 @@ tests plant, deterministically:
   2, the doc-hash salt, the hard cost cap.
 """
 
+import os
 import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ecom_churn_lakehouse_spark.dedup.minhash import (
     banded_signatures,

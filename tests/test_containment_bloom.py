@@ -2,9 +2,10 @@
 audit — the guarantees (no false negatives, planted-pair recall) the
 row-hash oracle can't state."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ecom_churn_lakehouse_spark.registry import queries
 

@@ -1,11 +1,12 @@
 """Behavioral invariants for the data-ops tier (encoding advisor,
 join-cardinality estimator, checksums, snapshot diff)."""
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ecom_churn_lakehouse_spark.registry import queries
 

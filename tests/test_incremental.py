@@ -94,6 +94,7 @@ def test_incremental_requires_existing_gold(spark, tmp_path):
 
 def test_gold_incremental_cli(spark, tmp_path):
     import json
+    import os
     import subprocess
     import sys
 
@@ -112,7 +113,8 @@ def test_gold_incremental_cli(spark, tmp_path):
          "gold-incremental", "--silver", str(tmp_path / "silver"),
          "--gold", str(tmp_path / "gold"), "--keys", keys,
          "--as-of", AS_OF, "--run-id", "r2"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     payload = json.loads(out.stdout.strip().splitlines()[-1])

@@ -2,10 +2,11 @@
 bootstrap, variance components) and the t-closeness audit — the
 conservation/bound properties the row-hash oracle can't state."""
 
+import os
 import sys
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ecom_churn_lakehouse_spark.registry import queries
 

@@ -123,31 +123,31 @@ def test_time_travel_reads_previous_snapshot(spark, tmp_path):
         t.read(version="v-99999999-nope")
 
 
-# ------------------------------------------------- observed-gate publish
+# ------------------------------------------------------- gated publish
 
 
-def test_merge_gated_publishes_and_reports(spark, tmp_path):
+def test_merge_checks_publishes_and_reports(spark, tmp_path):
     t = ManagedTable(spark, str(tmp_path / "g"), keys=["k"])
     checks = [{"name": "v_not_null", "type": "not_null", "columns": ["v"]}]
-    rep = t.merge_gated(
+    rep = t.merge(
         spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"), checks
     )
     assert rep.ok and rep.row_count == 2 and rep.results[0].bad_rows == 0
     assert t.read().count() == 2
     # second gated merge: update + insert, gates still observed
-    rep2 = t.merge_gated(
+    rep2 = t.merge(
         spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string"), checks
     )
     assert rep2.ok and rep2.row_count == 2
     assert {r["k"]: r["v"] for r in t.read().collect()} == {1: "a", 2: "B", 3: "c"}
 
 
-def test_merge_gated_aborts_before_head_swap(spark, tmp_path):
+def test_merge_checks_abort_before_head_swap(spark, tmp_path):
     t = ManagedTable(spark, str(tmp_path / "g"), keys=["k"])
     t.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
     before = t.versions()
-    with pytest.raises(ValueError, match="merge_gated blocked"):
-        t.merge_gated(
+    with pytest.raises(ValueError, match="critical DQ failures.*v_not_null"):
+        t.merge(
             spark.createDataFrame([(2, None)], "k int, v string"),
             [{"name": "v_not_null", "type": "not_null", "columns": ["v"]}],
         )
@@ -156,13 +156,44 @@ def test_merge_gated_aborts_before_head_swap(spark, tmp_path):
     assert t.versions() == before
 
 
-def test_merge_gated_rejects_unique_check_spec(spark, tmp_path):
+def test_merge_checks_unique_spec_on_merge_keys_only(spark, tmp_path):
     t = ManagedTable(spark, str(tmp_path / "g"), keys=["k"])
+    src = spark.createDataFrame([(1, "a")], "k int, v string")
     with pytest.raises(ValueError, match="row-predicate"):
-        t.merge_gated(
-            spark.createDataFrame([(1, "a")], "k int, v string"),
-            [{"type": "unique", "keys": ["k"]}],
-        )
+        t.merge(src, [{"type": "unique", "keys": ["v"]}])
+    assert not t.exists()
+    # a unique check on the MERGE keys is answered by the key probe
+    rep = t.merge(src, [{"name": "pk", "type": "unique", "keys": ["k"]}])
+    assert rep.ok and rep.row_count == 1
+    assert [(r.name, r.check_type, r.bad_rows) for r in rep.results] == [
+        ("pk", "unique", 0)
+    ]
+
+
+def test_gated_merge_from_foreach_batch(spark, tmp_path, within):
+    """foreachBatch hands the sink a frame of a CLONED session, and an
+    observation fires only for actions of its own session: the gated
+    merge into an existing table must still observe its gates (the
+    base snapshot is read through the source's session)."""
+    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
+    t.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1, "A"), (2, "b")], "k int, v string").write.parquet(src)
+    checks = [{"name": "v_not_null", "type": "not_null", "columns": ["v"]}]
+    reports = []
+    query = (
+        spark.readStream.schema("k int, v string").parquet(src)
+        .writeStream.foreachBatch(lambda b, _: reports.append(t.merge(b, checks)))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        within(query.awaitTermination)
+    finally:
+        query.stop()
+    assert [(r.ok, r.row_count) for r in reports] == [(True, 2)]
+    assert {r["k"]: r["v"] for r in t.read().collect()} == {1: "A", 2: "b"}
 
 
 def test_merge_with_cdc_deletes(spark, tmp_path):
@@ -478,10 +509,11 @@ def test_delayed_head_swap_cannot_regress_or_destroy(spark, tmp_path):
     assert {r["v"] for r in t.read().collect()} == {2}
 
 
-def test_merge_gated_reads_seq_before_snapshot(spark, tmp_path):
-    """r8 ADVICE #1: merge_gated must capture base_seq BEFORE resolving
-    its base snapshot. A commit interleaved inside the snapshot read
-    then forces a CAS conflict + retry, so both merges survive."""
+def test_merge_checks_read_seq_before_snapshot(spark, tmp_path):
+    """r8 ADVICE #1: a gated merge must capture base_seq BEFORE
+    resolving its base snapshot. A commit interleaved inside the
+    snapshot read then forces a CAS conflict + retry, so both merges
+    survive."""
     path = str(tmp_path / "t")
     t = ManagedTable(spark, path, keys=["k"])
     t.overwrite(spark.createDataFrame([Row(k="base", v=0)]))
@@ -489,18 +521,18 @@ def test_merge_gated_reads_seq_before_snapshot(spark, tmp_path):
     fired = {"done": False}
     real_read = t._read_committed
 
-    def read_with_interleaved_commit():
-        base = real_read()
+    def read_with_interleaved_commit(*args):
+        base = real_read(*args)
         base.count()  # materialize BEFORE the interleaved commit lands
         if not fired["done"]:
             fired["done"] = True
             other.merge(spark.createDataFrame([Row(k="intruder", v=9)]))
-        return real_read()
+        return real_read(*args)
 
     t._read_committed = read_with_interleaved_commit
     checks = [{"name": "v_not_null", "type": "not_null",
                "columns": ["v"], "severity": "critical"}]
-    report = t.merge_gated(
+    report = t.merge(
         spark.createDataFrame([Row(k="mine", v=1)]), checks
     )
     assert report.ok

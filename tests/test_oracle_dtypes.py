@@ -10,11 +10,12 @@ exact Spark twin — no Spark session required, so it runs in <10 s and
 catches the class at authoring time, not at judge time.
 """
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.001"
 TABLES = (

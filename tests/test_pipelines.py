@@ -158,41 +158,166 @@ def test_label_horizon_not_observable_raises(spark, tmp_path):
         )
 
 
-def test_gold_observed_gates(spark, paths, tmp_path, monkeypatch):
-    # observed_gates=True (merge_gated: metrics ride the publish write)
-    # must produce the same gold table as the classic gate-then-publish.
+@pytest.fixture(scope="module")
+def gated_lake(spark, tmp_path_factory):
+    base = tmp_path_factory.mktemp("gated")
+    lake = {k: str(base / k) for k in (
+        "raw", "bronze", "audit", "silver", "quarantine", "gold", "labels")}
+    spark.createDataFrame(RAW_ROWS).write.parquet(lake["raw"])
+    bronze_ingest(spark, lake["raw"], lake["bronze"], lake["audit"], "g1")
+    silver_publish(spark, lake["bronze"], lake["silver"], lake["quarantine"], "g2")
+    gold_features(spark, lake["silver"], lake["gold"], AS_OF, "g3")
+    label_snapshot(spark, lake["silver"], lake["labels"], AS_OF, "g4")
+    return lake
+
+
+def test_gold_gated_publish(spark, gated_lake, tmp_path):
+    # gold publishes through one gated MERGE: the report names every
+    # contract gate (grain_unique answered by the MERGE key probe), and
+    # the row count comes from the publish write itself.
+    import json
+    import os
+
     import ecom_churn_lakehouse_spark.pipelines.medallion as med
 
-    gold_obs = str(tmp_path / "gold_obs")
-    g = gold_features(
-        spark, paths["silver"], gold_obs, AS_OF, "run-obs", observed_gates=True
-    )
+    gold = str(tmp_path / "gold")
+    g = gold_features(spark, gated_lake["silver"], gold, AS_OF, "run-g")
     assert g.rows_published == 2
-    keys = ["customer_id", "as_of_date"]
-    classic = ManagedTable(spark, paths["gold"], keys=keys).read().filter(
-        "as_of_date = date'2025-03-31'"
-    )
-    observed = ManagedTable(spark, gold_obs, keys=keys).read()
-    feature_cols = [c for c in observed.columns if not c.startswith("_")]
-    assert sorted(observed.select(*feature_cols).collect()) == sorted(
-        classic.select(*feature_cols).collect()
+    row_gates = [c["name"] for c in med._GOLD_GATES if c["type"] != "unique"]
+    checks = g.metadata["checks"]
+    assert [c["name"] for c in checks] == row_gates + ["grain_unique"]
+    assert g.metadata["row_count"] == 2 and g.metadata["ok"]
+    assert all(c["passed"] and c["bad_rows"] == 0 for c in checks)
+    with open(os.path.join(gold, "_metadata", "run-run-g.json")) as f:
+        meta = json.load(f)
+    assert meta["rows_published"] == 2 and meta["gates"] == g.metadata
+    feats = {
+        r["customer_id"]: r
+        for r in ManagedTable(spark, gold, keys=["customer_id", "as_of_date"])
+        .read()
+        .collect()
+    }
+    assert set(feats) == {"cust_1", "cust_2"}
+    assert feats["cust_1"]["recency_days"] == 21
+    assert feats["cust_1"]["avg_days_between_orders"] == 59.0
+
+
+def _table_state(path):
+    """Everything a failed publish must leave alone: HEAD, the commit
+    log, and the snapshot dirs (no ``.staged-*`` leftovers)."""
+    import os
+
+    with open(os.path.join(path, "_HEAD")) as f:
+        head = f.read()
+    return head, sorted(os.listdir(os.path.join(path, "_commits"))), sorted(
+        d for d in os.listdir(path) if d.startswith((".staged-", "v-"))
     )
 
-    # a failing row-predicate gate aborts before the HEAD swap: the
-    # staged snapshot is abandoned and the table keeps its old contents.
-    monkeypatch.setattr(
-        med,
-        "_GOLD_GATES",
-        [{"name": "impossible", "type": "range", "column": "lifetime_orders",
-          "min": 1000}],
-    )
-    with pytest.raises(DQGateFailure, match="impossible"):
-        med.gold_features(
-            spark, paths["silver"], gold_obs, "2025-04-15", "run-obs2",
-            observed_gates=True,
+
+def _fail_silver(spark, lake, monkeypatch):
+    import ecom_churn_lakehouse_spark.pipelines.medallion as med
+
+    monkeypatch.setattr(med, "_SILVER_DQ_CHECKS", med._SILVER_DQ_CHECKS + [
+        {"name": "impossible", "type": "expr", "predicate": "order_id IS NOT NULL"}])
+    silver_publish(spark, lake["bronze"], lake["silver"], lake["quarantine"], "f1")
+
+
+def _fail_gold(spark, lake, monkeypatch):
+    import ecom_churn_lakehouse_spark.pipelines.medallion as med
+
+    monkeypatch.setattr(med, "_GOLD_GATES", [
+        {"name": "impossible", "type": "range", "column": "lifetime_orders",
+         "min": 1000}])
+    gold_features(spark, lake["silver"], lake["gold"], "2025-04-15", "f2")
+
+
+def _fail_labels(spark, lake, monkeypatch):
+    # the horizon-eligibility gate: as_of + 60 d is past the last order
+    label_snapshot(spark, lake["silver"], lake["labels"], "2025-05-31", "f3")
+
+
+def _fail_gold_incremental(spark, lake, monkeypatch):
+    import ecom_churn_lakehouse_spark.pipelines.incremental as inc
+
+    monkeypatch.setattr(inc, "_GOLD_GATES", [
+        {"name": "impossible", "type": "range", "column": "lifetime_orders",
+         "min": 1000}])
+    inc.incremental_gold_update(
+        spark, lake["silver"], lake["gold"],
+        spark.createDataFrame([("cust_1",)], "customer_id string"), AS_OF, "f4")
+
+
+@pytest.mark.parametrize(
+    "table,fail,match",
+    [
+        ("silver", _fail_silver, "impossible"),
+        ("gold", _fail_gold, "impossible"),
+        ("labels", _fail_labels, "not observable"),
+        ("gold", _fail_gold_incremental, "impossible"),
+    ],
+    ids=["silver", "gold", "labels_horizon", "gold_incremental"],
+)
+def test_failed_gate_leaves_table_untouched(
+    spark, gated_lake, monkeypatch, table, fail, match
+):
+    t = ManagedTable(spark, gated_lake[table], keys=[])
+    rows, state = sorted(t.read().collect(), key=str), _table_state(t.path)
+    with pytest.raises(DQGateFailure, match=match):
+        fail(spark, gated_lake, monkeypatch)
+    assert _table_state(t.path) == state
+    assert sorted(t.read().collect(), key=str) == rows
+
+
+def test_all_invalid_silver_batch_into_existing_table(spark, gated_lake, tmp_path, within):
+    # every row fails preclean, so the gated MERGE observes an empty
+    # upsert frame; the publish must report 0 rows, not wait forever
+    # for an observation that never fires.
+    raw, bronze = str(tmp_path / "raw"), str(tmp_path / "bronze")
+    spark.createDataFrame(
+        [(None, "c", "delivered", "2025-01-01 00:00:00"),
+         ("o9", "c", "delivered", "not-a-date")],
+        "order_id string, customer_id string, order_status string, "
+        "order_purchase_timestamp string",
+    ).write.parquet(raw)
+    bronze_ingest(spark, raw, bronze, str(tmp_path / "audit"), "i1")
+    silver = ManagedTable(spark, gated_lake["silver"], keys=["order_id"])
+    before = sorted(silver.read().collect(), key=str)
+    s = within(lambda: silver_publish(
+        spark, bronze, gated_lake["silver"], str(tmp_path / "q"), "i2"))
+    assert s.rows_published == 0 and s.rows_rejected == 2
+    assert s.metadata["row_count"] == 0 and s.metadata["ok"]
+    assert sorted(silver.read().collect(), key=str) == before
+
+
+@pytest.mark.parametrize("column", ["_feature_version", "_label_horizon_days"])
+def test_training_snapshot_homogeneity_gate(spark, tmp_path, column):
+    import datetime as dt
+
+    keys = ["customer_id", "as_of_date"]
+    day = dt.date(2025, 3, 31)
+    fv = {"_feature_version": ["fv1", "fv2"]}.get(column, ["fv1", "fv1"])
+    hz = {"_label_horizon_days": [60, 90]}.get(column, [60, 60])
+    ManagedTable(spark, str(tmp_path / "gold"), keys=keys).overwrite(
+        spark.createDataFrame(
+            [("c1", day, 3, fv[0]), ("c2", day, 5, fv[1])],
+            "customer_id string, as_of_date date, lifetime_orders int, "
+            "_feature_version string",
         )
-    after = ManagedTable(spark, gold_obs, keys=keys).read()
-    assert after.count() == 2  # 2025-04-15 rows never landed
+    )
+    ManagedTable(spark, str(tmp_path / "labels"), keys=keys).overwrite(
+        spark.createDataFrame(
+            [("c1", day, 1, hz[0]), ("c2", day, 0, hz[1])],
+            "customer_id string, as_of_date date, churn_label int, "
+            "_label_horizon_days int",
+        )
+    )
+    snapshot = str(tmp_path / "snapshot")
+    with pytest.raises(ValueError, match=f"column '{column}' must be homogeneous"):
+        training_snapshot_publish(
+            spark, str(tmp_path / "gold"), str(tmp_path / "labels"), snapshot,
+            AS_OF, "t1",
+        )
+    assert not ManagedTable(spark, snapshot, keys=keys).exists()
 
 
 def test_bronze_partition_pruning(spark, tmp_path):

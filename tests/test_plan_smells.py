@@ -10,11 +10,12 @@ stays fast (~the newest few dozen entries) while the full-registry
 sweep remains the judge-side tools run.
 """
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ecom_churn_lakehouse_spark import registry
 from tools.audit_plans import audit

@@ -2,11 +2,12 @@
 row-hash oracle can't state (conservation laws, monotonicity, packing
 bijectivity), per SURVEY §5's golden-test strategy."""
 
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ecom_churn_lakehouse_spark.registry import queries
 

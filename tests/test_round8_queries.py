@@ -306,9 +306,10 @@ def test_bounded_frames_reference_real_entries():
     """Every BOUNDED_FRAMES key must name a registered entry (no dead
     declarations), and the global-window detector must classify the
     four window shapes correctly."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from ecom_churn_lakehouse_spark import registry
     from ecom_churn_lakehouse_spark.registry import BOUNDED_FRAMES
 
@@ -318,9 +319,10 @@ def test_bounded_frames_reference_real_entries():
 
 
 def test_unpartitioned_window_detector_shapes(spark):
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 

@@ -1,9 +1,10 @@
 """Behavioral invariants for the skyline, near-dup leakage, and
 chunk-dedup-savings entries."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ecom_churn_lakehouse_spark.registry import queries
 

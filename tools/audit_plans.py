@@ -14,9 +14,10 @@ Usage: python tools/audit_plans.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def unpartitioned_windows(plan: str) -> int:

@@ -32,11 +32,12 @@ Usage: python tools/rounding_audit.py [sf_dir] [--md OUT] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from decimal import ROUND_FLOOR, ROUND_HALF_UP, Decimal
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import numpy as np
