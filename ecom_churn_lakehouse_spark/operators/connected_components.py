@@ -1,263 +1,219 @@
-"""Connected components over an edge list — dedup-cluster resolution.
+"""Connected components over an edge list — cluster resolution.
 
-Near-dup detection (MinHash/LSH, SimHash, embedding-LSH) emits *pairs*;
-a curation pipeline needs *clusters* with one survivor each ("keep the
-lowest doc_id of every duplicate group"). That grouping is connected
-components on the pair graph.
+Near-dup detection (MinHash/LSH, SimHash, embedding-LSH), entity
+resolution and DBSCAN core graphs all emit *pairs*; their callers need
+*clusters* ("keep the lowest doc_id of every duplicate group"). That
+grouping is connected components on the pair graph, and
+:func:`connected_components` is the one operator that computes it: every
+node appearing in the edge list is labeled with the minimum node id of
+its component (a node whose only edges are self-loops labels itself).
 
-Algorithm: iterative min-label propagation. Every node starts labeled
-with itself; each round every node takes the min of its own label and
-its neighbors' labels; fixpoint = components labeled by their minimum
-member. Rounds needed = graph diameter — and dup-cluster graphs are
-near-cliques from a verify join (tiny diameter), so this converges in
-2-3 rounds in practice.
+One barrier, then one of two finishes:
 
-REGIME SELECTION (read this before picking an operator): use
-``connected_components`` ONLY for near-clique duplicate graphs
-(LSH/MinHash verify output, where every cluster member saw most
-others). For long-chain or percolation graphs — DBSCAN core graphs,
-kNN graphs, anything where edges come from a *radius* rather than a
-*verified duplicate* relation — use ``connected_components_star``:
-round 11 proved min-propagation O(diameter) there (394 mislabeled
-points at sf0.1 before the loud ``max_iter`` failure existed), and
-pointer jumping does NOT rescue it (measured O(diameter)-in-disguise
-on random-id blobs; see the star operator's docstring, which also
-documents the Spark 4.1 chained-self-join analyzer pathology its
-parquet iteration barrier sidesteps). Both operators now raise at
-``max_iter`` instead of returning a silent partial labeling.
+1. The edge list is written ONCE to a scratch parquet barrier in the
+   canonical orientation ``u >= v``, so the caller's (possibly
+   expensive) pair pipeline executes exactly once. The row count is
+   observed on that write (``df.observe``), not counted by a second job.
+2. **Driver finish.** If ``rows × 16 B`` is at most the session's
+   ``spark.sql.autoBroadcastJoinThreshold`` — the rule Spark itself uses
+   to ship a relation whole — the barrier is read back with one Arrow
+   ``toPandas()``, labeled by union-find on the driver, and returned
+   through ``createDataFrame(pandas, schema)`` (Arrow again, no Python
+   workers). A threshold ``<= 0`` disables it.
+3. **Rounds finish** (edge lists too large for the driver):
+   alternating large-star/small-star contraction (Kiveris et al.,
+   "Connected Components in MapReduce and Beyond", SoCC'14), one
+   parquet barrier per round.
 
-Scale shape per round: one join + one min-aggregate, both hashed on the
-node key, so AQE co-partitions them onto one exchange. Labels are
-``localCheckpoint``-ed each round — iterative plans otherwise grow a
-lineage per iteration and re-execute the whole history every round.
-The per-round convergence probe is a ``limit(1).count()`` scalar —
-control plane, not a data-plane collect.
+Why star contraction and not label propagation: propagation needs
+O(diameter) rounds, and a DBSCAN percolation cluster of k cores has
+diameter ~ sqrt(k) (394 mislabeled points at sf0.1 under a 25-round
+budget). Pointer jumping does not rescue it on random-id blobs (25
+rounds with 1, 3 or 5 jumps alike). Star contraction links only toward
+smaller ids, contracts each component toward a star centered at its
+minimum, and shrinks the edge set every round: 6 rounds on that graph.
+Convergence is exact: equal observed row counts AND an empty
+``exceptAll(prev)``. Reaching ``max_iter`` raises instead of returning a
+partial labeling.
+
+Why a parquet barrier per round and not ``localCheckpoint``: chained
+self-joins of checkpoint-derived frames hit an exponential analyzer
+pathology in Spark 4.1 (~2.7x per round from round ~18). A fresh parquet
+relation resets the attribute lineage. Fusing two rounds per barrier
+measured worse (AQE submits every shuffle stage as its own job, so it
+only doubled the plan each barrier re-optimizes).
+
+Each call emits one ``connected_components`` event (edges, finish,
+rounds, seconds), and every barrier write runs under a job description
+that names it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import time
 
-__all__ = ["connected_components", "connected_components_star"]
+import pandas as pd
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ecom_churn_lakehouse_spark.logging_util import log_event
+from ecom_churn_lakehouse_spark.scratch import scratch_dir
+
+__all__ = ["connected_components"]
+
+#: Bytes per edge in the small-relation rule: two 8-byte ids.
+_EDGE_BYTES = 16
+
+
+def _barrier(df: DataFrame, path: str, name: str) -> tuple[DataFrame, int]:
+    """Write ``df`` to parquet under the job description ``name`` and
+    return it read back with the written schema, plus the row count
+    observed on the write itself."""
+    obs = Observation()
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try:
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(path)
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+    return df.sparkSession.read.schema(df.schema).parquet(path), obs.get["rows"]
+
+
+def _driver_finish(raw: DataFrame) -> DataFrame:
+    """Union-find over the whole (small) edge list on the driver; each
+    root is its component's minimum, so ``find`` is the label."""
+    pdf = raw.toPandas()
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    nodes = list(parent)
+    out = pd.DataFrame(
+        {"node": nodes, "label": [find(x) for x in nodes]}, dtype=pdf["u"].dtype
+    )
+    id_type = raw.schema["u"].dataType
+    return raw.sparkSession.createDataFrame(
+        out, StructType([StructField("node", id_type), StructField("label", id_type)])
+    )
+
+
+def _star_round(edges_in: DataFrame) -> DataFrame:
+    """One large-star + small-star contraction over canonical
+    ``u > v`` edges; returns the contracted canonical edge set."""
+    # large-star over the symmetric view: for each u with
+    # m = min(N(u) ∪ u), every neighbor v > u re-hangs onto m.
+    sym = edges_in.select("u", "v").unionByName(
+        edges_in.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+    mins = (
+        sym.groupBy("u")
+        .agg(F.min("v").alias("mv"))
+        .select("u", F.least("u", "mv").alias("m"))
+    )
+    ls = (
+        sym.join(mins, "u")
+        .filter(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("a"), F.col("m").alias("b"))
+        .filter("a != b")
+        .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
+        .distinct()
+    )
+    # small-star on the canonical orientation: u and its not-larger
+    # neighbors all re-hang onto m = min of them.
+    sm = ls.groupBy("u").agg(F.min("v").alias("m"))
+    return (
+        ls.join(sm, "u")
+        .select(F.col("v").alias("w"), "m")
+        .unionByName(sm.select(F.col("u").alias("w"), "m"))
+        .filter(F.col("w") != F.col("m"))
+        .select(F.greatest("w", "m").alias("u"), F.least("w", "m").alias("v"))
+        .distinct()
+    )
+
+
+def _rounds_finish(raw: DataFrame, base: str, max_iter: int) -> tuple[DataFrame, int]:
+    """Star contraction to a fixpoint; returns the labels and the number
+    of rounds run."""
+    cur, n_cur = _barrier(
+        raw.filter("u != v").distinct(), f"{base}/e", "connected_components: edges"
+    )
+    for i in range(max_iter):
+        nxt, n_nxt = _barrier(
+            _star_round(cur), f"{base}/e{i}", f"connected_components: round {i + 1}"
+        )
+        done = n_nxt == n_cur and nxt.exceptAll(cur).limit(1).count() == 0
+        cur, n_cur = nxt, n_nxt
+        if done:
+            break
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {max_iter} rounds — "
+            "raise max_iter (star contraction needs O(log^2 n) rounds "
+            "worst-case, ~2 log n in practice)"
+        )
+    # The fixpoint is a star forest centered at component minima: every
+    # non-root keeps exactly one (node, center) edge; roots, and nodes
+    # seen only in self-loops, label themselves.
+    lab = cur.select(F.col("u").alias("node"), F.col("v").alias("label"))
+    nodes = (
+        raw.select(F.col("u").alias("node"))
+        .unionByName(raw.select(F.col("v").alias("node")))
+        .distinct()
+    )
+    roots = nodes.join(lab, "node", "left_anti").withColumn("label", F.col("node"))
+    return lab.unionByName(roots), i + 1
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Label every node of the undirected pair graph with the minimum
-    node id of its component. Returns columns ``node``, ``label``.
-
-    Only nodes appearing in ``edges`` are labeled — singletons (docs
-    with no near-dup) are by definition their own survivors and never
-    enter the pair relation.
-    """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # The edge list joins into EVERY round — checkpoint it once or each
-    # iteration replays the (possibly expensive) upstream pair pipeline.
-    sym = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint()
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    for i in range(max_iter):
-        # The previous label rides through the union/aggregate (is_own
-        # marks the node's own row), so convergence is read off the
-        # aggregate itself — no extra compare-join per round.
-        own = labels.select("node", "label", F.lit(True).alias("is_own"))
-        nbr = sym.join(labels, sym["v"] == labels["node"]).select(
-            F.col("u").alias("node"), "label", F.lit(False).alias("is_own")
-        )
-        new = (
-            own.unionByName(nbr)
-            .groupBy("node")
-            .agg(
-                F.min("label").alias("label"),
-                F.min(F.when(F.col("is_own"), F.col("label"))).alias("__old"),
-            )
-            .localCheckpoint()
-        )
-        labels = new.select("node", "label")
-        # Round 1 always changes something when any edge exists — probe
-        # from round 2 on.
-        if i > 0 and (
-            new.filter(F.col("label") != F.col("__old")).limit(1).count() == 0
-        ):
-            return labels
-    # A silent partial labeling is exactly the defect the round-11
-    # oracle caught (394 mislabeled DBSCAN points at a 25-round
-    # budget): fail LOUDLY instead of returning wrong components.
-    # Near-clique dup graphs converge in 2-3 rounds; hitting this
-    # means the caller's graph has long chains and needs
-    # connected_components_star.
-    raise RuntimeError(
-        f"connected_components: no fixpoint after {max_iter} rounds — "
-        "graph diameter exceeds the min-propagation budget; use "
-        "connected_components_star for long-chain graphs"
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_iter: int = 60,
 ) -> DataFrame:
-    """Alternating large-star/small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — for
-    graphs whose components are long chains or percolation blobs,
-    not near-cliques.
+    """Label every node of the undirected graph ``edges`` (columns
+    ``src``, ``dst``) with the minimum node id of its component.
 
-    Why not min-propagation: plain propagation needs O(diameter)
-    rounds — a DBSCAN percolation cluster of k cores has diameter
-    ~ sqrt(k), which blew past the plain operator's round budget at
-    sf0.1 (394 mislabeled points, caught by the oracle in round 11).
-    Why not pointer jumping: the l(v) <- l(l(v)) accelerant is only
-    O(log d) when label-pointer chains align with the direction of
-    the component minimum (sorted-id paths). On REAL percolation
-    blobs with random id placement the chains zig-zag and the jump
-    buys nothing — measured 25 rounds on the sf0.1 DBSCAN core graph
-    with 1, 3, or 5 jumps per round alike (identical labels, rounds
-    unchanged), i.e. O(diameter) in disguise. Star contraction
-    instead rewrites the EDGE SET: large-star hangs every neighbor
-    v > u onto m = min(N(u) ∪ u); small-star (on the u > v canonical
-    orientation) hangs the not-larger neighbors and u itself onto m.
-    Both steps link only toward smaller ids, preserve connectivity,
-    and contract each component toward a star centered at its
-    MINIMUM id — the same graph converged in 6 rounds (vs 25), and
-    the graph SHRINKS as it contracts, so per-round shuffle volume
-    falls instead of staying flat. Convergence is detected exactly:
-    row count equal (free off parquet metadata) AND
-    ``exceptAll(prev)`` empty — never a hash fingerprint.
-
-    Iteration barrier: each round's edge frame round-trips through a
-    scratch PARQUET file, not localCheckpoint. Measured necessity,
-    not style — chained self-joins of checkpoint-derived frames hit
-    an exponential analyzer pathology in Spark 4.1 (~2.7x per round
-    from round ~18, reproduced with a 1000-row frame; local AND
-    reliable checkpoints both affected, fixed-right-side join chains
-    and union/aggregate chains both flat — the trigger is joining a
-    frame to a derivation of itself round after round, which the
-    plain operator never does). A fresh parquet relation resets the
-    attribute lineage completely. On a real cluster this is the
-    standard Pregel-style iteration barrier (HDFS/object-store temp
-    table).
-
-    Returns ``node``, ``label`` for every node appearing in
-    ``edges`` (component minimum as label), like the plain operator.
+    Returns ``node``, ``label`` (the ids' common type) for every node
+    appearing in ``edges``; singletons that never enter the pair
+    relation are their callers' business. ``max_iter`` bounds the
+    contraction rounds of the large-graph finish.
     """
-    from ecom_churn_lakehouse_spark.scratch import scratch_dir
-
+    t0 = time.perf_counter()
     spark = edges.sparkSession
-    base = scratch_dir(prefix="cc_star_")
-    # ONE execution of the (possibly expensive) upstream edge pipeline:
-    # barrier the raw frame to parquet first, then derive both the node
-    # set and the canonical edge set from that relation. The r12
-    # measurement showed the previous shape (eager node-set checkpoint
-    # + separate canonical-edge write) executing the caller's whole
-    # candidate pipeline twice (guide §1.2: don't recompute what you
-    # already have; the write is the same iteration barrier the loop
-    # already relies on).
-    edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).write.mode(
-        "overwrite"
-    ).parquet(f"{base}/raw")
-    raw = spark.read.parquet(f"{base}/raw")
-    # Node set from the UNFILTERED edge frame (r11 ADVICE): a node
-    # whose only edges are self-loops must still appear in the output
-    # (self-labeled via the left-anti roots branch), matching both the
-    # docstring contract and the plain operator.
-    nodes = (
-        raw.select(F.col("a").alias("node"))
-        .unionByName(raw.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint()
+    base = scratch_dir(prefix="cc_")
+    raw, n = _barrier(
+        edges.select(
+            F.greatest(src, dst).alias("u"), F.least(src, dst).alias("v")
+        ),
+        f"{base}/raw",
+        "connected_components: edge list",
     )
-    e0 = raw.filter("a != b")
-    cur = e0.select(
-        F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-    ).distinct()
-    cur.write.mode("overwrite").parquet(f"{base}/e")
-    edge_schema = "u BIGINT, v BIGINT"
-    cur = spark.read.schema(edge_schema).parquet(f"{base}/e")
-    n_cur = cur.count()
-
-    def _one_round(edges_in):
-        # ---- large-star over the symmetric view: for each u with
-        # m = min(N(u) ∪ u), every neighbor v > u re-hangs onto m.
-        sym = edges_in.select("u", "v").unionByName(
-            edges_in.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    # In bytes, as Spark resolves it ("10MB", "64m", "-1", ...).
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    finish = "driver" if 0 < threshold and n * _EDGE_BYTES <= threshold else "rounds"
+    rounds = 0 if finish == "driver" else max_iter  # the budget, if the rounds raise
+    try:
+        if finish == "driver":
+            return _driver_finish(raw)
+        out, rounds = _rounds_finish(raw, base, max_iter)
+        return out
+    finally:
+        log_event(
+            "connected_components",
+            edges=n,
+            finish=finish,
+            rounds=rounds,
+            seconds=round(time.perf_counter() - t0, 3),
         )
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least("u", "mv").alias("m"))
-        )
-        ls = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .filter("a != b")
-            .select(
-                F.greatest("a", "b").alias("u"),
-                F.least("a", "b").alias("v"),
-            )
-            .distinct()
-        )
-        # ---- small-star on the canonical u > v orientation: u and
-        # its not-larger neighbors all re-hang onto m = min of them.
-        sm = ls.groupBy("u").agg(F.min("v").alias("m"))
-        return (
-            ls.join(sm, "u")
-            .select(F.col("v").alias("w"), "m")
-            .unionByName(sm.select(F.col("u").alias("w"), "m"))
-            .filter(F.col("w") != F.col("m"))
-            .select(
-                F.greatest("w", "m").alias("u"),
-                F.least("w", "m").alias("v"),
-            )
-            .distinct()
-        )
-
-    # One contraction round per parquet barrier. (Measured, not
-    # assumed: fusing TWO rounds per barrier was tried in r12 after
-    # the event-log breakdown showed ~60% of dbscan's wall in
-    # inter-job driver gaps — it made things WORSE (112 jobs vs 101,
-    # +20% wall): AQE submits every shuffle stage as its own job, so
-    # fusing does not reduce the job count, it only doubles the plan
-    # each barrier re-optimizes. Each barrier read supplies the edge
-    # schema explicitly so no inference job runs.)
-    for i in range(max_iter):
-        nxt = _one_round(cur)
-        nxt.write.mode("overwrite").parquet(f"{base}/e{i}")
-        nxt = spark.read.schema(edge_schema).parquet(f"{base}/e{i}")
-        n_nxt = nxt.count()  # parquet footer metadata — no scan
-        done = (
-            n_nxt == n_cur
-            and nxt.exceptAll(cur).limit(1).count() == 0
-        )
-        cur, n_cur = nxt, n_nxt
-        if done:
-            break
-    else:
-        # Same loud-failure discipline as the plain operator: a
-        # partial contraction is a wrong labeling, never return it.
-        raise RuntimeError(
-            f"connected_components_star: no fixpoint after {max_iter} "
-            "rounds — raise max_iter (Kiveris contraction needs "
-            "O(log^2 n) rounds worst-case, ~2 log n in practice)"
-        )
-    # Fixpoint is a star forest centered at component minima: every
-    # non-root keeps exactly one (node, center) edge; roots (and any
-    # would-be singletons) label themselves.
-    lab = cur.select(F.col("u").alias("node"), F.col("v").alias("label"))
-    roots = nodes.join(lab, "node", "left_anti").withColumn(
-        "label", F.col("node")
-    )
-    return lab.unionByName(roots)

@@ -4065,8 +4065,8 @@ _ER_SCORE_SQL = " * ".join(
 )
 
 #: edges + recursive transitive closure + per-record entity labels
-#: (oracle-side closure; the engine-side algorithm is the iterative
-#: min-label operator, operators/connected_components.py).
+#: (oracle-side closure; the engine side is the connected-components
+#: operator, operators/connected_components.py).
 _ER_CLUSTER_CTES = f"""{_ER_PAIRS_CTES},
 {_ER_ODDS_CTE},
 edges AS (
@@ -4270,10 +4270,11 @@ def _er_entities(spark, sf_dir):
     doc="Entity-resolution capstone, stage 1 (VERDICT r10 directive "
     "#4): Fellegi-Sunter pair scores thresholded at the match band "
     "and resolved into ENTITIES by connected components "
-    "(operators/connected_components.py — iterative min-label with "
-    "per-round localCheckpoint; the oracle closes the same edge set "
-    "with a recursive CTE). The per-pair score is the product of "
-    "per-field agree/disagree odds CLAMPED to [1, 4000] centi over "
+    "(operators/connected_components.py — driver union-find over a "
+    "broadcast-small edge list, star contraction past it; the oracle "
+    "closes the same edge set with a recursive CTE). The per-pair "
+    "score is the product of per-field agree/disagree odds "
+    "CLAMPED to [1, 4000] centi over "
     "FIVE fields — the weight table's four plus the synthesized "
     "contact identifier (u = 0 exactly, 1-in-7 copy corruption), "
     "without which the match band measured 38% edge precision "
@@ -4286,8 +4287,8 @@ def _er_entities(spark, sf_dir):
     "record gets an entity id (min member id; singletons label "
     "themselves), plus cluster size and the canonical-record flag. "
     "Scale: candidate pairs stay inside <=100-row name-prefix "
-    "blocks; component diameter is bounded by block size, so the "
-    "min-label loop converges in 2-3 rounds; the union-find pytest "
+    "blocks, so the match-band edge list stays small; the "
+    "union-find pytest "
     "(tests/test_er_capstone.py) recomputes the labeling exactly.",
 )
 def q_er_entity_clusters(spark, sf_dir):

@@ -1321,8 +1321,9 @@ def _density_clusters_sql() -> str:
     "banded sign-LSH already produces (embedding_neardup_pairs), core "
     f"points have >= {_DBSCAN_MIN_PTS} neighbors, clusters are "
     "connected components over CORE-CORE edges "
-    "(connected_components_star — the percolation-regime operator, "
-    "r11 ADVICE; the oracle walks a recursive transitive closure), "
+    "(operators/connected_components.py — star contraction, or "
+    "union-find on the driver when the edge list is broadcast-small; "
+    "the oracle walks a recursive transitive closure), "
     "and border points "
     "attach to the MIN cluster id among their core neighbors "
     "(deterministic). Density clustering beyond kmeans_two_rounds' "
@@ -1331,9 +1332,6 @@ def _density_clusters_sql() -> str:
     "inherits the near-dup pipeline's 100 TB posture.",
 )
 def q_embedding_density_clusters(spark, sf_dir):
-    from ecom_churn_lakehouse_spark.operators.connected_components import (
-        connected_components_star,
-    )
     from ecom_churn_lakehouse_spark.similarity.ann import (
         banded_sign_buckets,
         neardup_pairs,
@@ -1361,12 +1359,9 @@ def q_embedding_density_clusters(spark, sf_dir):
     cc_edges = adj.join(core, on="u").join(
         core.select(F.col("u").alias("v")), on="v"
     )
-    # r11 ADVICE: this is a min-pts density CORE graph — the same
-    # percolation regime that mislabeled 394 DBSCAN points under plain
-    # min-propagation — so it takes the star-contraction operator, not
-    # the near-clique one (see the regime-selection note in
-    # operators/connected_components.py).
-    core_lab = connected_components_star(
+    # A min-pts density CORE graph: long percolation chains, which the
+    # operator's star contraction (or driver union-find) labels exactly.
+    core_lab = connected_components(
         cc_edges.select(F.col("u").alias("doc_a"), F.col("v").alias("doc_b")),
         src="doc_a",
         dst="doc_b",

@@ -2,7 +2,7 @@
 
 PageRank as a pure DataFrame loop — the iterative-algorithm pattern
 (driver-side loop, per-iteration ``localCheckpoint`` to truncate
-lineage) that complements ``operators/connected_components.py``.
+lineage); connectivity is ``operators/connected_components.py``.
 
 Determinism design: all PageRank arithmetic runs in FIXED-POINT
 INTEGERS (scale 1e12) with explicit floor division (``div`` / ``//``)
@@ -245,8 +245,8 @@ ORDER BY min_hops, partkey
     "~5x; the DuckDB oracle keeps the single-statement form, whose "
     "CTEs materialize by default): min hop "
     "count to every part within 3 hops of the seed. Complements the "
-    "DataFrame-loop iteration pattern (copurchase_pagerank, "
-    "connected_components) with the declarative recursion the SQL "
+    "DataFrame-loop iteration pattern (copurchase_pagerank) with "
+    "the declarative recursion the SQL "
     "front door must also parse. Scale posture: depth-bounded path "
     "enumeration on a PER-NODE top-k edge cut (kNN-graph "
     "construction, r10 revision): out-degree <= k at any SF, so the "
@@ -255,7 +255,7 @@ ORDER BY min_hops, partkey
     "the mean-relative cut collapsed to 12 rows at sf0.1 as TPC-H "
     "co-occurrence counts dilute toward 1 (COLLAPSED vacuousness "
     "flag); unbounded reachability at 100 TB belongs to the "
-    "checkpointed-loop operator "
+    "connected-components operator "
     "(operators/connected_components.py), not recursion-by-paths.",
 )
 def q_copurchase_reachability(spark, sf_dir):

@@ -1420,7 +1420,7 @@ def _spark_semdedup_manifest(spark, sf_dir):
 
 def _manifest_from_medges(medges):
     """Cluster + keeper election over a mutual-edge frame
-    (u, v, sim_micro): bounded min-label connected components,
+    (u, v, sim_micro): connected components,
     exact-integer centrality, one window election per cluster. Shared
     batch/stream finish (see _mutual_edges_from_scored)."""
     from ecom_churn_lakehouse_spark.operators.connected_components import (
@@ -1458,8 +1458,8 @@ def _manifest_from_medges(medges):
     _SEMDEDUP_MANIFEST_SQL,
     doc="SemDeDup keep-policy capstone (VERDICT r7 directive #2, "
     "completing mutual_knn_graph): clusters are connected components "
-    "over the MUTUAL-kNN edges (operators/connected_components.py "
-    "bounded min-label loop; the oracle walks a recursive transitive "
+    "over the MUTUAL-kNN edges (operators/connected_components.py; "
+    "the oracle walks a recursive transitive "
     "closure), each member is ranked by a deterministic centrality — "
     "the SUM of its incident mutual-edge cosines floor-quantized to "
     "micro BEFORE summing, so the rank key is an exact integer — and "

@@ -3189,7 +3189,7 @@ def _dbscan_pipeline(spark, pts, eps, minpts):
     assignment depends on visit order; ours is a pure function of
     the point set)."""
     from ecom_churn_lakehouse_spark.operators.connected_components import (
-        connected_components_star,
+        connected_components,
     )
 
     offsets = spark.createDataFrame(
@@ -3233,11 +3233,8 @@ def _dbscan_pipeline(spark, pts, eps, minpts):
         core.select(F.col("vec_id").alias("pa")), on="pa"
     ).join(core.select(F.col("vec_id").alias("pb")), on="pb")
     # percolation clusters are LONG CHAINS (diameter ~ sqrt(k)), not
-    # near-cliques: plain min-propagation mislabeled 394 points at
-    # sf0.1, and pointer jumping measured O(diameter) in disguise on
-    # random-id blobs (25 rounds; jumps never helped) — star
-    # contraction converges in 6 and shrinks the graph as it goes
-    lab = connected_components_star(ce, src="pa", dst="pb")
+    # near-cliques — see the operator's note on star contraction
+    lab = connected_components(ce, src="pa", dst="pb")
     corelab = (
         core.join(
             lab.withColumnRenamed("node", "vec_id"), on="vec_id", how="left"
@@ -3295,8 +3292,9 @@ def _dbscan_pipeline(spark, pts, eps, minpts):
     "grid spatial join has NO false negatives inside eps, so "
     "neighbor counts, the core set (>= 5 eps-neighbors, self "
     "excluded), core-core connectivity (Kiveris large-star/"
-    "small-star edge contraction, operators/connected_components.py"
-    "::connected_components_star — 6 rounds where min-propagation "
+    "small-star edge contraction, or union-find on the driver when "
+    "the edge list is broadcast-small, operators/connected_components.py"
+    " — 6 rounds where label propagation "
     "needed ~diameter and a pointer-jump spelling measured "
     "O(diameter) in disguise on random-id percolation blobs, "
     "25 rounds with 1/3/5 jumps alike; recursive-CTE closure on "

@@ -389,6 +389,8 @@ ORDER BY vec_a, vec_b
 def q_semantic_dedup_pairs(spark, sf_dir):
     from ecom_churn_lakehouse_spark.functions.vectors import (
         cosine_fixed,
+        dot_fixed,
+        l2_norm_fixed,
         to_double_array,
     )
     from ecom_churn_lakehouse_spark.similarity.ann import banded_sign_buckets
@@ -426,16 +428,22 @@ def q_semantic_dedup_pairs(spark, sf_dir):
         planes,
         _SEMDEDUP_ROWS_PER_BAND,
     )
-    meta = assigned.select("vec_id", "cluster_id", "ev")
+    # Norms once per row: the pair cosine below is one dot over the two
+    # norms, the same IEEE operations in the same order as cosine_fixed.
+    meta = assigned.select(
+        "vec_id", "cluster_id", "ev", l2_norm_fixed("ev", 64).alias("n")
+    )
     a = banded.alias("ba").join(meta.alias("ma"), on="vec_id").select(
         F.col("vec_id").alias("vec_a"), "band", "bucket",
         F.col("cluster_id").alias("__ca"), F.col("ev").alias("__va"),
+        F.col("n").alias("__na"),
     )
     b = banded.alias("bb").join(meta.alias("mb"), on="vec_id").select(
         F.col("vec_id").alias("vec_b"), "band", "bucket",
         F.col("cluster_id").alias("__cb"), F.col("ev").alias("__vb"),
+        F.col("n").alias("__nb"),
     )
-    pair_cos = cosine_fixed("__va", "__vb", 64)
+    pair_cos = dot_fixed("__va", "__vb", 64) / (F.col("__na") * F.col("__nb"))
     cand = (
         a.join(b, on=["band", "bucket"])
         .filter(
@@ -443,7 +451,7 @@ def q_semantic_dedup_pairs(spark, sf_dir):
             & (F.col("__ca") == F.col("__cb"))
         )
         .select("vec_a", "vec_b", F.col("__ca").alias("cluster_id"),
-                "__va", "__vb")
+                "__va", "__vb", "__na", "__nb")
         .dropDuplicates(["vec_a", "vec_b"])
     )
     return (

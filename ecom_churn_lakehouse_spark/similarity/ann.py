@@ -27,6 +27,8 @@ from pyspark.sql.window import Window
 from ecom_churn_lakehouse_spark.functions.vectors import (
     cosine_fixed,
     cosine_similarity,
+    dot_fixed,
+    l2_norm_fixed,
     to_double_array,
 )
 
@@ -236,14 +238,24 @@ def neardup_pairs(
     emb = vectors.select(
         F.col(id_col), to_double_array(F.col(vec_col)).alias("__v")
     )
-    scored = cand.join(
-        emb.select(F.col(id_col).alias("doc_a"), F.col("__v").alias("__va")),
-        on="doc_a",
-    ).join(
-        emb.select(F.col(id_col).alias("doc_b"), F.col("__v").alias("__vb")),
-        on="doc_b",
+    if dim is not None:
+        # Norms once per row, not once per candidate pair: the same IEEE
+        # operations in the same order as cosine_fixed (bit-identical),
+        # and the pair stage stays under the 64 KB codegen method limit.
+        emb = emb.withColumn("__n", l2_norm_fixed("__v", dim))
+
+    def side(s):
+        return emb.select(
+            F.col(id_col).alias(f"doc_{s}"),
+            *(F.col(c).alias(f"{c}{s}") for c in emb.columns[1:]),
+        )
+
+    scored = cand.join(side("a"), on="doc_a").join(side("b"), on="doc_b")
+    sim = (
+        cosine_similarity(F.col("__va"), F.col("__vb"))
+        if dim is None
+        else dot_fixed("__va", "__vb", dim) / (F.col("__na") * F.col("__nb"))
     )
-    sim = _cos("__va", "__vb", dim)
     return (
         scored.select(
             "doc_a", "doc_b", F.round(sim, 6).alias("cosine_sim")

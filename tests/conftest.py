@@ -1,5 +1,7 @@
+import json
 import sys
 import threading
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -46,3 +48,32 @@ def within():
         return out["value"]
 
     return run
+
+
+@pytest.fixture
+def cc_finish(spark, capsys):
+    """``with cc_finish("driver"|"rounds"):`` runs the block with the
+    connected-components operator on one finish: ``driver`` under the
+    session's broadcast threshold, ``rounds`` with
+    ``spark.sql.autoBroadcastJoinThreshold=-1``; the threshold is
+    restored on exit. Asserts every ``connected_components`` event the
+    block logged names that finish."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    @contextmanager
+    def pin(finish):
+        prev = spark.conf.get(key)
+        if finish == "rounds":
+            spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, prev)
+        events = [
+            json.loads(line)
+            for line in capsys.readouterr().err.splitlines()
+            if line.startswith('{"event": "connected_components"')
+        ]
+        assert events and {e["finish"] for e in events} == {finish}, events
+
+    return pin

@@ -1,7 +1,7 @@
 """DBSCAN hand-checks (VERDICT r10 directive #6): planted clusters,
-a pure-Python recompute of the full labeling, and the star-contraction
-connected-components regressions (long chains, shuffled-id paths,
-random graphs vs union-find)."""
+a pure-Python recompute of the full labeling, and the
+connected-components regressions on both finishes (long chains,
+shuffled-id paths, random graphs vs union-find)."""
 
 from pyspark.sql import functions as F
 
@@ -116,33 +116,35 @@ def test_python_recompute_matches_fixture_exactly(spark):
     assert "core" in roles and "noise" in roles  # non-vacuous fixture
 
 
-def test_star_cc_handles_long_chains(spark):
+def test_star_cc_handles_long_chains(spark, cc_finish):
     """Regression for the r11 defect: a path graph whose diameter
-    exceeds the plain operator's O(diameter) round budget must still
-    label every node with the component minimum."""
+    exceeds an O(diameter) round budget must still label every node
+    with the component minimum, on both finishes."""
     from ecom_churn_lakehouse_spark.operators.connected_components import (
-        connected_components_star,
+        connected_components,
     )
 
     edges = [(i, i + 1) for i in range(199)] + [(500, 501), (501, 502)]
     df = spark.createDataFrame(edges, "src LONG, dst LONG")
-    lab = {
-        r["node"]: r["label"]
-        for r in connected_components_star(df).collect()
-    }
-    assert all(lab[i] == 0 for i in range(200))
-    assert all(lab[i] == 500 for i in (500, 501, 502))
+    for finish in ("driver", "rounds"):
+        with cc_finish(finish):
+            lab = {
+                r["node"]: r["label"]
+                for r in connected_components(df).collect()
+            }
+        assert all(lab[i] == 0 for i in range(200)), finish
+        assert all(lab[i] == 500 for i in (500, 501, 502)), finish
 
 
-def test_star_cc_shuffled_ids_and_random_graph(spark):
-    """Star contraction is id-placement-independent (the property the
+def test_star_cc_shuffled_ids_and_random_graph(spark, cc_finish):
+    """Both finishes are id-placement-independent (the property the
     pointer-jump accelerant silently lacked: it measured O(diameter)
     on random-id blobs): a 300-node path with SHUFFLED ids and a
     random 600-edge graph must both match a pure-Python union-find."""
     import random
 
     from ecom_churn_lakehouse_spark.operators.connected_components import (
-        connected_components_star,
+        connected_components,
     )
 
     def py_cc(pairs):
@@ -170,8 +172,10 @@ def test_star_cc_shuffled_ids_and_random_graph(spark):
     rnd = [(a, b) for a, b in rnd if a != b]
     for pairs in (path, rnd):
         df = spark.createDataFrame(pairs, "src LONG, dst LONG")
-        got = {
-            r["node"]: r["label"]
-            for r in connected_components_star(df).collect()
-        }
-        assert got == py_cc(pairs)
+        for finish in ("driver", "rounds"):
+            with cc_finish(finish):
+                got = {
+                    r["node"]: r["label"]
+                    for r in connected_components(df).collect()
+                }
+            assert got == py_cc(pairs), finish

@@ -134,9 +134,19 @@ def test_topk_per_group(spark):
 
 
 # ---------------------------------------------------- connected components
+#
+# Every test runs the operator on both finishes: ``driver`` (union-find
+# over a broadcast-small edge list) and ``rounds`` (star contraction,
+# reached by disabling the broadcast threshold).
+
+FINISHES = ("driver", "rounds")
 
 
-def test_connected_components_chain_and_islands(spark):
+def _labels(df):
+    return {r["node"]: r["label"] for r in df.collect()}
+
+
+def test_connected_components_chain_and_islands(spark, cc_finish):
     from ecom_churn_lakehouse_spark.operators.connected_components import (
         connected_components,
     )
@@ -146,52 +156,88 @@ def test_connected_components_chain_and_islands(spark):
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12), (20, 21)],
         ["src", "dst"],
     )
-    out = {
-        r["node"]: r["label"] for r in connected_components(edges).collect()
-    }
-    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
-                   10: 10, 11: 10, 12: 10,
-                   20: 20, 21: 20}
+    for finish in FINISHES:
+        with cc_finish(finish):
+            out = _labels(connected_components(edges))
+        assert out == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
+                       10: 10, 11: 10, 12: 10,
+                       20: 20, 21: 20}, finish
 
 
-def test_connected_components_raises_on_budget_not_wrong_labels(spark):
-    """A diameter beyond the min-propagation budget must FAIL LOUDLY,
-    never return a silent partial labeling (the round-11 DBSCAN
-    defect shape: 394 mislabeled points caught only by the oracle).
-    The star operator labels the same graph correctly."""
+def test_connected_components_raises_on_budget_not_wrong_labels(spark, cc_finish):
+    """Rounds that run out of budget must FAIL LOUDLY, never return a
+    silent partial labeling (the round-11 DBSCAN defect shape: 394
+    mislabeled points caught only by the oracle). With the default
+    budget both finishes label the same path correctly."""
     import pytest
 
     from ecom_churn_lakehouse_spark.operators.connected_components import (
         connected_components,
-        connected_components_star,
     )
 
-    # 40-node path: diameter 39 > max_iter=5 rounds of propagation
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(39)], "src LONG, dst LONG"
     )
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(edges, max_iter=5).collect()
-    lab = {
-        r["node"]: r["label"]
-        for r in connected_components_star(edges).collect()
-    }
-    assert lab == {i: 0 for i in range(40)}
+    with cc_finish("rounds"):
+        with pytest.raises(RuntimeError, match="no fixpoint"):
+            connected_components(edges, max_iter=1)
+    for finish in FINISHES:
+        with cc_finish(finish):
+            lab = _labels(connected_components(edges))
+        assert lab == {i: 0 for i in range(40)}, finish
 
 
-def test_connected_components_star_self_loop_only_nodes(spark):
-    """r11 ADVICE: a node appearing ONLY in self-loop edges must still
-    be labeled (with itself), matching the docstring contract ('every
-    node appearing in edges') and the plain operator's behavior."""
+def test_connected_components_self_loop_only_nodes(spark, cc_finish):
+    """A node appearing ONLY in self-loop edges must still be labeled
+    (with itself): the contract is 'every node appearing in edges'."""
     from ecom_churn_lakehouse_spark.operators.connected_components import (
-        connected_components_star,
+        connected_components,
     )
 
     edges = spark.createDataFrame(
         [(1, 2), (7, 7), (2, 2)], "src LONG, dst LONG"
     )
-    lab = {
-        r["node"]: r["label"]
-        for r in connected_components_star(edges).collect()
-    }
-    assert lab == {1: 1, 2: 1, 7: 7}
+    for finish in FINISHES:
+        with cc_finish(finish):
+            lab = _labels(connected_components(edges))
+        assert lab == {1: 1, 2: 1, 7: 7}, finish
+
+
+def test_connected_components_empty_edge_list(spark, cc_finish, within):
+    """An empty edge list returns an empty labeling on both finishes;
+    the row count observed on the empty barrier write must not block."""
+    from ecom_churn_lakehouse_spark.operators.connected_components import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame([], "src LONG, dst LONG")
+    for finish in FINISHES:
+        with cc_finish(finish):
+            out = within(lambda: connected_components(edges).collect(), 120)
+        assert out == [], finish
+
+
+def test_connected_components_int_ids_same_schema_both_finishes(spark, cc_finish):
+    """INT ids stay INT, and both finishes return the same schema and
+    rows; the caller's job description is restored."""
+    from ecom_churn_lakehouse_spark.operators.connected_components import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame(
+        [(5, 3), (3, 9), (9, 9), (40, 41)], "src INT, dst INT"
+    )
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        got = {}
+        for finish in FINISHES:
+            with cc_finish(finish):
+                df = connected_components(edges)
+                got[finish] = (df.schema, sorted(map(tuple, df.collect())))
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    assert got["driver"] == got["rounds"]
+    assert got["driver"][0].simpleString() == "struct<node:int,label:int>"
+    assert got["driver"][1] == [(3, 3), (5, 3), (9, 3), (40, 40), (41, 40)]
