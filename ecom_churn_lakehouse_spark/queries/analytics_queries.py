@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 
 from ecom_churn_lakehouse_spark.registry import register
 from ecom_churn_lakehouse_spark.sources import load_events, load_table
+from ecom_churn_lakehouse_spark.streaming.replay import ranges, replay, write_once
 
 
 def _dsum(col, scale=2):
@@ -2220,27 +2221,22 @@ def q_stream_page_hinkley_maintenance(spark, sf_dir):
     ).collect()[0]
     lo, hi = b["lo"], b["hi"]
     span = (hi - lo) / 3
-    cuts = [lo + span, lo + 2 * span]
-    chunks = [
-        orders.filter(F.col("o_orderdate") < cuts[0]),
-        orders.filter(
-            (F.col("o_orderdate") >= cuts[0]) & (F.col("o_orderdate") < cuts[1])
-        ),
-        orders.filter(F.col("o_orderdate") >= cuts[1]),
-    ]
-    for chunk in chunks:
-        chunk.coalesce(1).write.mode("append").parquet(f"{base}/src")
 
     def _apply(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        traj_dest = f"{base}/traj/batch_id={batch_id}"
-        state_dest = f"{base}/state/batch_id={batch_id}"
-        if os.path.exists(traj_dest) and os.path.exists(state_dest):
-            return
-        prev_dir = f"{base}/state/batch_id={batch_id - 1}"
-        if batch_id > 0 and os.path.exists(prev_dir):
-            st = spark.read.parquet(prev_dir).collect()[0]
+        # resume from the newest earlier batch's state (an empty batch
+        # writes none, so it need not be batch_id - 1)
+        state = f"{base}/state"
+        prior = (
+            spark.read.parquet(state)
+            .filter(F.col("batch_id") < batch_id)
+            .orderBy(F.desc("batch_id"))
+            .limit(1)
+            .collect()
+            if os.path.isdir(state)
+            else []
+        )
+        if prior:
+            st = prior[0]
             t0, s0, m0, min0 = (
                 st["t"], st["s_run"], st["m_micro"], st["m_min_micro"]
             )
@@ -2278,24 +2274,15 @@ def q_stream_page_hinkley_maintenance(spark, sf_dir):
                 else batch_min
             ).alias("m_min_micro"),
         )
-        traj.write.mode("overwrite").parquet(traj_dest)
+        write_once(traj, f"{base}/traj/batch_id={batch_id}")
         last = traj.orderBy(F.col("d").desc()).limit(1).select(
             "t", "s_run", "m_micro", "m_min_micro"
         )
-        last.write.mode("overwrite").parquet(state_dest)
+        write_once(last, f"{state}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
+    replay(
+        orders, ranges("o_orderdate", lo + span, lo + 2 * span), _apply, base
     )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     traj = spark.read.parquet(f"{base}/traj")
     alarm = F.col("m_micro") - F.col("m_min_micro") > _PH_LAMBDA_KD_MICRO
@@ -2737,8 +2724,8 @@ def q_cuped_variance_reduction(spark, sf_dir):
     "and x^2 of a partial year is not a partial of x^2 — so each "
     "foreachBatch writes batch_id-keyed partials at the CUSTOMER "
     "grain (cust, x_partial, y_partial; the keyed-state class of the "
-    "streaming taxonomy), skipped if already present for replay "
-    "safety. The served view merges partials to the customer grain "
+    "streaming taxonomy) through the _SUCCESS-gated write_once for "
+    "replay safety. The served view merges partials to the customer grain "
     "FIRST, then computes arms/theta/rho^2 exactly as the batch "
     "entry; the oracle is the batch SQL verbatim, so convergence "
     "must be bit-exact regardless of batch boundaries. Scale: "
@@ -2747,8 +2734,6 @@ def q_cuped_variance_reduction(spark, sf_dir):
     "read.",
 )
 def q_stream_cuped_maintenance(spark, sf_dir):
-    import os
-
     from ecom_churn_lakehouse_spark.operators.sampling import hash_bucket
     from ecom_churn_lakehouse_spark.scratch import scratch_dir
 
@@ -2774,37 +2759,14 @@ def q_stream_cuped_maintenance(spark, sf_dir):
         )
 
     base = scratch_dir(prefix="stream_cuped_")
-    for lo, hi in (
-        (None, "1996-07-01"),
-        ("1996-07-01", "1997-07-01"),
-        ("1997-07-01", None),
-    ):
-        chunk = orders
-        if lo:
-            chunk = chunk.filter(F.col("o_orderdate") >= lo)
-        if hi:
-            chunk = chunk.filter(F.col("o_orderdate") < hi)
-        chunk.coalesce(1).write.mode("append").parquet(f"{base}/src")
-
-    def _apply(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        dest = f"{base}/partials/batch_id={batch_id}"
-        if not os.path.exists(dest):
-            customer_partial(batch_df).write.mode("overwrite").parquet(dest)
-
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
+    replay(
+        orders,
+        ranges("o_orderdate", "1996-07-01", "1997-07-01"),
+        lambda bdf, bid: write_once(
+            customer_partial(bdf), f"{base}/partials/batch_id={bid}"
+        ),
+        base,
     )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     yearly = (
         spark.read.parquet(f"{base}/partials")
         .drop("batch_id")
@@ -4393,20 +4355,10 @@ def _er_stream_apply_batch(spark, base, batch_df, batch_id):
     later-arriving member of each pair discovers it exactly once
     (new-old and new-new, never old-old; the stream_semdedup pattern
     with name-prefix blocks instead of LSH buckets). Every write is a
-    batch_id-keyed partial whose replay skip is gated on the _SUCCESS
-    marker Spark commits last, so a crash mid-write is repaired by the
-    redelivered batch instead of silently dropped (the r10 ADVICE
-    ANN-replay discipline)."""
-    import os
-
-    if batch_df.isEmpty():
-        return
-    recs_dest = f"{base}/recs/batch_id={batch_id}"
-    edges_dest = f"{base}/edges/batch_id={batch_id}"
-    if not os.path.exists(os.path.join(recs_dest, "_SUCCESS")):
-        batch_df.write.mode("overwrite").parquet(recs_dest)
-    if os.path.exists(os.path.join(edges_dest, "_SUCCESS")):
-        return
+    batch_id-keyed partial through ``write_once``, so a crash
+    mid-write is repaired by the redelivered batch instead of silently
+    dropped."""
+    write_once(batch_df, f"{base}/recs/batch_id={batch_id}")
     odds = spark.read.parquet(f"{base}/odds")
     blk = F.substring("c_name", 1, 16)
     new = batch_df.withColumn("blk", blk)
@@ -4432,7 +4384,7 @@ def _er_stream_apply_batch(spark, base, batch_df, batch_id):
         .filter(F.expr(_ER_SCORE_SQL) >= F.lit(_ER_T_HI))
         .select("ca", "cb")
     )
-    edges.write.mode("overwrite").parquet(edges_dest)
+    write_once(edges, f"{base}/edges/batch_id={batch_id}")
 
 
 def _er_serve_golden(spark, base):
@@ -4491,24 +4443,12 @@ def q_stream_er_maintenance(spark, sf_dir):
     _er_odds_frame(pairs).write.mode("overwrite").parquet(f"{base}/odds")
     # three arrival waves; originals and their copies land in
     # different waves (see doc)
-    for m in (0, 1, 2):
-        aug.filter(F.col("c_custkey") % 3 == m).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{base}/src")
-    stream = (
-        spark.readStream.schema(aug.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
+    replay(
+        aug,
+        [F.col("c_custkey") % 3 == m for m in (0, 1, 2)],
+        lambda bdf, bid: _er_stream_apply_batch(spark, base, bdf, bid),
+        base,
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: _er_stream_apply_batch(spark, base, bdf, bid)
-        )
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return _er_serve_golden(spark, base)
 
 

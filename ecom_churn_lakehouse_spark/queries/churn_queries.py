@@ -15,6 +15,7 @@ from ecom_churn_lakehouse_spark.plans.churn import (
 )
 from ecom_churn_lakehouse_spark.registry import AS_OF, HORIZON_DAYS, register
 from ecom_churn_lakehouse_spark.sources import normalized_orders
+from ecom_churn_lakehouse_spark.streaming.replay import ranges, replay, write_once
 
 # Shared SQL CTE: the normalized orders frame (sources/tables.py).
 _BASE = f"""
@@ -1579,8 +1580,8 @@ def _survival_two_smallest(df):
     "(any batch date below the overall second must equal the overall "
     "first, so the overall pair is contained in the union of "
     "per-batch pairs; proof in the module comment). Each foreachBatch "
-    "writes batch_id-keyed <=2-rows-per-customer partials (skipped "
-    "when present — replay-safe); the serve pass re-ranks the union "
+    "writes batch_id-keyed <=2-rows-per-customer partials (through "
+    "the _SUCCESS-gated write_once — replay-safe); the serve pass re-ranks the union "
     "and runs the SAME Nelson-Aalen finish as the batch entry "
     "(_na_curve_from_spans), oracle = the batch SQL verbatim. "
     "Scale: per-batch state is bounded at 2 rows per active "
@@ -1589,8 +1590,6 @@ def _survival_two_smallest(df):
     bounded_frame="calendar-bounded distinct-duration grain (<= dataset day span)",
 )
 def q_stream_survival_spans_maintenance(spark, sf_dir):
-    import os
-
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -1602,39 +1601,14 @@ def q_stream_survival_spans_maintenance(spark, sf_dir):
         F.to_date("o_orderdate").alias("od"),
     )
     base = scratch_dir(prefix="stream_survival_")
-    for lo, hi in (
-        (None, "1996-01-01"),
-        ("1996-01-01", "1998-01-01"),
-        ("1998-01-01", None),
-    ):
-        chunk = orders
-        if lo:
-            chunk = chunk.filter(F.col("od") >= lo)
-        if hi:
-            chunk = chunk.filter(F.col("od") < hi)
-        chunk.coalesce(1).write.mode("append").parquet(f"{base}/src")
-
-    def _apply(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        dest = f"{base}/partials/batch_id={batch_id}"
-        if not os.path.exists(dest):
-            _survival_two_smallest(batch_df).write.mode(
-                "overwrite"
-            ).parquet(dest)
-
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
+    replay(
+        orders,
+        ranges("od", "1996-01-01", "1998-01-01"),
+        lambda bdf, bid: write_once(
+            _survival_two_smallest(bdf), f"{base}/partials/batch_id={bid}"
+        ),
+        base,
     )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     merged = _survival_two_smallest(
         spark.read.parquet(f"{base}/partials").select("cust", "od")

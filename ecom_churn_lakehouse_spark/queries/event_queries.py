@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 from ecom_churn_lakehouse_spark.operators import asof_join, interval_join, sessionize
 from ecom_churn_lakehouse_spark.registry import register
 from ecom_churn_lakehouse_spark.sources.tables import load_events
+from ecom_churn_lakehouse_spark.streaming.replay import ranges, replay, write_once
 
 # --- as-of join: purchase → latest prior click per user ---
 
@@ -1630,22 +1631,8 @@ def q_stream_transition_maintenance(spark, sf_dir):
     b = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
     lo, hi = b["lo"], b["hi"]
     span = (hi - lo) / 3
-    cuts = [lo + span, lo + 2 * span]
-    chunks = [
-        ev.filter(F.col("ts") < cuts[0]),
-        ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
-        ev.filter(F.col("ts") >= cuts[1]),
-    ]
-    for chunk in chunks:
-        chunk.coalesce(1).write.mode("append").parquet(f"{base}/src")
 
     def _apply(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        pair_dest = f"{base}/pairs/batch_id={batch_id}"
-        state_dest = f"{base}/state/batch_id={batch_id}"
-        if os.path.exists(pair_dest) and os.path.exists(state_dest):
-            return
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         seq = batch_df.select(
             "user_id",
@@ -1659,9 +1646,14 @@ def q_stream_transition_maintenance(spark, sf_dir):
             F.col("prev_type").alias("from_type"),
             F.col("event_type").alias("to_type"),
         )
-        prev_state_dir = f"{base}/state/batch_id={batch_id - 1}"
-        if batch_id > 0 and os.path.exists(prev_state_dir):
-            prev_state = spark.read.parquet(prev_state_dir)
+        # the newest earlier batch's state (an empty batch writes none,
+        # so it need not be batch_id - 1)
+        state = f"{base}/state"
+        if os.path.isdir(state):
+            prior = spark.read.parquet(state).filter(F.col("batch_id") < batch_id)
+            prev_state = prior.join(
+                prior.agg(F.max("batch_id").alias("batch_id")), "batch_id"
+            ).drop("batch_id")
             firsts = seq.filter(F.col("rn") == 1).select(
                 F.col("user_id").alias("fu"), F.col("event_type").alias("to_type")
             )
@@ -1673,9 +1665,12 @@ def q_stream_transition_maintenance(spark, sf_dir):
         else:
             pairs = intra
             carried = None
-        pairs.groupBy("from_type", "to_type").agg(
-            F.count("*").cast("long").alias("transitions")
-        ).write.mode("overwrite").parquet(pair_dest)
+        write_once(
+            pairs.groupBy("from_type", "to_type").agg(
+                F.count("*").cast("long").alias("transitions")
+            ),
+            f"{base}/pairs/batch_id={batch_id}",
+        )
         last = batch_df.groupBy("user_id").agg(
             F.max(F.struct("ts", "event_id", "event_type")).alias("s")
         ).select("user_id", F.col("s.event_type").alias("last_type"))
@@ -1686,20 +1681,9 @@ def q_stream_transition_maintenance(spark, sf_dir):
                 "left_anti",
             )
             last = last.unionByName(anti)
-        last.write.mode("overwrite").parquet(state_dest)
+        write_once(last, f"{state}/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
-    )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    replay(ev, ranges("ts", lo + span, lo + 2 * span), _apply, base)
 
     return (
         spark.read.parquet(f"{base}/pairs")

@@ -58,6 +58,7 @@ from ecom_churn_lakehouse_spark.operators.sampling import (
 )
 from ecom_churn_lakehouse_spark.registry import register
 from ecom_churn_lakehouse_spark.sources import load_table
+from ecom_churn_lakehouse_spark.streaming.replay import ranges, replay, write_once
 
 # --------------------------------------------------------------------------
 # Shared sign-binarization spelling: 64 sign bits -> two 32-bit words,
@@ -830,16 +831,16 @@ FROM ranked WHERE k IN ({", ".join(str(k) for k in _KMV_KS)})
     "sketch (the k smallest hashes of a union are the k smallest of "
     "the per-batch k-minima), so the distinct-count estimate is "
     "maintainable from micro-batches with O(k) state per batch and "
-    "no reprocessing. Three order chunks stream through foreachBatch "
-    "(idempotent per-batch_id partial writes, at-least-once safe); "
+    "no reprocessing. Three order chunks (o_custkey % 3, so every "
+    "chunk is non-empty and the k-minimum merge really runs) stream "
+    "through foreachBatch (_SUCCESS-gated write_once partials per "
+    "batch_id, at-least-once safe); "
     "each batch persists only its local k smallest distinct hashes; "
     "the merged partials re-ranked must reproduce the one-shot batch "
     "sketch EXACTLY — which is the oracle (the estimator columns of "
     "the batch entry).",
 )
 def q_stream_kmv_maintenance(spark, sf_dir):
-    import os
-
     from ecom_churn_lakehouse_spark.scratch import scratch_dir
 
     orders = load_table(spark, sf_dir, "orders").select("o_custkey")
@@ -856,40 +857,15 @@ def q_stream_kmv_maintenance(spark, sf_dir):
     )
 
     base = scratch_dir(prefix="stream_kmv_")
-    for lo, hi in ((None, 50000), (50000, 100000), (100000, None)):
-        chunk = orders
-        if lo:
-            chunk = chunk.filter(F.col("o_custkey") >= lo)
-        if hi:
-            chunk = chunk.filter(F.col("o_custkey") < hi)
-        chunk.coalesce(1).write.mode("append").parquet(f"{base}/src")
-
-    def _apply(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        dest = f"{base}/partials/batch_id={batch_id}"
-        if not os.path.exists(dest):
-            (
-                batch_df.select(h)
-                .distinct()
-                .orderBy("h")
-                .limit(_KMV_MAX_K)
-                .write.mode("overwrite")
-                .parquet(dest)
-            )
-
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
+    replay(
+        orders,
+        [F.col("o_custkey") % 3 == m for m in (0, 1, 2)],
+        lambda bdf, bid: write_once(
+            bdf.select(h).distinct().orderBy("h").limit(_KMV_MAX_K),
+            f"{base}/partials/batch_id={bid}",
+        ),
+        base,
     )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     merged = (
         spark.read.parquet(f"{base}/partials")
         .select("h")
@@ -1166,7 +1142,7 @@ def q_mutual_knn_graph(spark, sf_dir):
     "MERGEABLE by element-wise counter addition, so the frequency "
     "structure is maintainable from micro-batches with O(depth*width) "
     "state and no reprocessing. Three document chunks stream through "
-    "foreachBatch (idempotent per-batch_id partial writes, "
+    "foreachBatch (_SUCCESS-gated write_once partials per batch_id, "
     "at-least-once safe); each batch persists only its local "
     "(row, bucket, count) partial counters; the summed partials "
     "queried for the same top-20 probe tokens must reproduce the "
@@ -1176,8 +1152,6 @@ def q_mutual_knn_graph(spark, sf_dir):
     "in the batch entry.",
 )
 def q_stream_cms_maintenance(spark, sf_dir):
-    import os
-
     from ecom_churn_lakehouse_spark.scratch import scratch_dir
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1187,44 +1161,21 @@ def q_stream_cms_maintenance(spark, sf_dir):
 
     base = scratch_dir(prefix="stream_cms_")
     n_max = docs.agg(F.max("doc_id")).collect()[0][0]
-    cut1, cut2 = n_max // 3, 2 * n_max // 3
-    for lo, hi in ((None, cut1), (cut1, cut2), (cut2, None)):
-        chunk = docs
-        if lo:
-            chunk = chunk.filter(F.col("doc_id") >= lo)
-        if hi:
-            chunk = chunk.filter(F.col("doc_id") < hi)
-        chunk.coalesce(1).write.mode("append").parquet(f"{base}/src")
 
     def _apply(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        dest = f"{base}/partials/batch_id={batch_id}"
-        if not os.path.exists(dest):
-            toks = batch_df.select(tok)
-            partials = None
-            for d in range(_CMS_DEPTH):
-                p = toks.groupBy(
-                    F.lit(d).alias("row_id"),
-                    hash_bucket(F.col("token"), f"cms{d}:", _CMS_WIDTH).alias(
-                        "bucket"
-                    ),
-                ).agg(F.count("*").cast("long").alias("counter"))
-                partials = p if partials is None else partials.unionByName(p)
-            partials.write.mode("overwrite").parquet(dest)
+        toks = batch_df.select(tok)
+        partials = None
+        for d in range(_CMS_DEPTH):
+            p = toks.groupBy(
+                F.lit(d).alias("row_id"),
+                hash_bucket(F.col("token"), f"cms{d}:", _CMS_WIDTH).alias(
+                    "bucket"
+                ),
+            ).agg(F.count("*").cast("long").alias("counter"))
+            partials = p if partials is None else partials.unionByName(p)
+        write_once(partials, f"{base}/partials/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
-    )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    replay(docs, ranges("doc_id", n_max // 3, 2 * n_max // 3), _apply, base)
 
     merged = (
         spark.read.parquet(f"{base}/partials")
@@ -1634,7 +1585,7 @@ def q_semdedup_savings_by_source(spark, sf_dir):
     "state, scoring exact cosines for the newly visible pairs (the "
     "later endpoint discovers the pair exactly once: new-old and "
     "new-new, never old-old). Both writes are batch_id-keyed partials "
-    "skipped when already present — the reference's idempotent keyed "
+    "through the _SUCCESS-gated write_once — the reference's idempotent keyed "
     "upsert publish discipline (orders_bronze_to_silver.py:184-195) "
     "in streaming form. The RANK-DEPENDENT finish (top-5 per query, "
     "mutual filter, bounded CC, keeper election) is not incrementally "
@@ -1661,27 +1612,12 @@ def q_stream_semdedup_maintenance(spark, sf_dir):
     # stream processes exactly this corpus.
     band_bits = _adaptive_band_bits(emb.count())
     # three deterministic arrival waves (vec_id mod 3)
-    for m in (0, 1, 2):
-        emb.filter(F.col("vec_id") % 3 == m).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{base}/src")
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
+    replay(
+        emb,
+        [F.col("vec_id") % 3 == m for m in (0, 1, 2)],
+        lambda bdf, bid: _semdedup_apply_batch(spark, base, bdf, bid, band_bits),
+        base,
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: _semdedup_apply_batch(
-                spark, base, bdf, bid, band_bits
-            )
-        )
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return _semdedup_serve_manifest(spark, base)
 
 
@@ -1703,65 +1639,46 @@ def _semdedup_apply_batch(spark, base, batch_df, batch_id, band_bits):
     state, then score exact cosines for the pairs this batch makes
     newly visible (batch bands x ACCUMULATED bands — the later
     endpoint discovers each unordered pair exactly once). Every write
-    is a batch_id-keyed partial skipped when already present (replay
+    is a batch_id-keyed partial through ``write_once`` (replay
     safety: the idempotent keyed-upsert publish discipline)."""
-    import os
-
     from ecom_churn_lakehouse_spark.functions.vectors import (
         cosine_fixed,
         to_double_array,
     )
-
-    if batch_df.isEmpty():
-        return
-    bands_dest = f"{base}/bands/batch_id={batch_id}"
-    pairs_dest = f"{base}/pairs/batch_id={batch_id}"
-    if not os.path.exists(bands_dest):
-        _semdedup_bands_of(batch_df, band_bits).write.mode(
-            "overwrite"
-        ).parquet(bands_dest)
-    if not os.path.exists(pairs_dest):
-        # vector state partial (for cosine scoring of new pairs)
-        vecs_dest = f"{base}/vecs/batch_id={batch_id}"
-        if not os.path.exists(vecs_dest):
-            batch_df.select(
-                "vec_id",
-                to_double_array(F.col("embedding")).alias("ev"),
-            ).write.mode("overwrite").parquet(vecs_dest)
-        new_bands = _semdedup_bands_of(batch_df, band_bits)
-        all_bands = spark.read.parquet(f"{base}/bands").select(
-            F.col("vec_id").alias("other_id"), "b", "band_val"
+    new_bands = _semdedup_bands_of(batch_df, band_bits)
+    write_once(new_bands, f"{base}/bands/batch_id={batch_id}")
+    # vector state partial (for cosine scoring of new pairs)
+    write_once(
+        batch_df.select(
+            "vec_id", to_double_array(F.col("embedding")).alias("ev")
+        ),
+        f"{base}/vecs/batch_id={batch_id}",
+    )
+    all_bands = spark.read.parquet(f"{base}/bands").select(
+        F.col("vec_id").alias("other_id"), "b", "band_val"
+    )
+    fresh = (
+        new_bands.join(all_bands, ["b", "band_val"])
+        .filter(F.col("vec_id") != F.col("other_id"))
+        .select(
+            F.least("vec_id", "other_id").alias("lo"),
+            F.greatest("vec_id", "other_id").alias("hi"),
         )
-        fresh = (
-            new_bands.join(all_bands, ["b", "band_val"])
-            .filter(F.col("vec_id") != F.col("other_id"))
-            .select(
-                F.least("vec_id", "other_id").alias("lo"),
-                F.greatest("vec_id", "other_id").alias("hi"),
-            )
-            .distinct()
+        .distinct()
+    )
+    vecs = spark.read.parquet(f"{base}/vecs").drop("batch_id")
+    scored = (
+        fresh.join(
+            vecs.select(F.col("vec_id").alias("lo"), F.col("ev").alias("__lv")),
+            "lo",
         )
-        vecs = spark.read.parquet(f"{base}/vecs").drop("batch_id")
-        scored = (
-            fresh.join(
-                vecs.select(
-                    F.col("vec_id").alias("lo"), F.col("ev").alias("__lv")
-                ),
-                "lo",
-            )
-            .join(
-                vecs.select(
-                    F.col("vec_id").alias("hi"), F.col("ev").alias("__hv")
-                ),
-                "hi",
-            )
-            .select(
-                "lo",
-                "hi",
-                cosine_fixed("__lv", "__hv", 64).alias("sim"),
-            )
+        .join(
+            vecs.select(F.col("vec_id").alias("hi"), F.col("ev").alias("__hv")),
+            "hi",
         )
-        scored.write.mode("overwrite").parquet(pairs_dest)
+        .select("lo", "hi", cosine_fixed("__lv", "__hv", 64).alias("sim"))
+    )
+    write_once(scored, f"{base}/pairs/batch_id={batch_id}")
 
 
 def _semdedup_serve_manifest(spark, base):

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ecom_churn_lakehouse_spark.registry import register
 from ecom_churn_lakehouse_spark.sources import load_table
+from ecom_churn_lakehouse_spark.streaming.replay import ranges, replay, write_once
 
 #: 8x8 RGB → 192 raster bytes = 6 sha256 blocks of 32 bytes.
 _W = _H = 8
@@ -974,14 +975,6 @@ def q_stream_phash_dedup_maintenance(spark, sf_dir):
 
     corpus = _phash_corpus(spark, sf_dir)
     base = scratch_dir(prefix="stream_phash_")
-    # three deterministic doc_id ranges -> three source files
-    for lo, hi in ((None, 200), (200, 500000), (500000, None)):
-        chunk = corpus
-        if lo:
-            chunk = chunk.filter(F.col("doc_id") >= lo)
-        if hi:
-            chunk = chunk.filter(F.col("doc_id") < hi)
-        chunk.coalesce(1).write.mode("append").parquet(f"{base}/src")
 
     def _bands(codes):
         b = codes.select(
@@ -1000,12 +993,6 @@ def q_stream_phash_dedup_maintenance(spark, sf_dir):
         )
 
     def _apply(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        pair_dest = f"{base}/pairs/batch_id={batch_id}"
-        code_dest = f"{base}/codes/batch_id={batch_id}"
-        if os.path.exists(pair_dest) and os.path.exists(code_dest):
-            return  # replayed batch: partials already published
         new_codes = (
             image_perceptual_hashes(batch_df)
             .filter(F.col("decode_ok"))
@@ -1054,21 +1041,11 @@ def q_stream_phash_dedup_maintenance(spark, sf_dir):
             "doc_b",
             F.expr("CAST(bit_count(ha ^ hb) AS INT)").alias("hamming"),
         ).filter(F.col("hamming") <= _PHASH_T)
-        pairs.write.mode("overwrite").parquet(pair_dest)
-        new_codes.write.mode("overwrite").parquet(code_dest)
+        write_once(pairs, f"{base}/pairs/batch_id={batch_id}")
+        write_once(new_codes, f"{base}/codes/batch_id={batch_id}")
 
-    stream = (
-        spark.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
-    )
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # three deterministic doc_id ranges -> three micro-batches
+    replay(corpus, ranges("doc_id", 200, 500000), _apply, base)
     return (
         spark.read.parquet(f"{base}/pairs")
         .select("doc_a", "doc_b", "hamming")

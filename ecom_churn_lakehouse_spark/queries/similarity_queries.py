@@ -24,6 +24,7 @@ from ecom_churn_lakehouse_spark.similarity.ann import (
     ivf_assign_cells,
 )
 from ecom_churn_lakehouse_spark.sources import load_table
+from ecom_churn_lakehouse_spark.streaming.replay import replay, write_once
 
 _COS = (
     "list_dot_product({a}, {b}) / "
@@ -3001,27 +3002,17 @@ def q_knn_lof_scores(spark, sf_dir):
 def _ann_index_apply_batch(base, planes, batch_df, batch_id):
     """One foreachBatch step of LSH index maintenance: band-assign the
     batch's vectors against the index's FROZEN hyperplane set and
-    upsert (vec_id, bucket, embedding) as a batch_id-keyed partial —
-    skipped when already present, so a replayed batch is a no-op (the
-    idempotent keyed-upsert publish discipline, cf. the reference's
-    delta MERGE publish at orders_bronze_to_silver.py:184-195).
-    Bucket assignment is per-row (map-only): maintenance work is
-    O(|batch|), independent of index size."""
-    import os
-
-    if batch_df.isEmpty():
-        return
-    dest = f"{base}/index/batch_id={batch_id}"
-    # Replay no-op only on a COMPLETED write (r10 ADVICE): a crashed
-    # mid-write leaves a partial dest directory without the _SUCCESS
-    # marker Spark commits last — skipping on bare existence would
-    # silently drop that batch's vectors; overwrite repairs it.
-    if os.path.exists(os.path.join(dest, "_SUCCESS")):
-        return
+    upsert (vec_id, bucket, embedding) as a batch_id-keyed partial
+    through ``write_once``, so a replayed batch is a no-op and a
+    crashed half-write is repaired (the idempotent keyed-upsert publish
+    discipline, cf. the reference's delta MERGE publish at
+    orders_bronze_to_silver.py:184-195). Bucket assignment is per-row
+    (map-only): maintenance work is O(|batch|), independent of index
+    size."""
     part = hyperplane_lsh_buckets(batch_df, planes).join(
         batch_df.select("vec_id", "embedding"), on="vec_id"
     )
-    part.write.mode("overwrite").parquet(dest)
+    write_once(part, f"{base}/index/batch_id={batch_id}")
 
 
 def _ann_index_probe(spark, base, k=3):
@@ -3066,27 +3057,15 @@ def q_stream_ann_index_maintenance(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = scratch_dir(prefix="stream_ann_index_")
-    for m in (0, 1, 2):
-        emb.filter(F.col("vec_id") % 3 == m).coalesce(1).write.mode(
-            "append"
-        ).parquet(f"{base}/src")
     planes = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("plane_id"), "embedding"
     )
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{base}/src")
+    replay(
+        emb,
+        [F.col("vec_id") % 3 == m for m in (0, 1, 2)],
+        lambda bdf, bid: _ann_index_apply_batch(base, planes, bdf, bid),
+        base,
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: _ann_index_apply_batch(base, planes, bdf, bid)
-        )
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return _ann_index_probe(spark, base, k=3)
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ecom_churn_lakehouse_spark.operators.windows import dedup_top1
 from ecom_churn_lakehouse_spark.sources.managed_table import ManagedTable
 from ecom_churn_lakehouse_spark.sources.tables import event_ts_column
+from ecom_churn_lakehouse_spark.streaming.replay import run_available_now
 
 __all__ = [
     "stream_events",
@@ -32,25 +33,20 @@ __all__ = [
 ]
 
 
-def stream_events(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet (ts normalized as in the
     batch source)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    schema = batch.schema
     ts_dtype = dict(batch.dtypes)["ts"]
     # File streams need a DIRECTORY source; select just the events file
     # with a glob filter.
-    reader = (
-        spark.readStream.schema(schema)
+    raw = (
+        spark.readStream.schema(batch.schema)
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
+        .load(sf_dir)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.load(sf_dir)
     return raw.select(
         "event_id",
         event_ts_column(ts_dtype).alias("ts"),
@@ -252,8 +248,6 @@ def run_stream_to_managed_table(
     the streaming twin of the reference's batch MERGE publish (S7)."""
 
     def _publish(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # Within one microbatch the window grain can repeat across
         # update rows. Update-mode aggregate batches emit one row per
         # key today, but if a source ever yields several, pick the
@@ -277,14 +271,7 @@ def run_stream_to_managed_table(
 
     # session_window aggregations reject update mode (sessions can
     # merge); callers pass output_mode="complete" for those.
-    (
-        stream_df.writeStream.outputMode(output_mode)
-        .foreachBatch(_publish)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(stream_df, _publish, checkpoint_dir, output_mode)
 
 
 def run_cdc_stream_to_managed_table(
@@ -310,8 +297,6 @@ def run_cdc_stream_to_managed_table(
     """
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         latest = dedup_top1(
             batch_df,
             table.keys,
@@ -319,11 +304,4 @@ def run_cdc_stream_to_managed_table(
         )
         table.merge(latest, delete_col=delete_col)
 
-    (
-        change_stream.writeStream.outputMode("append")
-        .foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(change_stream, _apply, checkpoint_dir)
