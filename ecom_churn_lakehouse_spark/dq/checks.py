@@ -95,6 +95,8 @@ class CheckResult:
 class DQReport:
     row_count: int
     results: list[CheckResult] = field(default_factory=list)
+    #: CDC tombstones in a ``ManagedTable.merge`` source (not gated).
+    rows_deleted: int = 0
 
     @property
     def blocking_failures(self) -> list[CheckResult]:
@@ -193,8 +195,9 @@ def observe_checks(df: DataFrame, checks: list[dict[str, Any]]):
 
     Returns ``(observed_df, observation)``; feed the observation to
     :func:`report_from_observation` AFTER the action has run. Only
-    row-predicate checks are supported (``unique`` is group-based and
-    still needs its own pass — ``merge`` answers it with its key probe).
+    row-predicate checks are supported: ``unique`` is group-based, and
+    ``merge`` answers it with its key probe, a window count per key
+    observed on the same write.
     """
     from pyspark.sql import Observation
 
@@ -206,8 +209,9 @@ def observe_checks(df: DataFrame, checks: list[dict[str, Any]]):
 
 def report_from_observation(obs, checks: list[dict[str, Any]]) -> DQReport:
     """Build a :class:`DQReport` from a completed observation. ``unique``
-    checks in ``checks`` are reported as passed: the caller answered
-    them before the action ran (``ManagedTable.merge``'s key probe)."""
+    checks in ``checks`` are reported as passed: the caller answers them
+    separately (``ManagedTable.merge``'s key probe, observed on the same
+    write, raises before any report is returned when it fails)."""
     return _report(obs.get, checks)
 
 

@@ -18,6 +18,7 @@ and drift detection add no scan of the data plane.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,23 +41,21 @@ def record_report(
     an idempotent no-op via keyed MERGE on (run_id, check name).
     """
     t = ManagedTable(spark, history_path, keys=["run_id", "name"])
-    rows = [
-        {
-            "run_id": run_id,
-            "name": r.name,
-            "check_type": r.check_type,
-            "severity": r.severity,
-            "bad_rows": int(r.bad_rows),
-            "row_count": int(report.row_count),
-            "bad_ratio": (
-                float(r.bad_rows) / report.row_count if report.row_count else 0.0
-            ),
-            "passed": bool(r.passed),
-        }
-        for r in report.results
-    ]
+    n, results = int(report.row_count), report.results
+    # from pandas: a LocalRelation, so the write starts no Python worker
     src = spark.createDataFrame(
-        rows,
+        pd.DataFrame(
+            {
+                "run_id": [run_id] * len(results),
+                "name": [r.name for r in results],
+                "check_type": [r.check_type for r in results],
+                "severity": [r.severity for r in results],
+                "bad_rows": [int(r.bad_rows) for r in results],
+                "row_count": [n] * len(results),
+                "bad_ratio": [float(r.bad_rows) / n if n else 0.0 for r in results],
+                "passed": [bool(r.passed) for r in results],
+            }
+        ),
         "run_id string, name string, check_type string, severity string, "
         "bad_rows long, row_count long, bad_ratio double, passed boolean",
     )

@@ -87,7 +87,8 @@ def incremental_gold_update(
     # Changed keys with NO surviving orders (full CDC erasure) produce
     # no feature row — without a tombstone their stale gold row would
     # outlive the data that justified it. merge(delete_col=...) removes
-    # them in the same pass that upserts the recomputed rows.
+    # them in the same pass that upserts the recomputed rows, and
+    # observes their count on that write.
     vanished = keys.join(
         feats.select("customer_id"), on="customer_id", how="left_anti"
     ).withColumn("as_of_date", F.to_date(F.lit(as_of_date)))
@@ -96,7 +97,6 @@ def incremental_gold_update(
             vanished = vanished.withColumn(
                 field.name, F.lit(None).cast(field.dataType)
             )
-    n_deleted = vanished.count()
     source = feats.withColumn("_deleted", F.lit(False)).unionByName(
         vanished.select(*feats.columns).withColumn("_deleted", F.lit(True))
     )
@@ -106,7 +106,7 @@ def incremental_gold_update(
         report = gold.merge(source, checks=_GOLD_GATES, delete_col="_deleted")
     finally:
         feats.unpersist()
-    n = report.row_count
+    n, n_deleted = report.row_count, report.rows_deleted
     log_event(
         "gold_incremental_published",
         run_id,

@@ -13,10 +13,11 @@ reference's stage semantics end-to-end (SURVEY.md §3):
   (``labels.py``, ``build_training_snapshot.py``, ``build_latest_features.py``)
 
 Every keyed publish is ONE call, ``ManagedTable.merge(df, checks=...)``:
-the stage's blocking DQ gates and its row count are observed on the
-publish write itself, the grain check is answered by MERGE's key
-probe, and a failing gate raises :class:`DQGateFailure` before the
-commit, so readers never see ungated data.
+the stage's blocking DQ gates, its row count and MERGE's key probe
+(which answers the grain check) are all observed on the publish write
+itself, and a failing gate raises :class:`DQGateFailure` before the
+commit, so readers never see ungated data. Bronze's and the export's
+row counts ride their writes the same way.
 
 Fixes the reference's recompute defect (§3.2): multi-action lineages
 are persisted once instead of re-derived per action.
@@ -32,7 +33,8 @@ import datetime as dt
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
@@ -125,22 +127,17 @@ def bronze_ingest(
 
     audit = ManagedTable(spark, audit_path, keys=["dataset", "fingerprint"])
     if audit.exists():
-        seen = (
-            audit.read()
-            .filter(
-                (F.col("dataset") == "orders")
-                & (F.col("fingerprint") == fingerprint)
-                & (F.col("status") == "success")
-            )
-            .limit(1)
-            .count()
+        ingested = audit.read().filter(
+            (F.col("dataset") == "orders")
+            & (F.col("fingerprint") == fingerprint)
+            & (F.col("status") == "success")
         )
-        if seen:
+        if not ingested.isEmpty():
             _audit_record(spark, audit, run_id, fingerprint, "skipped_already_ingested", 0)
             log_event("bronze_skipped_already_ingested", run_id, fingerprint=fingerprint)
             return StageResult(rows_published=0, skipped=True)
 
-    row_count = raw.count()
+    rows = Observation()
     stamped = (
         raw.withColumn("_ingest_run_id", F.lit(run_id))
         .withColumn("_ingest_ts", F.current_timestamp())
@@ -148,9 +145,11 @@ def bronze_ingest(
         .withColumn("_source_file", F.input_file_name())
         .withColumn("_source_fingerprint", F.lit(fingerprint))
         .withColumn("_schema_version", F.lit(contract.contract_hash))
+        .observe(rows, F.count(F.lit(1)).alias("rows"))
     )
     bronze = ManagedTable(spark, bronze_path, keys=["order_id"])
     bronze.append(stamped, partition_by=["ingest_date"])
+    row_count = rows.get["rows"]
     _audit_record(spark, audit, run_id, fingerprint, "success", row_count)
     log_event("bronze_ingested", run_id, rows=row_count, fingerprint=fingerprint)
     return StageResult(rows_published=row_count)
@@ -168,8 +167,13 @@ def _audit_record(spark, audit: ManagedTable, run_id, fingerprint, status, rows)
             T.StructField("row_count", T.LongType(), False),
         ]
     )
+    # from pandas: a LocalRelation, so the write starts no Python worker
     rec = spark.createDataFrame(
-        [("orders", fingerprint, run_id, status, rows)], schema=schema
+        pd.DataFrame(
+            [("orders", fingerprint, run_id, status, rows)],
+            columns=schema.fieldNames(),
+        ),
+        schema=schema,
     )
     audit.append(rec)
 
@@ -283,9 +287,9 @@ def gold_features(
 
     The reference gates, then publishes: a dedicated check job, then
     the MERGE, two scans of the feature frame. Here the contract's
-    row-predicate gates ride the staged publish write (``df.observe``)
-    and ``grain_unique`` is MERGE's own unique-source probe on the same
-    (customer_id, as_of_date) keys; the commit happens only if every
+    row-predicate gates and ``grain_unique`` (MERGE's own key probe on
+    the same (customer_id, as_of_date) keys) all ride the staged
+    publish write (``df.observe``); the commit happens only if every
     gate passes. At 100 TB this removes a full extra pass over gold per
     publish.
     """
@@ -449,6 +453,8 @@ def latest_features_export(
             F.col("_snapshot_id").desc_nulls_last(),
         ],
     )
-    latest.write.mode("overwrite").parquet(export_path)
-    n = spark.read.parquet(export_path).count()
-    return StageResult(rows_published=n)
+    rows = Observation()
+    latest.observe(rows, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(export_path)
+    return StageResult(rows_published=rows.get["rows"])

@@ -75,7 +75,7 @@ def incremental_scd2_update(
         source = rebuilt.withColumn("__deleted", F.lit(False)).unionByName(
             stale
         )
-        dim.merge(source, delete_col="__deleted")
+        report = dim.merge(source, delete_col="__deleted")
     else:
-        dim.merge(rebuilt)
-    return rebuilt.count()
+        report = dim.merge(rebuilt)
+    return report.row_count

@@ -445,9 +445,10 @@ def q_stream_scd2_dimension(spark, sf_dir):
     try:
         # Three chronological chunks -> three micro-batches (customers
         # recur across chunks, so mid-stream batches really do close
-        # previously-open intervals and bump versions).
+        # previously-open intervals and bump versions). Orders span
+        # 1995-01-01 to 2001-08-01, so every chunk is non-empty.
         replay(
-            orders, ranges("order_date", "1995-01-01", "1998-01-01"), _apply, base
+            orders, ranges("order_date", "1997-01-01", "1999-01-01"), _apply, base
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -10,7 +10,8 @@ the semantics over plain parquet:
 - ``merge`` = source-wins upsert: new table = source ∪ (current
   ⟕anti source on keys). Equivalent to Delta's
   ``whenMatchedUpdateAll().whenNotMatchedInsertAll()`` for sources
-  that are unique per key (enforced).
+  that are unique per key (enforced by a key probe observed on the
+  staged write, like the DQ gates, and checked before the claim).
 - Writes stage a snapshot dir, then CLAIM the next commit sequence by
   creating ``_commits/{seq}.commit`` with O_CREAT|O_EXCL — the
   filesystem's put-if-absent CAS, the same coordination primitive as
@@ -20,6 +21,10 @@ the semantics over plain parquet:
   two-thread racing-MERGE test in tests/test_managed_table.py). A
   tiny ``_HEAD`` pointer file is atomically replaced after the claim
   for readers (read-committed with at most a claim-to-swap lag).
+- Each commit records the table schema in its ``_delta_log`` metaData,
+  taken from the staged frame; reads pass it to the parquet reader, so
+  neither a commit nor a read opens data files to learn the schema.
+  Every publish is one Spark write plus driver-side bookkeeping.
 
 On a production cluster with delta-spark installed, ``HAVE_DELTA``
 routes every operation to the real thing (ACID log, data skipping,
@@ -35,9 +40,11 @@ import shutil
 import time
 import uuid
 from collections.abc import Sequence
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ecom_churn_lakehouse_spark.dq.checks import (
     DQGateFailure,
@@ -54,6 +61,30 @@ _HEAD = "_HEAD"
 _COMMITS = "_commits"
 #: Delta-protocol checkpoint pointer file (literal name per spec).
 _LAST_CKPT = "_last_checkpoint"
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every nested field, element and map value nullable."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+class _Staged(NamedTuple):
+    """A staged snapshot dir and the schema a parquet read of it yields:
+    the written frame's, every field nullable, partition columns last."""
+
+    path: str
+    schema: T.StructType
 
 
 class ManagedTable:
@@ -121,13 +152,38 @@ class ManagedTable:
                 reader = reader.option("versionAsOf", version)
             return reader.load(self.path)
         if version is None:
-            return self.spark.read.parquet(self._head_dir())
+            return self._read_snapshot(self._head_dir())
         target = os.path.join(self.path, version)
         if not os.path.isdir(target):
             raise ValueError(
                 f"version {version!r} not retained; available: {self.versions()}"
             )
-        return self.spark.read.parquet(target)
+        return self._read_snapshot(target)
+
+    def _read_snapshot(
+        self, snapshot: str, spark: SparkSession | None = None
+    ) -> DataFrame:
+        """Scan a snapshot dir with the schema its commit logged; only a
+        snapshot with no log entry (a pre-log table) infers it."""
+        reader = (spark or self.spark).read
+        schema = self._logged_schema(snapshot)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(snapshot)
+
+    def _logged_schema(self, snapshot: str) -> T.StructType | None:
+        """Schema in the metaData in force at the commit that published
+        ``snapshot`` (None when that commit has no log entry)."""
+        name = os.path.basename(snapshot)
+        seq = self._version_seq(name)
+        log = os.path.join(self.path, "_delta_log", f"{seq:020d}.json")
+        if seq < 0 or not os.path.exists(log):
+            return None
+        meta, active = self.delta_log_state(seq)
+        # an unclaimed orphan dir shares its seq with the winner's entry
+        if meta is None or any(p.split(os.sep, 1)[0] != name for p in active):
+            return None
+        return T.StructType.fromJson(json.loads(meta["schemaString"]))
 
     # ------------------------------------------------------------ writes
     #
@@ -204,9 +260,9 @@ class ManagedTable:
         d = self._committed_dir()
         if d is None:
             raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        return (spark or self.spark).read.parquet(d)
+        return self._read_snapshot(d, spark)
 
-    def _stage(self, df: DataFrame, partition_by: list[str] | None) -> str:
+    def _stage(self, df: DataFrame, partition_by: list[str] | None) -> _Staged:
         """Stage a snapshot in a hidden dir (the WRITE half of a
         commit). Runs the Spark action but publishes nothing — readers
         and the vacuum never touch ``.staged-*`` dirs, so a concurrent
@@ -216,10 +272,16 @@ class ManagedTable:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(target)
-        return target
+        parts = list(partition_by or [])
+        # a partition column reads back from the path, without metadata
+        schema = T.StructType(
+            [f for f in df.schema.fields if f.name not in parts]
+            + [T.StructField(p, df.schema[p].dataType) for p in parts]
+        )
+        return _Staged(target, _nullable(schema))
 
-    def _abandon_staged(self, staged: str) -> None:
-        shutil.rmtree(staged, ignore_errors=True)
+    def _abandon_staged(self, staged: _Staged) -> None:
+        shutil.rmtree(staged.path, ignore_errors=True)
 
     @staticmethod
     def _version_seq(name: str) -> int:
@@ -283,7 +345,7 @@ class ManagedTable:
 
     def _try_publish(
         self,
-        staged: str,
+        staged: _Staged,
         claim_seq: int,
         partition_by: list[str] | None = None,
     ) -> bool:
@@ -305,18 +367,18 @@ class ManagedTable:
             return False  # seq already owned; skip the rename dance
         version = f"v-{claim_seq:08d}-{uuid.uuid4().hex[:8]}"
         versioned = os.path.join(self.path, version)
-        os.rename(staged, versioned)
+        os.rename(staged.path, versioned)
         tmp = os.path.join(self.path, f".claim-{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as f:
             f.write(version)
         try:
             os.link(tmp, commit_file)  # atomic CAS, content in place
         except FileExistsError:
-            os.rename(versioned, staged)  # lost the race for this seq
+            os.rename(versioned, staged.path)  # lost the race for this seq
             return False
         finally:
             os.remove(tmp)
-        self._write_delta_log(claim_seq, versioned, partition_by)
+        self._write_delta_log(claim_seq, versioned, staged.schema, partition_by)
         self._swap_head(version)
         return True
 
@@ -437,8 +499,13 @@ class ManagedTable:
             raise FileNotFoundError(
                 f"no delta log (or empty table) at {self.path}"
             )
-        return self.spark.read.parquet(
-            *[os.path.join(self.path, p) for p in sorted(active)]
+        # basePath: partition values parse from the dirs under the root
+        return (
+            self.spark.read.schema(
+                T.StructType.fromJson(json.loads(meta["schemaString"]))
+            )
+            .option("basePath", self.path)
+            .parquet(*[os.path.join(self.path, p) for p in sorted(active)])
         )
 
     def history(self) -> list[dict]:
@@ -486,6 +553,7 @@ class ManagedTable:
         self,
         version: int,
         versioned: str,
+        schema: T.StructType,
         partition_by: list[str] | None,
     ) -> None:
         """Emit the Delta-protocol action file for commit ``version``.
@@ -494,6 +562,7 @@ class ManagedTable:
         commit is remove(all previous active files) + add(all new) —
         the same shape delta-spark writes for an overwrite txn; the
         MERGE semantics live in how the new snapshot was BUILT.
+        ``schema`` (the staged one) goes into metaData when it changes.
         """
         ldir = os.path.join(self.path, "_delta_log")
         os.makedirs(ldir, exist_ok=True)
@@ -513,7 +582,7 @@ class ManagedTable:
             }
         ]
         prev_meta, prev_active = self.delta_log_state(version - 1)
-        schema_string = self.spark.read.parquet(versioned).schema.json()
+        schema_string = schema.json()
         if version == 0 or prev_meta is None:
             actions.append(
                 {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
@@ -830,14 +899,14 @@ class ManagedTable:
 
         ``gate()`` runs after each stage and before its claim; if it
         raises, the staged dir is abandoned and nothing is committed."""
-        staged: str | None = None
+        staged: _Staged | None = None
         try:
             for _ in range(max_retries + 1):
                 base_seq = self._commit_seq()
                 if (
                     staged is None
                     or base_dependent
-                    or not os.path.isdir(staged)  # vacuumed mid-race
+                    or not os.path.isdir(staged.path)  # vacuumed mid-race
                 ):
                     if staged is not None:
                         self._abandon_staged(staged)
@@ -921,10 +990,12 @@ class ManagedTable:
         keys are the table's keys; a ``unique`` check on other keys
         raises :class:`ValueError`.
 
-        The row-predicate checks and the row count of the upserts are
-        observed (``df.observe``) on the staged snapshot write itself —
-        no extra scan — and checked before the commit claim. A failing
-        critical check (or key probe) raises
+        Nothing runs before the publish: the key probe (rows in
+        duplicate key groups, from a ``count`` window over the keys),
+        the row-predicate checks and the row count of the upserts are
+        observed (``df.observe``) on the staged snapshot write itself
+        and checked before the commit claim. A non-unique source or a
+        failing critical check raises
         :class:`~ecom_churn_lakehouse_spark.dq.checks.DQGateFailure`;
         the staged snapshot is abandoned, so ``_HEAD`` and the commit
         log are untouched, exactly like a failed Delta transaction.
@@ -932,7 +1003,8 @@ class ManagedTable:
         ``delete_col`` names a boolean column in ``source`` marking CDC
         tombstones: matched target rows are DELETED instead of updated,
         and unmatched tombstones are ignored. The flag column itself
-        never lands in the table, and tombstones are not gated.
+        never lands in the table, and tombstones are not gated; the
+        report's ``rows_deleted`` is their count.
 
         ``evolve_schema=True`` lets the source carry columns the table
         doesn't have yet; the table widens and existing rows backfill
@@ -945,28 +1017,36 @@ class ManagedTable:
                 "other checks must be row-predicate checks"
             )
         row_checks = [c for c in checks if c["type"] != "unique"]
-        dup = (
-            source.groupBy(*self.keys).count().filter(F.col("count") > 1).limit(1)
-        )
-        if dup.count() > 0:
-            raise DQGateFailure(f"merge source not unique on keys {self.keys}")
+        per_key = F.count(F.lit(1)).over(Window.partitionBy(*self.keys))
+        keyed = source.withColumn("__rows_per_key", per_key)
+        probe = [F.count(F.when(F.col("__rows_per_key") > 1, 1)).alias("dup_rows")]
         if delete_col is not None:
-            upserts = source.filter(~F.col(delete_col)).drop(delete_col)
-        else:
-            upserts = source
+            probe.append(F.count(F.when(F.col(delete_col), 1)).alias("tombstones"))
 
-        def passed(report: DQReport) -> DQReport:
+        def upserts_of(df: DataFrame) -> DataFrame:
+            df = df.drop("__rows_per_key")
+            if delete_col is None:
+                return df
+            return df.filter(~F.col(delete_col)).drop(delete_col)
+
+        def passed(found: dict, report: DQReport) -> DQReport:
+            if found["dup_rows"]:
+                raise DQGateFailure(f"merge source not unique on keys {self.keys}")
             if not report.ok:
                 raise DQGateFailure(
                     "critical DQ failures: "
                     f"{[r.name for r in report.blocking_failures]}"
                 )
+            report.rows_deleted = found.get("tombstones", 0)
             return report
 
         if HAVE_DELTA:
             # Delta MERGE is its own transaction; observation semantics
             # across the MERGE command aren't guaranteed, so gate first.
-            report = passed(run_checks(upserts, checks))
+            upserts = upserts_of(source)
+            report = passed(
+                keyed.agg(*probe).first().asDict(), run_checks(upserts, checks)
+            )
             if not self.exists():
                 self.overwrite(upserts)
                 return report
@@ -1002,9 +1082,12 @@ class ManagedTable:
         attempt: dict = {}
 
         def build() -> DataFrame:
-            # A fresh Observation per OCC attempt: an observation
-            # reports only the first action that consumes it.
-            observed, attempt["obs"] = observe_checks(upserts, row_checks)
+            # Fresh Observations per OCC attempt: an observation
+            # reports only the first action that consumes it. The probe
+            # sits under the tombstone filter, so it sees every row.
+            attempt["probe"] = Observation()
+            upserts = upserts_of(keyed.observe(attempt["probe"], *probe))
+            observed, attempt["checks"] = observe_checks(upserts, row_checks)
             if self._committed_dir() is None:  # first publish
                 return observed
             # Re-resolved from the commit LOG on every (re)try: a racer
@@ -1021,7 +1104,7 @@ class ManagedTable:
             )
             if evolve_schema:
                 return kept.unionByName(observed, allowMissingColumns=True)
-            extra = set(upserts.columns) - set(current.columns)
+            extra = set(observed.columns) - set(current.columns)
             if extra:
                 raise ValueError(
                     f"merge source has columns not in table: {sorted(extra)}; "
@@ -1030,7 +1113,10 @@ class ManagedTable:
             return kept.unionByName(observed.select(*current.columns))
 
         def gate() -> None:
-            attempt["report"] = passed(report_from_observation(attempt["obs"], checks))
+            attempt["report"] = passed(
+                attempt["probe"].get,
+                report_from_observation(attempt["checks"], checks),
+            )
 
         self._occ_publish(build, None, gate=gate)
         return attempt["report"]

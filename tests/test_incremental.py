@@ -6,6 +6,7 @@ MERGE-ing yields a gold table bit-identical to a full re-run.
 """
 
 import datetime as dt
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -146,6 +147,8 @@ def test_incremental_update_tombstones_erased_customers(spark, tmp_path):
     )
     assert r.rows_published == 0
     assert r.metadata is not None
+    with open(tmp_path / "gold" / "_metadata" / "run-r2.json") as f:
+        assert json.load(f)["rows_deleted"] == 1
 
     gold_features(
         spark, str(tmp_path / "silver"), str(tmp_path / "gold_full"), AS_OF, "r3"

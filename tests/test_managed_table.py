@@ -46,6 +46,110 @@ def test_append_accumulates(spark, tmp_path):
     assert t.read().count() == 2  # append-only: duplicates allowed
 
 
+def test_merge_rejects_nonunique_source_into_existing_table(spark, tmp_path):
+    """The key probe rides the staged write; a failed probe must still
+    leave ``_HEAD``, ``_commits/`` and the snapshots untouched."""
+    path = str(tmp_path / "t")
+    t = ManagedTable(spark, path, keys=["k"])
+    t.merge(spark.createDataFrame([Row(k="a", v=1), Row(k="b", v=2)]))
+
+    def state():
+        with open(os.path.join(path, "_HEAD")) as f:
+            head = f.read()
+        return head, sorted(os.listdir(os.path.join(path, "_commits"))), t.versions()
+
+    before = state()
+    with pytest.raises(ValueError, match="not unique"):
+        t.merge(
+            spark.createDataFrame([Row(k="b", v=3), Row(k="c", v=4), Row(k="c", v=5)])
+        )
+    assert state() == before
+    assert not [d for d in os.listdir(path) if d.startswith(".staged-")]
+    assert {r["k"]: r["v"] for r in t.read().collect()} == {"a": 1, "b": 2}
+
+
+def test_merge_of_empty_and_all_tombstone_sources_returns(spark, tmp_path, within):
+    """An empty branch may be pruned at runtime; every observation must
+    still report, or ``Observation.get`` blocks the merge."""
+    schema = "k int, v string, d boolean"
+    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
+    empty = spark.createDataFrame([], schema)
+    rep = within(lambda: t.merge(empty, delete_col="d"), 120)
+    assert (rep.row_count, rep.rows_deleted) == (0, 0)
+    t.merge(spark.createDataFrame([(1, "a", False), (2, "b", False)], schema),
+            delete_col="d")
+    rep = within(lambda: t.merge(empty, delete_col="d"), 120)
+    assert (rep.row_count, rep.rows_deleted) == (0, 0)
+    tombstones = spark.createDataFrame([(1, None, True), (9, None, True)], schema)
+    rep = within(lambda: t.merge(tombstones, delete_col="d"), 120)
+    assert (rep.row_count, rep.rows_deleted) == (0, 2)
+    assert {r["k"]: r["v"] for r in t.read().collect()} == {2: "b"}
+
+
+def test_publish_job_budget(spark, tmp_path):
+    """A publish is one staged write plus driver bookkeeping, and a read
+    launches no job: schema and key probe ride the write or the log."""
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        group = f"budget-{os.urandom(4).hex()}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    src = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    t = ManagedTable(spark, str(tmp_path / "m"), keys=["k"])
+    assert jobs(lambda: t.merge(src)) <= 2
+    assert jobs(lambda: t.merge(src)) <= 5
+    assert jobs(t.read) == 0
+    a = ManagedTable(spark, str(tmp_path / "a"), keys=["k"])
+    a.append(src)
+    assert jobs(lambda: a.append(src)) == 1
+    assert a.read().count() == 4
+
+
+@pytest.mark.parametrize("layout", ["partitioned", "nested_non_nullable"])
+def test_logged_schema_is_the_parquet_schema(spark, tmp_path, layout):
+    """The schema a commit records (taken from the staged frame, no
+    read-back) is exactly what parquet inference yields, and every read
+    path scans with it."""
+    import datetime as dt
+
+    import pyspark.sql.types as T
+
+    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
+    if layout == "partitioned":
+        df = spark.createDataFrame(
+            [("x", dt.date(2025, 1, 1), 1, "p"), ("y", dt.date(2025, 1, 2), 2, "q")],
+            "part string, day date, k int, v string",
+        )
+        t.overwrite(df, partition_by=["day", "part"])
+    else:
+        schema = T.StructType([
+            T.StructField("k", T.IntegerType(), False),
+            T.StructField(
+                "s", T.StructType([T.StructField("x", T.LongType(), False)]), False
+            ),
+            T.StructField("a", T.ArrayType(T.IntegerType(), False), False),
+            T.StructField(
+                "m", T.MapType(T.StringType(), T.IntegerType(), False), False
+            ),
+        ])
+        df = spark.createDataFrame([(1, (5,), [1, 2], {"u": 3})], schema)
+        t.merge(df)
+        t.merge(spark.createDataFrame([(2, (6,), [], {})], schema))
+    meta, _ = t.delta_log_state()
+    inferred = spark.read.parquet(t._head_dir()).schema
+    assert meta["schemaString"] == inferred.json()
+    assert t.read().schema == inferred
+    assert t.read_via_delta_log().schema == inferred
+    assert sorted(t.read_via_delta_log().collect()) == sorted(t.read().collect())
+    assert t.read().count() == 2
+
+
 def test_composite_key_merge(spark, tmp_path):
     t = ManagedTable(spark, str(tmp_path / "t"), keys=["k1", "k2"])
     t.merge(spark.createDataFrame([Row(k1="a", k2=1, v="x")]))

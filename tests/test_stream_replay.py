@@ -71,7 +71,12 @@ def test_replay_orders_batches_skips_empty_and_names_jobs(spark, tmp_path, capsy
 
 
 @pytest.mark.parametrize(
-    "name", ["stream_checksum_maintenance", "stream_kmv_maintenance"]
+    "name",
+    [
+        "stream_checksum_maintenance",
+        "stream_kmv_maintenance",
+        "stream_scd2_dimension",
+    ],
 )
 def test_resplit_twins_stream_three_nonempty_batches(spark, capsys, name):
     from ecom_churn_lakehouse_spark.registry import queries
