@@ -289,7 +289,6 @@ HEADLINE = [
     "lsh_capped_neardup_pairs",
     "rank_function_battery",
     "revenue_cusum_changepoint",
-    "dedup_savings_by_source",
     "rrf_hybrid_retrieval",
     "incremental_agg_maintenance",
     "embedding_dim_variance_screen",
@@ -393,12 +392,16 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
 
-    # Fail fast on any renamed/removed headliner BEFORE the timing
-    # loop: a KeyError halfway through a multi-minute run loses every
-    # prior timing.
+    # Fail fast on any renamed/removed or repeated headliner BEFORE the
+    # timing loop: a KeyError halfway through a multi-minute run loses
+    # every prior timing, and a repeated name is timed twice and
+    # overwrites its own entry in the per-query map.
     missing = [n for n in HEADLINE if n not in qs]
     if missing:
         raise SystemExit(f"bench: HEADLINE names not in registry: {missing}")
+    repeated = sorted({n for n in HEADLINE if HEADLINE.count(n) > 1})
+    if repeated:
+        raise SystemExit(f"bench: HEADLINE names listed twice: {repeated}")
 
     # Warm the JVM/codegen paths once on the smallest fixture.
     qs["pricing_summary"](spark, "/root/testdata/sf0.001").write.format(

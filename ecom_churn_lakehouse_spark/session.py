@@ -26,6 +26,13 @@ except Exception:  # pragma: no cover - depends on environment
 #: Defaults chosen for correctness-at-scale, not just local runs:
 #: - AQE on: runtime shuffle-partition coalescing + skew-join splitting
 #:   replace hand-tuned ``spark.sql.shuffle.partitions`` on big inputs.
+#:   ``canChangeCachedPlanOutputPartitioning`` extends that to persisted
+#:   frames: without it Spark builds every cache with its final-stage
+#:   shuffle optimizations off, so a cached frame keeps every shuffle
+#:   partition and its publish writes one file per partition, however
+#:   few rows it holds. Spark's documented trade-off is that a reader of
+#:   a coalesced cache may need one more shuffle; every reader of the
+#:   package's caches shuffles by its own keys anyway.
 #: - advisory partition size 64 MB: reasonable post-shuffle target for
 #:   both local[32] and a real cluster.
 #: - Arrow on: every pandas interchange (Pandas UDFs, toPandas for
@@ -35,6 +42,7 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.shuffle.partitions": "32",

@@ -8,7 +8,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from ecom_churn_lakehouse_spark.session import get_spark
+from ecom_churn_lakehouse_spark.session import _DEFAULT_CONF, get_spark
 
 
 @pytest.fixture(scope="session")
@@ -22,6 +22,21 @@ def spark():
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture
+def engine_width(spark):
+    """Runs the test at the engine's own ``spark.sql.shuffle.partitions``
+    (the ``spark`` fixture pins 4, narrower than any fan-out the engine
+    shows) and restores the fixture's width afterwards. Yields the
+    width."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, _DEFAULT_CONF[key])
+    try:
+        yield int(_DEFAULT_CONF[key])
+    finally:
+        spark.conf.set(key, prev)
 
 
 @pytest.fixture

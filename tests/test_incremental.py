@@ -165,6 +165,34 @@ def test_incremental_update_tombstones_erased_customers(spark, tmp_path):
     assert set(inc) == {"c1", "c2"}  # c3's stale row is gone
 
 
+def test_all_erased_update_returns_at_engine_width(spark, tmp_path, engine_width, within):
+    """Every changed key was erased, so the persisted feature frame is
+    empty and, at the engine's shuffle width, may coalesce to no
+    partitions at all: the gated MERGE must still observe its gates and
+    return instead of waiting on an observation that never fires."""
+    silver = ManagedTable(spark, str(tmp_path / "silver"), keys=["order_id"])
+    silver.overwrite(spark.createDataFrame(_silver_rows(), _SILVER_SCHEMA))
+    gold_features(spark, str(tmp_path / "silver"), str(tmp_path / "gold"), AS_OF, "r1")
+    silver.merge(
+        spark.createDataFrame(
+            [("o3", "c2", dt.datetime(2025, 2, 15, 10), "delivered", True),
+             ("o4", "c3", dt.datetime(2025, 3, 1, 9), "delivered", True)],
+            _SILVER_SCHEMA + ", _deleted boolean",
+        ),
+        delete_col="_deleted",
+    )
+    r = within(lambda: incremental_gold_update(
+        spark, str(tmp_path / "silver"), str(tmp_path / "gold"),
+        spark.createDataFrame([("c2",), ("c3",)], "customer_id string"),
+        AS_OF, "r2",
+    ), 120)
+    assert r.rows_published == 0
+    with open(tmp_path / "gold" / "_metadata" / "run-r2.json") as f:
+        assert json.load(f)["rows_deleted"] == 2
+    gold = ManagedTable(spark, str(tmp_path / "gold"), keys=["customer_id", "as_of_date"])
+    assert set(_features(gold)) == {"c1"}
+
+
 def test_diff_versions_feeds_incremental_update(spark, tmp_path):
     # The changed-keys feed can come FROM the table itself: diff the
     # silver snapshots after a CDC merge, scope gold recompute to those

@@ -5,6 +5,7 @@ labels → training snapshot → latest-features export.
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from ecom_churn_lakehouse_spark.pipelines import (
     bronze_ingest,
@@ -287,6 +288,64 @@ def test_all_invalid_silver_batch_into_existing_table(spark, gated_lake, tmp_pat
     assert s.rows_published == 0 and s.rows_rejected == 2
     assert s.metadata["row_count"] == 0 and s.metadata["ok"]
     assert sorted(silver.read().collect(), key=str) == before
+
+
+def _part_files(path):
+    import os
+
+    return [f for f in os.listdir(path) if f.startswith("part-")]
+
+
+def test_persisted_shuffle_coalesces_to_its_data(spark, engine_width, tmp_path):
+    # the session lets AQE coalesce a cached plan's final shuffle like
+    # any other: 15,000 rows in 1,500 groups are one small partition,
+    # not one file per shuffle partition.
+    out = str(tmp_path / "agg")
+    agg = (
+        spark.range(15000)
+        .groupBy((F.col("id") % 1500).alias("k"))
+        .agg(F.count("*").alias("n"))
+        .persist()
+    )
+    try:
+        agg.write.parquet(out)
+    finally:
+        agg.unpersist()
+    assert len(_part_files(out)) <= 2 < engine_width
+    assert spark.read.parquet(out).count() == 1500
+
+
+def test_gold_and_labels_commit_few_files_at_engine_width(
+    spark, gated_lake, engine_width, tmp_path
+):
+    # gold and labels publish a persisted frame; every version (a first
+    # publish, then a MERGE into the existing table) holds a file or
+    # two, not one per shuffle partition.
+    for stage, path in ((gold_features, "gold"), (label_snapshot, "labels")):
+        table = ManagedTable(spark, str(tmp_path / path), keys=[])
+        for as_of in (AS_OF, "2025-04-15"):
+            stage(spark, gated_lake["silver"], table.path, as_of, "w-" + as_of)
+            assert len(_part_files(table._committed_dir())) <= 2, (path, as_of)
+
+
+def test_cached_plan_coalescing_changes_no_value(spark, gated_lake, engine_width, tmp_path):
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    stamps = ["_gold_ts", "_labels_ts"]
+    prev = spark.conf.get(key)
+    published = {}
+    try:
+        for flag in ("false", "true"):
+            spark.conf.set(key, flag)
+            for stage, path in ((gold_features, "gold"), (label_snapshot, "labels")):
+                out = str(tmp_path / f"{path}-{flag}")
+                stage(spark, gated_lake["silver"], out, AS_OF, "same-run")
+                rows = ManagedTable(spark, out, keys=[]).read().drop(*stamps)
+                published[path, flag] = sorted(rows.collect(), key=str)
+    finally:
+        spark.conf.set(key, prev)
+    for path in ("gold", "labels"):
+        assert published[path, "true"] == published[path, "false"]
+        assert published[path, "true"]
 
 
 @pytest.mark.parametrize("column", ["_feature_version", "_label_horizon_days"])

@@ -9,6 +9,13 @@ whole-stage codegen — and flags smells:
 - row-at-a-time Python (BatchEvalPython) in the plan
 
 Usage: python tools/audit_plans.py [sf_dir] [query ...]
+       python tools/audit_plans.py --dump <tag> <suffix> <sf_dir> <query> [query ...]
+
+``--dump`` writes each named query's ``formatted`` plan at ``sf_dir``
+to ``plans/<tag>/<query>_<suffix>.txt`` instead. These committed plan
+files back every plan-shape claim in OPTIMIZATION_r12.md (before/after
+Exchange counts, join strategies, PushedFilters, Python-eval nodes;
+``plans/r12`` was dumped at sf0.1).
 """
 
 from __future__ import annotations
@@ -17,7 +24,8 @@ import re
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def unpartitioned_windows(plan: str) -> int:
@@ -85,7 +93,27 @@ def audit(plan: str) -> dict:
     }
 
 
+def formatted(spark, df) -> str:
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)
+
+
+def dump(spark, qs, tag: str, suffix: str, sf_dir: str, names: list[str]) -> int:
+    out_dir = os.path.join(ROOT, "plans", tag)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        plan = formatted(spark, qs[name](spark, sf_dir))
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan)
+        print(f"wrote {path} ({len(plan)} bytes)")
+    return 0
+
+
 def main() -> int:
+    dumping = sys.argv[1:2] == ["--dump"]
+    if dumping and (len(sys.argv) < 6 or not os.path.isdir(sys.argv[4])):
+        raise SystemExit(__doc__)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
@@ -94,7 +122,9 @@ def main() -> int:
 
     spark = get_spark("plan-audit", extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    if dumping:
+        tag, suffix, sf_dir, *names = sys.argv[2:]
+        return dump(spark, registry.queries(), tag, suffix, sf_dir, names)
 
     entries = registry._REGISTRY
     smells = 0
@@ -105,7 +135,7 @@ def main() -> int:
         if name == "stream_tumbling_daily":
             continue  # streaming: plan forms at runtime
         try:
-            plan = fn(spark, sf_dir)._jdf.queryExecution().explainString(mode)
+            plan = formatted(spark, fn(spark, sf_dir))
         except Exception as e:  # noqa: BLE001
             print(f"{name:32} ERROR {e}")
             smells += 1
