@@ -110,6 +110,7 @@ class DQReport:
         return {
             "row_count": self.row_count,
             "ok": self.ok,
+            "rows_deleted": self.rows_deleted,
             "checks": [vars(r) for r in self.results],
         }
 

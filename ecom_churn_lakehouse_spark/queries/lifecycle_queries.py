@@ -84,8 +84,8 @@ WHERE order_id % 7 <> 0
     "(full-outer coalesce + delete filter). Source-wins, "
     "delete-over-update, and absent-key-tombstone semantics all "
     "pinned by value. The MERGE itself is the engine's snapshot "
-    "full-outer publish (HEAD-pointer emulation here; real Delta "
-    "protocol when delta-spark is present — same call sites).",
+    "full-outer publish, committed by claiming the next Delta log "
+    "version (_delta_log/{v:020d}.json, put-if-absent).",
 )
 def q_merge_upsert_state(spark, sf_dir):
     t = _run_merges(spark, sf_dir)
@@ -117,11 +117,12 @@ WHERE order_id % 7 = 0
     "version_change_feed",
     _CHANGE_FEED_SQL,
     doc="Time travel + change-data-feed, oracle-verified: after the "
-    "same three MERGEs, diff_versions() between the two RETAINED "
-    "snapshots (post-batch-2 vs HEAD) must emit exactly the delete "
-    "feed of the tombstone batch — every 7th key that existed in the "
-    "pre-delete state, nothing else. Pins snapshot retention "
-    "(keep-last-2), version ordering, and the full-outer null-safe "
+    "same three MERGEs, diff_versions() between the two retained "
+    "log versions (1, after batch 2, vs 2, the newest) must emit "
+    "exactly the delete feed of the tombstone batch — every 7th key "
+    "that existed in the pre-delete state, nothing else. Pins "
+    "retention (the last two versions' snapshot dirs), version "
+    "ordering, and the full-outer null-safe "
     "payload diff in one hash (ManagedTable.diff_versions; the "
     "incremental gold pipeline consumes this exact feed).",
 )

@@ -1,12 +1,11 @@
 """SparkSession factory with a scale-aware default profile.
 
 Re-expresses the reference's session builder
-(``/root/reference/src/common/spark.py:5-11``) which only wires the
-Delta extension. Our profile additionally turns on the Catalyst/AQE
-features a 100 TB deployment relies on; Delta is optional (gated on
-the ``delta-spark`` package being importable) because the engine's
-mutable-table layer has a parquet fallback
-(:mod:`ecom_churn_lakehouse_spark.sources.managed_table`).
+(``/root/reference/src/common/spark.py:5-11``), which only wires the
+Delta extension. This engine needs no extension: its mutable tables
+(:mod:`ecom_churn_lakehouse_spark.sources.managed_table`) write and
+read the Delta log themselves over plain parquet. The profile instead
+turns on the Catalyst/AQE features a 100 TB deployment relies on.
 """
 
 from __future__ import annotations
@@ -14,14 +13,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-try:  # delta-spark is optional; parquet fallback otherwise
-    from delta import configure_spark_with_delta_pip  # type: ignore
-
-    HAVE_DELTA = True
-except Exception:  # pragma: no cover - depends on environment
-    configure_spark_with_delta_pip = None
-    HAVE_DELTA = False
 
 #: Defaults chosen for correctness-at-scale, not just local runs:
 #: - AQE on: runtime shuffle-partition coalescing + skew-join splitting
@@ -84,16 +75,6 @@ def get_spark(
     conf = dict(_DEFAULT_CONF)
     if extra_conf:
         conf.update(extra_conf)
-    if HAVE_DELTA:
-        conf.setdefault(
-            "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-        )
-        conf.setdefault(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
     for k, v in conf.items():
         builder = builder.config(k, v)
-    if HAVE_DELTA and configure_spark_with_delta_pip is not None:
-        builder = configure_spark_with_delta_pip(builder)
     return builder.getOrCreate()

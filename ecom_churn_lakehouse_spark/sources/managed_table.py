@@ -1,34 +1,36 @@
-"""Mutable keyed tables: Delta when available, parquet emulation otherwise.
+"""Mutable keyed tables on parquet, committed through a Delta log.
 
 Re-expresses the reference's table layer (SURVEY.md §2.1): append sinks
 (S4/S5), overwrite (S6), keyed MERGE upsert (S7,
 ``orders_bronze_to_silver.py:184-195`` et al.), existence probe (S9).
 
-This environment has no delta-spark, so the default backend emulates
-the semantics over plain parquet:
+A table directory is laid out as a Delta table, and its transaction log
+is the only record of what is committed:
 
-- ``merge`` = source-wins upsert: new table = source ∪ (current
-  ⟕anti source on keys). Equivalent to Delta's
+- ``_delta_log/{v:020d}.json`` IS the commit of version ``v``: one JSON
+  action per line (commitInfo; protocol and metaData when they change;
+  a ``remove`` for every file active at ``v - 1``; an ``add`` for every
+  new file). A writer claims ``v`` by ``os.link``-ing a complete action
+  file onto that name — the filesystem's atomic put-if-absent, the one
+  primitive the Delta protocol asks of its log store. Concurrent
+  writers race for ``v``; a loser re-applies its change on top of the
+  winner's state and retries (optimistic concurrency, serializable
+  outcome — the two-thread racing tests in
+  tests/test_managed_table.py).
+- Each commit writes a full snapshot dir ``v-{v:08d}-{uuid}``, so
+  ``merge`` is a source-wins upsert: new snapshot = source ∪ (current
+  ⟕anti source on keys). That equals Delta's
   ``whenMatchedUpdateAll().whenNotMatchedInsertAll()`` for sources
-  that are unique per key (enforced by a key probe observed on the
-  staged write, like the DQ gates, and checked before the claim).
-- Writes stage a snapshot dir, then CLAIM the next commit sequence by
-  creating ``_commits/{seq}.commit`` with O_CREAT|O_EXCL — the
-  filesystem's put-if-absent CAS, the same coordination primitive as
-  the Delta transaction log. Concurrent writers race for the seq;
-  losers re-read the winner's snapshot, re-apply, and retry
-  (optimistic concurrency, serializable outcome — proven by the
-  two-thread racing-MERGE test in tests/test_managed_table.py). A
-  tiny ``_HEAD`` pointer file is atomically replaced after the claim
-  for readers (read-committed with at most a claim-to-swap lag).
-- Each commit records the table schema in its ``_delta_log`` metaData,
-  taken from the staged frame; reads pass it to the parquet reader, so
-  neither a commit nor a read opens data files to learn the schema.
-  Every publish is one Spark write plus driver-side bookkeeping.
+  unique per key, which a key probe observed on the staged write
+  enforces (like the DQ gates, it is checked before the claim).
+- ``read(version)`` replays the log (from the newest checkpoint) to
+  ``version`` and scans that version's snapshot dir with the schema its
+  commit logged, so a read launches no Spark job. The dirs of the last
+  two versions are retained for time travel.
+- Every ``checkpoint_interval``-th commit also writes the protocol's
+  checkpoint parquet and ``_last_checkpoint`` pointer.
 
-On a production cluster with delta-spark installed, ``HAVE_DELTA``
-routes every operation to the real thing (ACID log, data skipping,
-OPTIMIZE); the emulation keeps semantics testable anywhere.
+Every publish is one Spark write plus driver-side bookkeeping.
 """
 
 from __future__ import annotations
@@ -51,14 +53,12 @@ from ecom_churn_lakehouse_spark.dq.checks import (
     DQReport,
     observe_checks,
     report_from_observation,
-    run_checks,
 )
-from ecom_churn_lakehouse_spark.session import HAVE_DELTA
+from ecom_churn_lakehouse_spark.logging_util import log_event
 
 __all__ = ["ManagedTable"]
 
-_HEAD = "_HEAD"
-_COMMITS = "_commits"
+_LOG = "_delta_log"
 #: Delta-protocol checkpoint pointer file (literal name per spec).
 _LAST_CKPT = "_last_checkpoint"
 
@@ -79,22 +79,24 @@ def _nullable(dt: T.DataType) -> T.DataType:
     return dt
 
 
-class _Staged(NamedTuple):
-    """A staged snapshot dir and the schema a parquet read of it yields:
-    the written frame's, every field nullable, partition columns last."""
+class _Snapshot(NamedTuple):
+    """A snapshot dir (staged or committed) and the schema a parquet
+    read of it yields: the written frame's, every field nullable,
+    partition columns last."""
 
     path: str
     schema: T.StructType
 
+    def scan(self, spark: SparkSession) -> DataFrame:
+        # The directory, not the add-file list: a dir is one path to
+        # list on the driver, while more than
+        # parallelPartitionDiscovery.threshold (32) file paths start a
+        # listing job.
+        return spark.read.schema(self.schema).parquet(self.path)
+
 
 class ManagedTable:
     """A keyed, mutable table at a filesystem path."""
-
-    #: which commit-protocol implementation this process runs:
-    #: "delta" (real Delta protocol via delta-spark) or
-    #: "head-pointer-parquet" (the emulation) — recorded so CI output
-    #: states which backend the managed-table suite exercised.
-    BACKEND = "delta" if HAVE_DELTA else "head-pointer-parquet"
 
     def __init__(
         self,
@@ -112,157 +114,96 @@ class ManagedTable:
         #: replay is O(commits since checkpoint), not O(all commits).
         self.checkpoint_interval = int(checkpoint_interval)
 
+    # ------------------------------------------------------------- log
+
+    def _log_versions(self) -> list[int]:
+        """Committed versions, ascending: the ``{v:020d}.json`` files in
+        ``_delta_log``."""
+        try:
+            names = os.listdir(os.path.join(self.path, _LOG))
+        except FileNotFoundError:
+            return []
+        return sorted(
+            int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()
+        )
+
+    def _latest_version(self) -> int:
+        """The newest committed version (-1 for an empty table)."""
+        return (self._log_versions() or [-1])[-1]
+
+    def _actions(self, version: int):
+        """The actions of commit ``version``, one dict per log line."""
+        with open(os.path.join(self.path, _LOG, f"{version:020d}.json")) as f:
+            for line in f:
+                if line.strip():
+                    yield json.loads(line)
+
+    def _commit_info(self, version: int) -> dict | None:
+        """The commitInfo action of ``version`` (None once unlogged)."""
+        try:
+            return next(
+                (a["commitInfo"] for a in self._actions(version) if "commitInfo" in a),
+                None,
+            )
+        except FileNotFoundError:
+            return None
+
     # ------------------------------------------------------------ probes
 
     def exists(self) -> bool:
-        """S9 existence probe (DeltaTable.isDeltaTable analogue)."""
-        if HAVE_DELTA:
-            from delta.tables import DeltaTable  # type: ignore
-
-            return DeltaTable.isDeltaTable(self.spark, self.path)
-        return os.path.exists(os.path.join(self.path, _HEAD))
+        """S9 existence probe (DeltaTable.isDeltaTable analogue): the
+        log holds a version."""
+        return self._latest_version() >= 0
 
     # ------------------------------------------------------------- reads
 
-    def _head_dir(self) -> str:
-        with open(os.path.join(self.path, _HEAD)) as f:
-            return os.path.join(self.path, f.read().strip())
-
-    def versions(self) -> list[str]:
-        """Snapshot ids on disk, oldest→newest (≤2 under keep-last-2).
-
-        Version names embed a monotone sequence number, so
-        lexicographic order IS commit order — the flat-file analogue of
-        Delta's version counter.
-        """
+    def versions(self) -> list[int]:
+        """Retained versions, oldest→newest: the logged versions whose
+        snapshot dir is still on disk (the last two)."""
         if not os.path.isdir(self.path):
             return []
-        return sorted(d for d in os.listdir(self.path) if d.startswith("v-"))
+        dirs = set(os.listdir(self.path))
+        seqs = {self._version_seq(d) for d in dirs if d.startswith("v-")}
+        return [
+            v
+            for v in self._log_versions()
+            if v in seqs and (self._commit_info(v) or {}).get("snapshot") in dirs
+        ]
 
-    def read(self, version: str | None = None) -> DataFrame:
-        """Read HEAD, or a retained snapshot by id (time travel).
+    def read(self, version: int | None = None) -> DataFrame:
+        """Read ``version`` (the newest by default): replay the log to
+        it, then scan its snapshot dir with the logged schema. Time
+        travel reaches the retained versions (``versions()``)."""
+        return self._snapshot(version).scan(self.spark)
 
-        With delta-spark, ``version`` maps to ``versionAsOf``; the
-        emulation resolves the retained snapshot dir (only the previous
-        commit survives vacuum — a bounded, Delta-retention-like window).
-        """
-        if HAVE_DELTA:
-            reader = self.spark.read.format("delta")
-            if version is not None:
-                reader = reader.option("versionAsOf", version)
-            return reader.load(self.path)
+    def _snapshot(self, version: int | None = None) -> _Snapshot:
+        """The snapshot dir of ``version`` (the newest by default) and
+        the schema in force at it, resolved from the log alone."""
         if version is None:
-            return self._read_snapshot(self._head_dir())
-        target = os.path.join(self.path, version)
-        if not os.path.isdir(target):
+            version = self._latest_version()
+            if version < 0:
+                raise FileNotFoundError(f"no committed version at {self.path}")
+        name = (self._commit_info(version) or {}).get("snapshot")
+        if not name or not os.path.isdir(os.path.join(self.path, name)):
             raise ValueError(
                 f"version {version!r} not retained; available: {self.versions()}"
             )
-        return self._read_snapshot(target)
-
-    def _read_snapshot(
-        self, snapshot: str, spark: SparkSession | None = None
-    ) -> DataFrame:
-        """Scan a snapshot dir with the schema its commit logged; only a
-        snapshot with no log entry (a pre-log table) infers it."""
-        reader = (spark or self.spark).read
-        schema = self._logged_schema(snapshot)
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(snapshot)
-
-    def _logged_schema(self, snapshot: str) -> T.StructType | None:
-        """Schema in the metaData in force at the commit that published
-        ``snapshot`` (None when that commit has no log entry)."""
-        name = os.path.basename(snapshot)
-        seq = self._version_seq(name)
-        log = os.path.join(self.path, "_delta_log", f"{seq:020d}.json")
-        if seq < 0 or not os.path.exists(log):
-            return None
-        meta, active = self.delta_log_state(seq)
-        # an unclaimed orphan dir shares its seq with the winner's entry
-        if meta is None or any(p.split(os.sep, 1)[0] != name for p in active):
-            return None
-        return T.StructType.fromJson(json.loads(meta["schemaString"]))
+        meta, _ = self.delta_log_state(version)
+        return _Snapshot(
+            os.path.join(self.path, name),
+            T.StructType.fromJson(json.loads(meta["schemaString"])),
+        )
 
     # ------------------------------------------------------------ writes
     #
-    # Multi-writer optimistic concurrency (VERDICT r7 directive #4).
-    # The coordination point is a put-if-absent commit LOG, the same
-    # discipline as the Delta protocol's transaction log (one file per
-    # version, creation must be exclusive): a writer stages its
-    # snapshot in a hidden dir, then tries to CLAIM the next sequence
-    # number by creating ``_commits/{seq}.commit`` with O_CREAT|O_EXCL
-    # — the filesystem's atomic compare-and-swap. Exactly one racer
-    # wins a given seq; losers detect the conflict, abandon or restage
-    # against a fresh read, and retry at the next seq
-    # (retry-with-reread). The ``_HEAD`` pointer remains a derived
-    # reader convenience (read-committed with at most a claim-to-swap
-    # lag); WRITERS always resolve their base snapshot from the log so
-    # no committed merge can be overwritten by a stale racer.
+    # Multi-writer optimistic concurrency. A writer captures the base
+    # version, stages its snapshot in a hidden dir built against that
+    # base, and then tries to CLAIM base + 1 by hard-linking its
+    # complete action file onto ``_delta_log/{base + 1:020d}.json``.
+    # Exactly one racer wins a given version; a loser re-applies its
+    # change on top of the winner's version and retries.
 
-    def _claimed_seqs(self) -> list[int]:
-        """Claimed commit sequences in the log, ascending."""
-        cdir = os.path.join(self.path, _COMMITS)
-        seqs = []
-        if os.path.isdir(cdir):
-            for fn in os.listdir(cdir):
-                try:
-                    seqs.append(int(fn.split(".")[0]))
-                except ValueError:
-                    continue
-        return sorted(seqs)
-
-    def _claim_name(self, seq: int) -> str:
-        """Version name recorded by claim ``seq`` ('' if unreadable)."""
-        try:
-            with open(os.path.join(self.path, _COMMITS, f"{seq:08d}.commit")) as f:
-                return f.read().strip()
-        except OSError:
-            return ""
-
-    def _commit_seq(self) -> int:
-        """Highest claimed commit sequence (-1 for an empty table).
-        Falls back to the HEAD name for pre-log tables."""
-        seqs = [-1] + self._claimed_seqs()
-        if self.exists():
-            seqs.append(self._version_seq(os.path.basename(self._head_dir())))
-        return max(seqs)
-
-    def _committed_dir(self) -> str | None:
-        """Resolve the latest COMMITTED snapshot dir from the log —
-        the writer-side read that makes merges serializable.
-
-        Claims are atomic (``_try_publish`` hard-links a fully-written
-        temp file into place, so a commit file is never observed
-        empty, and the snapshot dir is renamed into place BEFORE the
-        claim, so a claimed commit always has its dir). Defensively —
-        for tables written by a pre-fix writer that crashed mid-claim
-        (r8 ADVICE #2) — an unresolvable top claim is waited out
-        briefly and then SKIPPED in favor of the next-highest
-        committed seq instead of blocking the table forever; the
-        abandoned seq stays claimed so no writer ever reuses it."""
-        seqs = self._claimed_seqs()
-        if not seqs:  # pre-log table: HEAD is it
-            return self._head_dir() if self.exists() else None
-        for retries, seq in zip((200, 10, 1), reversed(seqs)):
-            for _ in range(retries):  # top seq: <= ~2 s, normally 1st hit
-                name = self._claim_name(seq)
-                if name and os.path.isdir(os.path.join(self.path, name)):
-                    return os.path.join(self.path, name)
-                time.sleep(0.01)
-        raise RuntimeError(
-            f"no commit at {self.path} resolves to a snapshot "
-            f"(claimed seqs: {seqs[-3:]})"
-        )
-
-    def _read_committed(self, spark: SparkSession | None = None) -> DataFrame:
-        d = self._committed_dir()
-        if d is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        return self._read_snapshot(d, spark)
-
-    def _stage(self, df: DataFrame, partition_by: list[str] | None) -> _Staged:
+    def _stage(self, df: DataFrame, partition_by: list[str] | None) -> _Snapshot:
         """Stage a snapshot in a hidden dir (the WRITE half of a
         commit). Runs the Spark action but publishes nothing — readers
         and the vacuum never touch ``.staged-*`` dirs, so a concurrent
@@ -278,143 +219,119 @@ class ManagedTable:
             [f for f in df.schema.fields if f.name not in parts]
             + [T.StructField(p, df.schema[p].dataType) for p in parts]
         )
-        return _Staged(target, _nullable(schema))
+        return _Snapshot(target, _nullable(schema))
 
-    def _abandon_staged(self, staged: _Staged) -> None:
+    def _abandon_staged(self, staged: _Snapshot) -> None:
         shutil.rmtree(staged.path, ignore_errors=True)
 
     @staticmethod
     def _version_seq(name: str) -> int:
-        """Sequence number embedded in a ``v-{seq}-{uuid}`` name."""
+        """Version number embedded in a ``v-{v:08d}-{uuid}`` name."""
         try:
             return int(name.split("-")[1])
         except (IndexError, ValueError):
             return -1
 
-    def _swap_head(self, version: str) -> None:
-        """Point ``_HEAD`` at ``version`` and vacuum (keep-last-2 on
-        snapshots; keep-last-16 on commit-log files).
-
-        r8 ADVICE #3 hardening — both the keep set and the swap are
-        derived from COMMIT-LOG order, not HEAD order, so a delayed
-        winner of seq N whose swap runs after seq N+1 committed can
-        neither regress HEAD nor rmtree N+1's snapshot:
-
-        - the keep set = the version names in the two HIGHEST commit
-          files (read from the log), plus any snapshot dir whose seq
-          exceeds the top logged seq (a racer that renamed its staged
-          dir but hasn't claimed yet — claims happen after the rename);
-        - HEAD is replaced only if ``version``'s seq is >= the seq of
-          the version HEAD currently names.
-        """
-        seqs = self._claimed_seqs()
-        committed = [(q, n) for q in seqs if (n := self._claim_name(q))]
-        keep = {name for _, name in committed[-2:]} or {version}
-        top_seq = committed[-1][0] if committed else self._version_seq(version)
-        # seq-ordered HEAD swap: never point HEAD at an older commit
-        current_head_seq = -1
-        if self.exists():
-            current_head_seq = self._version_seq(
-                os.path.basename(self._head_dir())
-            )
-        if self._version_seq(version) >= current_head_seq:
-            tmp = os.path.join(self.path, f".head-{uuid.uuid4().hex[:8]}")
-            with open(tmp, "w") as f:
-                f.write(version)
-            os.replace(tmp, os.path.join(self.path, _HEAD))  # atomic swap
-        # Deferred vacuum: retain the immediately-previous committed
-        # snapshot so still-lazy DataFrames from an earlier read()
-        # (Spark re-resolves files at action time) and readers that
-        # grabbed HEAD just before the swap survive this commit; also
-        # retain renamed-but-not-yet-claimed racer dirs (seq >= top:
-        # a racer contending for the CURRENT top seq may still be
-        # between its rename and its claim attempt — only strictly
-        # older unclaimed orphans are garbage).
-        for d in os.listdir(self.path):
-            if (
-                d.startswith("v-")
-                and d not in keep
-                and self._version_seq(d) < top_seq
-            ):
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-        for seq in seqs[:-16]:
-            try:
-                os.remove(os.path.join(self.path, _COMMITS, f"{seq:08d}.commit"))
-            except OSError:
-                pass
-
     def _try_publish(
         self,
-        staged: _Staged,
-        claim_seq: int,
+        staged: _Snapshot,
+        base: int,
         partition_by: list[str] | None = None,
     ) -> bool:
-        """CAS: claim ``claim_seq`` by hard-linking a fully-written
-        temp file into the commit log (``os.link`` fails-if-exists —
-        an atomic put-if-absent with the content already in place, so
-        a crashed writer can never leave an EMPTY commit file blocking
-        the table: r8 ADVICE #2). The staged dir is renamed to its
-        final version name BEFORE the claim, so a claimed commit
-        always resolves to an existing snapshot; a crash between
-        rename and claim leaves only an unclaimed orphan dir that the
-        next vacuum collects. On conflict the rename is undone and
-        False is returned."""
-        os.makedirs(self.path, exist_ok=True)
-        cdir = os.path.join(self.path, _COMMITS)
-        os.makedirs(cdir, exist_ok=True)
-        commit_file = os.path.join(cdir, f"{claim_seq:08d}.commit")
-        if os.path.exists(commit_file):
-            return False  # seq already owned; skip the rename dance
-        version = f"v-{claim_seq:08d}-{uuid.uuid4().hex[:8]}"
-        versioned = os.path.join(self.path, version)
-        os.rename(staged.path, versioned)
-        tmp = os.path.join(self.path, f".claim-{uuid.uuid4().hex[:8]}")
+        """Claim version ``base + 1`` for ``staged``; False if another
+        writer holds it.
+
+        The action file is written in full first (its ``remove`` list is
+        the state at ``base``), then the staged dir is renamed to its
+        version name, then the file is hard-linked onto
+        ``{base + 1:020d}.json``. ``os.link`` fails if the name exists,
+        so the claim is an atomic put-if-absent and a claimed version is
+        complete the moment it exists. On conflict the rename is undone.
+        A crash between the rename and the claim leaves an unclaimed
+        ``v-*`` orphan, which a later commit's vacuum collects.
+        """
+        version = base + 1
+        ldir = os.path.join(self.path, _LOG)
+        os.makedirs(ldir, exist_ok=True)
+        meta, active = self.delta_log_state(base)
+        name = f"v-{version:08d}-{uuid.uuid4().hex[:8]}"
+        adds = self._delta_files(staged.path, name)
+        actions = self._commit_actions(
+            name, meta, active, adds, staged.schema, partition_by
+        )
+        tmp = os.path.join(ldir, f".tmp-{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as f:
-            f.write(version)
+            f.writelines(json.dumps(a, separators=(",", ":")) + "\n" for a in actions)
+        versioned = os.path.join(self.path, name)
         try:
-            os.link(tmp, commit_file)  # atomic CAS, content in place
+            os.rename(staged.path, versioned)
+            os.link(tmp, os.path.join(ldir, f"{version:020d}.json"))
         except FileExistsError:
-            os.rename(versioned, staged.path)  # lost the race for this seq
+            os.rename(versioned, staged.path)  # lost the race for this version
             return False
         finally:
             os.remove(tmp)
-        self._write_delta_log(claim_seq, versioned, staged.schema, partition_by)
-        self._swap_head(version)
+        live = [*active, *(a["path"] for a in adds)]
+        self._vacuum(version, {p.split("/", 1)[0] for p in live})
+        if (
+            self.checkpoint_interval > 0
+            and version > 0
+            and version % self.checkpoint_interval == 0
+        ):
+            # Checkpointing is a read-path optimization only: a failed
+            # checkpoint (pyarrow import/IO error) must never abort an
+            # already-durable commit; skipping it merely costs replay
+            # time (r9 ADVICE #3).
+            try:
+                self._write_checkpoint(version)
+            except Exception as exc:  # pragma: no cover - env-specific
+                log_event(
+                    "checkpoint_skipped",
+                    table=self.path,
+                    version=version,
+                    error=f"{type(exc).__name__}: {exc}",
+                )
         return True
 
-    # --------------------------------------------- delta-log emulation
-    #
-    # VERDICT r8 directive #6: the put-if-absent commit machinery above
-    # is structurally the Delta commit protocol; mirror each commit as
-    # the actual ``_delta_log/{version:020d}.json`` action file
-    # (protocol / metaData / add / remove / commitInfo, one JSON per
-    # line — the open Delta transaction-log format, cf. the reference's
-    # delta-spark MERGE publish at
-    # ``orders_bronze_to_silver.py:184-195``) so the table directory is
-    # readable by any Delta client if one becomes installable. The
-    # ``_commits`` CAS log stays authoritative for the emulation; the
-    # delta log is a faithful derived mirror (written by the claim
-    # winner immediately after the claim, before the HEAD swap).
+    def _vacuum(self, version: int, keep: set[str]) -> None:
+        """After claiming ``version``, delete every older snapshot dir
+        not in ``keep`` (the dirs holding a file active at ``version``
+        or the version before it). That retains two versions for time
+        travel and lets a lazily held read() survive one more commit; a
+        delayed writer never deletes a newer commit's dir (only lower
+        versions go), and unclaimed older orphans are collected.
+        ``.staged-*``, ``_delta_log/`` and ``_metadata/`` are never
+        touched."""
+        for d in os.listdir(self.path):
+            if d.startswith("v-") and d not in keep and self._version_seq(d) < version:
+                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
-    def _delta_files(self, versioned: str) -> list[dict]:
-        """Data files of a snapshot dir as Delta ``add``-action dicts
-        (paths relative to the TABLE root, partitionValues parsed from
-        hive-style path segments)."""
+    # ---------------------------------------------------- delta protocol
+    #
+    # Each commit is the actual ``_delta_log/{version:020d}.json`` action
+    # file (protocol / metaData / add / remove / commitInfo, one JSON per
+    # line — the open Delta transaction-log format, cf. the reference's
+    # Delta MERGE publish at ``orders_bronze_to_silver.py:184-195``).
+
+    def _delta_files(self, staged: str, name: str) -> list[dict]:
+        """Data files of a staged dir as Delta ``add``-action dicts for
+        the snapshot dir ``name`` (paths relative to the TABLE root,
+        partitionValues parsed from hive-style path segments)."""
         adds = []
-        for root, _, files in os.walk(versioned):
+        for root, _, files in os.walk(staged):
+            rel_root = os.path.relpath(root, staged)
             for f in sorted(files):
                 if not f.endswith(".parquet"):
                     continue
                 full = os.path.join(root, f)
-                rel = os.path.relpath(full, self.path)
                 pvals = {
                     seg.split("=", 1)[0]: seg.split("=", 1)[1]
-                    for seg in os.path.relpath(root, versioned).split(os.sep)
+                    for seg in rel_root.split(os.sep)
                     if "=" in seg
                 }
                 adds.append(
                     {
-                        "path": rel,
+                        "path": os.path.normpath(os.path.join(name, rel_root, f)),
                         "partitionValues": pvals,
                         "size": os.path.getsize(full),
                         "modificationTime": int(os.path.getmtime(full) * 1000),
@@ -439,7 +356,7 @@ class ManagedTable:
         checkpoint some other writer left behind). Pass explicitly to
         override either way.
         """
-        ldir = os.path.join(self.path, "_delta_log")
+        ldir = os.path.join(self.path, _LOG)
         meta: dict | None = None
         active: dict[str, dict] = {}
         if not os.path.isdir(ldir):
@@ -461,111 +378,58 @@ class ManagedTable:
                         ckpt_v = v
         if ckpt_v >= 0:
             meta, active = self._read_checkpoint(ckpt_v)
-        for fn in sorted(os.listdir(ldir)):
-            if not fn.endswith(".json") or fn == _LAST_CKPT:
-                continue
-            v = int(fn.split(".")[0])
+        for v in self._log_versions():
             if v <= ckpt_v:
                 continue
             if upto_version is not None and v > upto_version:
                 break
-            with open(os.path.join(ldir, fn)) as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "metaData" in action:
-                        meta = action["metaData"]
-                    elif "add" in action:
-                        active[action["add"]["path"]] = action["add"]
-                    elif "remove" in action:
-                        active.pop(action["remove"]["path"], None)
+            for action in self._actions(v):
+                if "metaData" in action:
+                    meta = action["metaData"]
+                elif "add" in action:
+                    active[action["add"]["path"]] = action["add"]
+                elif "remove" in action:
+                    active.pop(action["remove"]["path"], None)
         return meta, active
-
-    def read_via_delta_log(self, upto_version: int | None = None) -> DataFrame:
-        """Read the table THROUGH the Delta transaction log — resolve
-        the active file set by log replay (``delta_log_state``) and
-        scan exactly those parquet files, the way a real Delta reader
-        does. With ``upto_version`` this is log-replay time travel.
-        Exists so the log mirror is load-bearing, not decorative: the
-        golden tests assert read_via_delta_log() ≡ read()."""
-        if HAVE_DELTA:
-            reader = self.spark.read.format("delta")
-            if upto_version is not None:
-                reader = reader.option("versionAsOf", str(upto_version))
-            return reader.load(self.path)
-        meta, active = self.delta_log_state(upto_version)
-        if meta is None or not active:
-            raise FileNotFoundError(
-                f"no delta log (or empty table) at {self.path}"
-            )
-        # basePath: partition values parse from the dirs under the root
-        return (
-            self.spark.read.schema(
-                T.StructType.fromJson(json.loads(meta["schemaString"]))
-            )
-            .option("basePath", self.path)
-            .parquet(*[os.path.join(self.path, p) for p in sorted(active)])
-        )
 
     def history(self) -> list[dict]:
         """Commit history, newest first — the DESCRIBE HISTORY
         analogue: one dict per commit with version, timestamp,
         operation, and operationParameters from the log's commitInfo
         actions."""
-        if HAVE_DELTA:
-            from delta.tables import DeltaTable  # type: ignore
-
-            return [
-                r.asDict()
-                for r in DeltaTable.forPath(self.spark, self.path)
-                .history()
-                .collect()
-            ]
-        ldir = os.path.join(self.path, "_delta_log")
         out: list[dict] = []
-        if not os.path.isdir(ldir):
-            return out
-        for fn in sorted(os.listdir(ldir), reverse=True):
-            if not fn.endswith(".json"):
-                continue
-            with open(os.path.join(ldir, fn)) as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "commitInfo" in action:
-                        info = action["commitInfo"]
-                        out.append(
-                            {
-                                "version": int(fn.split(".")[0]),
-                                "timestamp": info.get("timestamp"),
-                                "operation": info.get("operation"),
-                                "operationParameters": info.get(
-                                    "operationParameters", {}
-                                ),
-                            }
-                        )
-                        break
+        for v in reversed(self._log_versions()):
+            info = self._commit_info(v)
+            if info is not None:
+                out.append(
+                    {
+                        "version": v,
+                        "timestamp": info.get("timestamp"),
+                        "operation": info.get("operation"),
+                        "operationParameters": info.get("operationParameters", {}),
+                    }
+                )
         return out
 
-    def _write_delta_log(
+    def _commit_actions(
         self,
-        version: int,
-        versioned: str,
+        name: str,
+        prev_meta: dict | None,
+        prev_active: dict[str, dict],
+        adds: list[dict],
         schema: T.StructType,
         partition_by: list[str] | None,
-    ) -> None:
-        """Emit the Delta-protocol action file for commit ``version``.
+    ) -> list[dict]:
+        """The Delta-protocol actions of a commit of snapshot dir
+        ``name`` on top of the state (``prev_meta``, ``prev_active``).
 
-        Our emulation rewrites the full snapshot per commit, so every
-        commit is remove(all previous active files) + add(all new) —
-        the same shape delta-spark writes for an overwrite txn; the
-        MERGE semantics live in how the new snapshot was BUILT.
-        ``schema`` (the staged one) goes into metaData when it changes.
+        Every commit writes a full snapshot, so it is remove(all
+        previously active files) + add(all new) — the same shape a
+        Delta writer commits for an overwrite; the MERGE semantics live
+        in how the snapshot was BUILT. ``schema`` (the staged one) goes
+        into metaData when it changes. commitInfo names the snapshot
+        dir, so a commit with no data file still resolves to its dir.
         """
-        ldir = os.path.join(self.path, "_delta_log")
-        os.makedirs(ldir, exist_ok=True)
         now_ms = int(time.time() * 1000)
         actions: list[dict] = [
             {
@@ -576,14 +440,14 @@ class ManagedTable:
                         "mode": "Overwrite",
                         "partitionBy": json.dumps(partition_by or []),
                     },
-                    "engineInfo": "ecom-churn-lakehouse-spark emulation",
+                    "engineInfo": "ecom-churn-lakehouse-spark",
                     "txnId": str(uuid.uuid4()),
+                    "snapshot": name,
                 }
             }
         ]
-        prev_meta, prev_active = self.delta_log_state(version - 1)
         schema_string = schema.json()
-        if version == 0 or prev_meta is None:
+        if prev_meta is None:
             actions.append(
                 {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
             )
@@ -624,30 +488,8 @@ class ManagedTable:
                     }
                 }
             )
-        actions.extend({"add": a} for a in self._delta_files(versioned))
-        tmp = os.path.join(ldir, f".tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            for a in actions:
-                f.write(json.dumps(a, separators=(",", ":")) + "\n")
-        os.rename(tmp, os.path.join(ldir, f"{version:020d}.json"))
-        if (
-            self.checkpoint_interval > 0
-            and version > 0
-            and version % self.checkpoint_interval == 0
-        ):
-            # Checkpointing is a read-path optimization only: a failed
-            # checkpoint (pyarrow import/IO error) must never abort an
-            # already-durable commit — the JSON action file is written
-            # and the seq is claimed; skipping the checkpoint merely
-            # costs replay time (r9 ADVICE #3).
-            try:
-                self._write_checkpoint(version)
-            except Exception as exc:  # pragma: no cover - env-specific
-                print(
-                    "managed_table: checkpoint write skipped for "
-                    f"v{version} ({type(exc).__name__}: {exc}); commit "
-                    "is durable, replay falls back to JSON log"
-                )
+        actions.extend({"add": a} for a in adds)
+        return actions
 
     # Delta checkpoint parquet schema: one action per row, exactly one
     # of the struct columns non-null — the protocol's checkpoint file
@@ -655,7 +497,7 @@ class ManagedTable:
     # columns are always all-null in our snapshots (a checkpoint only
     # carries LIVE state; removes matter for incremental readers and
     # txn for idempotent streaming writers), but strict Delta clients
-    # (delta-rs, delta-spark) expect the columns to exist and the
+    # (delta-rs, Delta Lake on Spark) expect the columns to exist and the
     # metaData struct to carry format/name/description/configuration —
     # r9 ADVICE #1.
     def _ckpt_schema(self):
@@ -749,7 +591,7 @@ class ManagedTable:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        ldir = os.path.join(self.path, "_delta_log")
+        ldir = os.path.join(self.path, _LOG)
         meta, active = self.delta_log_state(version)
         nulls = {"add": None, "remove": None, "txn": None}
         fmt = meta.get("format") or {"provider": "parquet", "options": {}}
@@ -809,8 +651,7 @@ class ManagedTable:
         with open(ptr_tmp, "w") as f:
             json.dump({"version": version, "size": len(rows)}, f)
         os.rename(ptr_tmp, os.path.join(ldir, _LAST_CKPT))
-        # Keep only the 2 newest checkpoints (mirror of the
-        # keep-last-16 commit-log policy): older ones are fully
+        # Keep only the 2 newest checkpoints: older ones are fully
         # superseded, and the _delta_log JSON commits are retained in
         # full, so a replay target below the retained checkpoint window
         # still reconstructs via raw-JSON replay from zero. r9 ADVICE
@@ -834,7 +675,7 @@ class ManagedTable:
         — the reader half of the protocol's checkpoint fast path."""
         import pyarrow.parquet as pq
 
-        ldir = os.path.join(self.path, "_delta_log")
+        ldir = os.path.join(self.path, _LOG)
         table = pq.read_table(
             os.path.join(ldir, f"{version:020d}.checkpoint.parquet")
         )
@@ -877,7 +718,7 @@ class ManagedTable:
         """Contents of ``_last_checkpoint`` (or None before the first
         checkpoint) — surfaced so tests and operators can assert the
         protocol cadence."""
-        p = os.path.join(self.path, "_delta_log", _LAST_CKPT)
+        p = os.path.join(self.path, _LOG, _LAST_CKPT)
         if not os.path.exists(p):
             return None
         with open(p) as f:
@@ -891,31 +732,33 @@ class ManagedTable:
         max_retries: int = 8,
         gate=None,
     ) -> None:
-        """Optimistic-concurrency publish loop: stage ``build()``,
-        CAS-claim the next seq, and on conflict re-read + re-apply
+        """Optimistic-concurrency publish loop: capture the base
+        version, stage ``build(base)``, and claim ``base + 1``. On
+        conflict, re-build against the new base
         (``base_dependent=True``, the MERGE/append path — the frame
-        must be recomputed against the winner's snapshot) or just
-        re-claim (``base_dependent=False``, blind overwrite).
+        derives from the state at ``base``) or just re-claim with an
+        action file rebuilt against the new base
+        (``base_dependent=False``, blind overwrite).
 
         ``gate()`` runs after each stage and before its claim; if it
         raises, the staged dir is abandoned and nothing is committed."""
-        staged: _Staged | None = None
+        staged: _Snapshot | None = None
         try:
             for _ in range(max_retries + 1):
-                base_seq = self._commit_seq()
+                # captured BEFORE the build reads its base state: a
+                # commit that lands while we stage makes the claim fail
+                base = self._latest_version()
                 if (
                     staged is None
                     or base_dependent
-                    or not os.path.isdir(staged.path)  # vacuumed mid-race
+                    or not os.path.isdir(staged.path)
                 ):
                     if staged is not None:
                         self._abandon_staged(staged)
-                    staged = self._stage(build(), partition_by)
+                    staged = self._stage(build(base), partition_by)
                     if gate is not None:
                         gate()
-                    # a commit that landed while we were staging makes
-                    # our frame stale — claim only our read's successor
-                if self._try_publish(staged, base_seq + 1, partition_by):
+                if self._try_publish(staged, base, partition_by):
                     staged = None
                     return
         finally:
@@ -923,23 +766,13 @@ class ManagedTable:
                 self._abandon_staged(staged)
         raise RuntimeError(
             f"managed-table commit contention: {max_retries + 1} attempts "
-            f"lost the CAS at {self.path}"
+            f"lost the log claim at {self.path}"
         )
 
-    def _commit(self, df: DataFrame, partition_by: list[str] | None) -> None:
-        """Base-independent publish (the frame does not derive from the
-        table's current state)."""
-        self._occ_publish(lambda: df, partition_by, base_dependent=False)
-
     def overwrite(self, df: DataFrame, partition_by: list[str] | None = None) -> None:
-        """S6 initial/overwrite publish."""
-        if HAVE_DELTA:
-            w = df.write.format("delta").mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.save(self.path)
-            return
-        self._commit(df, partition_by)
+        """S6 initial/overwrite publish (the frame does not derive from
+        the table's current state)."""
+        self._occ_publish(lambda base: df, partition_by, base_dependent=False)
 
     def append(
         self,
@@ -955,23 +788,15 @@ class ManagedTable:
         column mismatch fails loudly, which is the contract-enforcing
         default for pipeline sinks.
         """
-        if HAVE_DELTA:
-            w = df.write.format("delta").mode("append")
-            if evolve_schema:
-                w = w.option("mergeSchema", "true")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.save(self.path)
-            return
-        if not self.exists():
-            self._commit(df, partition_by)
-        else:
-            self._occ_publish(
-                lambda: self._read_committed().unionByName(
-                    df, allowMissingColumns=evolve_schema
-                ),
-                partition_by,
+
+        def build(base: int) -> DataFrame:
+            if base < 0:
+                return df
+            return self._snapshot(base).scan(self.spark).unionByName(
+                df, allowMissingColumns=evolve_schema
             )
+
+        self._occ_publish(build, partition_by)
 
     def merge(
         self,
@@ -997,8 +822,8 @@ class ManagedTable:
         and checked before the commit claim. A non-unique source or a
         failing critical check raises
         :class:`~ecom_churn_lakehouse_spark.dq.checks.DQGateFailure`;
-        the staged snapshot is abandoned, so ``_HEAD`` and the commit
-        log are untouched, exactly like a failed Delta transaction.
+        the staged snapshot is abandoned, so the log and the snapshot
+        dirs are untouched, exactly like a failed Delta transaction.
 
         ``delete_col`` names a boolean column in ``source`` marking CDC
         tombstones: matched target rows are DELETED instead of updated,
@@ -1029,74 +854,24 @@ class ManagedTable:
                 return df
             return df.filter(~F.col(delete_col)).drop(delete_col)
 
-        def passed(found: dict, report: DQReport) -> DQReport:
-            if found["dup_rows"]:
-                raise DQGateFailure(f"merge source not unique on keys {self.keys}")
-            if not report.ok:
-                raise DQGateFailure(
-                    "critical DQ failures: "
-                    f"{[r.name for r in report.blocking_failures]}"
-                )
-            report.rows_deleted = found.get("tombstones", 0)
-            return report
-
-        if HAVE_DELTA:
-            # Delta MERGE is its own transaction; observation semantics
-            # across the MERGE command aren't guaranteed, so gate first.
-            upserts = upserts_of(source)
-            report = passed(
-                keyed.agg(*probe).first().asDict(), run_checks(upserts, checks)
-            )
-            if not self.exists():
-                self.overwrite(upserts)
-                return report
-            from delta.tables import DeltaTable  # type: ignore
-
-            if evolve_schema:
-                self.spark.conf.set(
-                    "spark.databricks.delta.schema.autoMerge.enabled", "true"
-                )
-            cond = " AND ".join(f"t.{k} = s.{k}" for k in self.keys)
-            tgt = DeltaTable.forPath(self.spark, self.path).alias("t")
-            if delete_col is None:
-                (
-                    tgt.merge(source.alias("s"), cond)
-                    .whenMatchedUpdateAll()
-                    .whenNotMatchedInsertAll()
-                    .execute()
-                )
-            else:
-                data_cols = [c for c in source.columns if c != delete_col]
-                sets = {c: f"s.{c}" for c in data_cols}
-                (
-                    tgt.merge(source.alias("s"), cond)
-                    .whenMatchedDelete(condition=f"s.{delete_col} = true")
-                    .whenMatchedUpdate(set=sets)
-                    .whenNotMatchedInsert(
-                        condition=f"s.{delete_col} = false", values=sets
-                    )
-                    .execute()
-                )
-            return report
-
         attempt: dict = {}
 
-        def build() -> DataFrame:
+        def build(base: int) -> DataFrame:
             # Fresh Observations per OCC attempt: an observation
             # reports only the first action that consumes it. The probe
             # sits under the tombstone filter, so it sees every row.
             attempt["probe"] = Observation()
             upserts = upserts_of(keyed.observe(attempt["probe"], *probe))
             observed, attempt["checks"] = observe_checks(upserts, row_checks)
-            if self._committed_dir() is None:  # first publish
+            if base < 0:  # first publish
                 return observed
-            # Re-resolved from the commit LOG on every (re)try: a racer
-            # that lost the CAS re-applies its upserts on top of the
-            # winner's snapshot — serializable outcome, no lost update.
-            # Read through the source's session: an observation fires
-            # only for actions of its own session, and a foreachBatch
-            # source lives in a cloned one.
-            current = self._read_committed(source.sparkSession)
+            # The state AT the base this attempt claims on top of: a
+            # racer that lost the claim re-applies its upserts on top
+            # of the winner's version — serializable outcome, no lost
+            # update. Read through the source's session: an
+            # observation fires only for actions of its own session,
+            # and a foreachBatch source lives in a cloned one.
+            current = self._snapshot(base).scan(source.sparkSession)
             # Deletes and upserts alike displace the current row for
             # their key; only upserts come back in.
             kept = current.join(
@@ -1113,10 +888,17 @@ class ManagedTable:
             return kept.unionByName(observed.select(*current.columns))
 
         def gate() -> None:
-            attempt["report"] = passed(
-                attempt["probe"].get,
-                report_from_observation(attempt["checks"], checks),
-            )
+            found = attempt["probe"].get
+            if found["dup_rows"]:
+                raise DQGateFailure(f"merge source not unique on keys {self.keys}")
+            report = report_from_observation(attempt["checks"], checks)
+            if not report.ok:
+                raise DQGateFailure(
+                    "critical DQ failures: "
+                    f"{[r.name for r in report.blocking_failures]}"
+                )
+            report.rows_deleted = found.get("tombstones", 0)
+            attempt["report"] = report
 
         self._occ_publish(build, None, gate=gate)
         return attempt["report"]
@@ -1133,12 +915,12 @@ class ManagedTable:
         """Small-file compaction (Delta OPTIMIZE analogue).
 
         Streaming/incremental sinks accrete many small files; at scale
-        the scan cost becomes file-open-bound, not byte-bound. With
-        delta-spark this routes to the real ``OPTIMIZE`` (Z-order when
-        ``sort_by`` given). The emulation rewrites the snapshot:
+        the scan cost becomes file-open-bound, not byte-bound. The
+        compaction rewrites the snapshot:
 
-        - ``target_files`` defaults to snapshot-bytes / 128 MiB — the
-          file size object stores and parquet readers want;
+        - ``target_files`` defaults to the logged snapshot bytes /
+          128 MiB — the file size object stores and parquet readers
+          want;
         - without ``sort_by``: ``coalesce`` (narrow — no shuffle, tasks
           just concatenate input splits);
         - with ``sort_by``: range-partition + sort-within-partitions,
@@ -1149,30 +931,14 @@ class ManagedTable:
           over the given columns (sources/zorder.py), so file stats
           prune on EVERY listed dimension, not just the first.
         """
-        if HAVE_DELTA:
-            from delta.tables import DeltaTable  # type: ignore
-
-            opt = DeltaTable.forPath(self.spark, self.path).optimize()
-            if zorder_by:
-                opt.executeZOrderBy(*zorder_by)
-            elif sort_by:
-                opt.executeZOrderBy(*sort_by)
-            else:
-                opt.executeCompaction()
-            return
-        head = self._head_dir()
         if target_files is None:
-            total = sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _, files in os.walk(head)
-                for f in files
-                if f.endswith(".parquet")
-            )
+            total = sum(a["size"] for a in self.delta_log_state()[1].values())
             target_files = max(1, math.ceil(total / target_file_bytes))
-        def build() -> DataFrame:
+
+        def build(base: int) -> DataFrame:
             # Re-read per OCC attempt: a data commit racing the
             # compaction must not be clobbered by a stale rewrite.
-            df = self._read_committed()
+            df = self._snapshot(base).scan(self.spark)
             if zorder_by:
                 # True multi-dimensional clustering: range-partition +
                 # sort by the Morton code so every file's bounding box
@@ -1202,7 +968,7 @@ class ManagedTable:
         self._occ_publish(build, None)
 
     def diff_versions(
-        self, old: str, new: str | None = None
+        self, old: int, new: int | None = None
     ) -> DataFrame:
         """Row-level changes between two snapshots — the change-data-
         feed analogue over time travel: one row per key whose presence
@@ -1253,9 +1019,6 @@ class ManagedTable:
         )
 
     def file_count(self) -> int:
-        """Data files in the current snapshot (compaction observability)."""
-        if HAVE_DELTA:
-            return len(
-                self.spark.read.format("delta").load(self.path).inputFiles()
-            )
-        return len(self.read().inputFiles())
+        """Data files in the current snapshot (compaction observability),
+        counted from the log's active ``add`` actions."""
+        return len(self.delta_log_state()[1])

@@ -1,8 +1,7 @@
 """Z-order (Morton) clustering for multi-dimensional data skipping.
 
-The reference's Delta layer gets this from ``OPTIMIZE ... ZORDER BY``
-(managed_table.compact routes there when delta-spark is present). This
-module is the engine-native fallback: a pure-expression Morton code —
+The reference's Delta layer gets this from ``OPTIMIZE ... ZORDER BY``.
+This module is the engine-native form: a pure-expression Morton code —
 every step is a built-in column function (JVM codegen, no UDF) — used
 by ``ManagedTable.compact(zorder_by=...)`` to cluster flat parquet.
 

@@ -186,7 +186,7 @@ def test_all_erased_update_returns_at_engine_width(spark, tmp_path, engine_width
         spark.createDataFrame([("c2",), ("c3",)], "customer_id string"),
         AS_OF, "r2",
     ), 120)
-    assert r.rows_published == 0
+    assert r.rows_published == 0 and r.metadata["rows_deleted"] == 2
     with open(tmp_path / "gold" / "_metadata" / "run-r2.json") as f:
         assert json.load(f)["rows_deleted"] == 2
     gold = ManagedTable(spark, str(tmp_path / "gold"), keys=["customer_id", "as_of_date"])

@@ -9,6 +9,19 @@ from pyspark.sql import functions as F
 from ecom_churn_lakehouse_spark.sources.managed_table import ManagedTable
 
 
+def _table_files(path):
+    """Everything a failed or losing publish must leave alone: every
+    log file with its bytes, and the snapshot dirs (no ``.staged-*``
+    leftovers)."""
+    ldir = os.path.join(path, "_delta_log")
+    log = {}
+    for fn in sorted(os.listdir(ldir)):
+        with open(os.path.join(ldir, fn), "rb") as f:
+            log[fn] = f.read()
+    dirs = sorted(d for d in os.listdir(path) if d.startswith(("v-", ".staged-")))
+    return log, dirs
+
+
 def test_exists_probe(spark, tmp_path):
     t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
     assert not t.exists()
@@ -48,22 +61,16 @@ def test_append_accumulates(spark, tmp_path):
 
 def test_merge_rejects_nonunique_source_into_existing_table(spark, tmp_path):
     """The key probe rides the staged write; a failed probe must still
-    leave ``_HEAD``, ``_commits/`` and the snapshots untouched."""
+    leave the log and the snapshot dirs byte for byte untouched."""
     path = str(tmp_path / "t")
     t = ManagedTable(spark, path, keys=["k"])
     t.merge(spark.createDataFrame([Row(k="a", v=1), Row(k="b", v=2)]))
-
-    def state():
-        with open(os.path.join(path, "_HEAD")) as f:
-            head = f.read()
-        return head, sorted(os.listdir(os.path.join(path, "_commits"))), t.versions()
-
-    before = state()
+    before = _table_files(path)
     with pytest.raises(ValueError, match="not unique"):
         t.merge(
             spark.createDataFrame([Row(k="b", v=3), Row(k="c", v=4), Row(k="c", v=5)])
         )
-    assert state() == before
+    assert _table_files(path) == before
     assert not [d for d in os.listdir(path) if d.startswith(".staged-")]
     assert {r["k"]: r["v"] for r in t.read().collect()} == {"a": 1, "b": 2}
 
@@ -88,7 +95,9 @@ def test_merge_of_empty_and_all_tombstone_sources_returns(spark, tmp_path, withi
 
 def test_publish_job_budget(spark, tmp_path):
     """A publish is one staged write plus driver bookkeeping, and a read
-    launches no job: schema and key probe ride the write or the log."""
+    launches no job: schema and key probe ride the write or the log, and
+    a read scans the snapshot dir, so a snapshot wider than Spark's
+    32-path parallel-listing threshold lists on the driver too."""
     sc = spark.sparkContext
 
     def jobs(fn):
@@ -109,6 +118,14 @@ def test_publish_job_budget(spark, tmp_path):
     a.append(src)
     assert jobs(lambda: a.append(src)) == 1
     assert a.read().count() == 4
+    w = ManagedTable(spark, str(tmp_path / "w"), keys=["id"])
+    w.overwrite(spark.range(4000).repartition(40))
+    assert w.file_count() == 40
+    w.append(spark.range(4000, 4010))
+    assert w.versions() == [0, 1]
+    assert jobs(w.read) == 0
+    assert jobs(lambda: w.read(w.versions()[0])) == 0
+    assert w.read(0).count() == 4000 and w.read().count() == 4010
 
 
 @pytest.mark.parametrize("layout", ["partitioned", "nested_non_nullable"])
@@ -142,11 +159,10 @@ def test_logged_schema_is_the_parquet_schema(spark, tmp_path, layout):
         t.merge(df)
         t.merge(spark.createDataFrame([(2, (6,), [], {})], schema))
     meta, _ = t.delta_log_state()
-    inferred = spark.read.parquet(t._head_dir()).schema
+    inferred = spark.read.parquet(t._snapshot().path).schema
     assert meta["schemaString"] == inferred.json()
     assert t.read().schema == inferred
-    assert t.read_via_delta_log().schema == inferred
-    assert sorted(t.read_via_delta_log().collect()) == sorted(t.read().collect())
+    assert t.read(t.versions()[0]).schema == inferred
     assert t.read().count() == 2
 
 
@@ -220,11 +236,11 @@ def test_time_travel_reads_previous_snapshot(spark, tmp_path):
     t.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
     t.merge(spark.createDataFrame([(1, "A"), (2, "b")], "k int, v string"))
     vs = t.versions()
-    assert len(vs) == 2 and vs == sorted(vs)  # monotone ids, oldest first
+    assert vs == [0, 1]  # log versions, oldest first
     assert {r["v"] for r in t.read(version=vs[0]).collect()} == {"a"}
     assert {r["v"] for r in t.read().collect()} == {"A", "b"}
     with pytest.raises(ValueError, match="not retained"):
-        t.read(version="v-99999999-nope")
+        t.read(version=99)
 
 
 # ------------------------------------------------------- gated publish
@@ -450,37 +466,26 @@ def test_zorder_value_handles_nulls_negatives_and_constants(spark):
         with_zorder_value(df, ["x", "y"], bits=32)
 
 
-def test_backend_is_recorded(capsys):
-    """CI output records which commit protocol the suite exercised:
-    real Delta when delta-spark is installed (pyproject extra
-    ``delta``), the head-pointer-parquet emulation otherwise. Every
-    ManagedTable code path branches on session.HAVE_DELTA, so the
-    SAME suite covers both backends — this pins which one ran."""
-    from ecom_churn_lakehouse_spark.session import HAVE_DELTA
-    from ecom_churn_lakehouse_spark.sources.managed_table import ManagedTable
-
-    assert ManagedTable.BACKEND == (
-        "delta" if HAVE_DELTA else "head-pointer-parquet"
-    )
-    print(f"\nmanaged-table backend under test: {ManagedTable.BACKEND}")
-
-
 # ----------------------- multi-writer optimistic concurrency (r7 dir. #4)
 
 
 def test_cas_claim_is_exclusive(spark, tmp_path):
-    """The put-if-absent commit file is the CAS: a second claim on the
-    same sequence number must fail without touching anything."""
-    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
+    """The put-if-absent log file is the CAS: a second claim on the
+    same version must fail without touching anything."""
+    path = str(tmp_path / "t")
+    t = ManagedTable(spark, path, keys=["k"])
     t.overwrite(spark.createDataFrame([Row(k="a", v=1)]))
-    seq = t._commit_seq()
+    base = t._latest_version()
     s1 = t._stage(spark.createDataFrame([Row(k="a", v=2)]), None)
     s2 = t._stage(spark.createDataFrame([Row(k="a", v=3)]), None)
-    assert t._try_publish(s1, seq + 1) is True
-    assert t._try_publish(s2, seq + 1) is False  # conflict detected
+    assert t._try_publish(s1, base) is True
+    before = _table_files(path)
+    assert t._try_publish(s2, base) is False  # conflict detected
+    assert _table_files(path) == before  # only s2's staged dir is back
+    assert os.path.isdir(s2.path)
     t._abandon_staged(s2)
     assert {r["v"] for r in t.read().collect()} == {2}
-    assert t._commit_seq() == seq + 1
+    assert t._latest_version() == base + 1
 
 
 def test_concurrent_merges_serializable_no_lost_update(spark, tmp_path):
@@ -524,8 +529,8 @@ def test_concurrent_merges_serializable_no_lost_update(spark, tmp_path):
     # overlap keys: one writer owns both (serializable order, not a mix)
     assert rows[3]["who"] == rows[4]["who"]
     assert rows[3]["who"] in {"w1", "w2"}
-    # the log recorded three distinct committed sequences
-    assert t._commit_seq() == 2
+    # the log recorded three distinct committed versions
+    assert t._latest_version() == 2
 
 
 def test_append_racing_append_keeps_both(spark, tmp_path):
@@ -562,78 +567,98 @@ def test_append_racing_append_keeps_both(spark, tmp_path):
 # ------------------------------------------ r8 ADVICE OCC hardening
 
 
-def test_abandoned_empty_claim_does_not_block_table(spark, tmp_path):
-    """r8 ADVICE #2: a pre-fix writer that crashed between creating its
-    commit file and writing the version name left an EMPTY claim at the
-    top sequence. Readers must fall back to the highest RESOLVABLE
-    commit instead of spinning-and-raising forever, and new writers
-    must keep committing (claiming past the dangling seq)."""
-    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
+def test_crash_between_rename_and_claim_leaves_collected_orphan(spark, tmp_path):
+    """A writer that crashed after renaming its staged dir to a version
+    name but before claiming the log file leaves an unclaimed ``v-*``
+    orphan. Readers never see it, the table keeps committing (the
+    orphan's version number is claimed by the next writer), and a
+    later commit's vacuum removes it."""
+    path = str(tmp_path / "t")
+    t = ManagedTable(spark, path, keys=["k"])
     t.overwrite(spark.createDataFrame([Row(k="a", v=1)]))
-    seq = t._commit_seq()
-    # simulate the crashed pre-fix writer: empty claim at seq+1
-    crash = os.path.join(str(tmp_path / "t"), "_commits", f"{seq + 1:08d}.commit")
-    open(crash, "w").close()
-    assert {r["v"] for r in t._read_committed().collect()} == {1}
-    t.merge(spark.createDataFrame([Row(k="a", v=2)]))  # claims seq+2
+    base = t._latest_version()
+    staged = t._stage(spark.createDataFrame([Row(k="a", v=9)]), None)
+    orphan = os.path.join(path, f"v-{base + 1:08d}-crashed")
+    os.rename(staged.path, orphan)
+    assert {r["v"] for r in t.read().collect()} == {1}
+    t.merge(spark.createDataFrame([Row(k="a", v=2)]))  # claims base+1
     assert {r["v"] for r in t.read().collect()} == {2}
-    assert t._commit_seq() == seq + 2
+    assert t._latest_version() == base + 1
+    assert os.path.isdir(orphan)  # same version number: not older yet
+    t.merge(spark.createDataFrame([Row(k="a", v=3)]))  # claims base+2
+    assert not os.path.exists(orphan)
+    assert t.versions() == [base + 1, base + 2]
+    assert {r["v"] for r in t.read().collect()} == {3}
 
 
-def test_claim_file_is_never_observed_empty(spark, tmp_path):
+def test_claim_file_is_never_observed_empty(spark, tmp_path, monkeypatch):
     """The commit claim is an os.link of a fully-written temp file —
-    content is in place atomically with the claim itself."""
-    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
+    content is in place atomically with the claim itself: no rename or
+    replace ever lands on a version file, and every version file is a
+    complete action list naming its snapshot dir."""
+    import json
+
+    path = str(tmp_path / "t")
+    ldir = os.path.join(path, "_delta_log")
+    landed = []
+    for fn in ("rename", "replace"):
+        real = getattr(os, fn)
+
+        def spy(src, dst, *a, _real=real, **kw):
+            landed.append(str(dst))
+            return _real(src, dst, *a, **kw)
+
+        monkeypatch.setattr(os, fn, spy)
+    t = ManagedTable(spark, path, keys=["k"])
     t.overwrite(spark.createDataFrame([Row(k="a", v=1)]))
     t.merge(spark.createDataFrame([Row(k="a", v=2)]))
-    cdir = os.path.join(str(tmp_path / "t"), "_commits")
-    for fn in os.listdir(cdir):
-        with open(os.path.join(cdir, fn)) as f:
-            name = f.read().strip()
-        assert name.startswith("v-"), (fn, name)
+    assert not [d for d in landed if d.startswith(ldir) and d.endswith(".json")]
+    names = sorted(os.listdir(ldir))
+    assert names == [f"{v:020d}.json" for v in (0, 1)]  # no temp file left
+    for fn in names:
+        with open(os.path.join(ldir, fn)) as f:
+            actions = [json.loads(line) for line in f]
+        assert actions[0]["commitInfo"]["snapshot"].startswith("v-"), fn
+        assert any("add" in a for a in actions), fn
 
 
-def test_delayed_head_swap_cannot_regress_or_destroy(spark, tmp_path):
-    """r8 ADVICE #3: a delayed winner of seq N whose _swap_head runs
-    AFTER seq N+1 committed must neither regress HEAD to N nor rmtree
-    N+1's committed snapshot (keep set and swap order both derive from
-    the commit log, not from HEAD)."""
-    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
-    t.overwrite(spark.createDataFrame([Row(k="a", v=1)]))  # seq 0
-    t.merge(spark.createDataFrame([Row(k="a", v=2)]))      # seq 1
-    old_version = None
-    cdir = os.path.join(str(tmp_path / "t"), "_commits")
-    with open(os.path.join(cdir, "00000000.commit")) as f:
-        old_version = f.read().strip()
-    newest = os.path.basename(t._head_dir())
-    # replay the delayed swap of the OLD commit
-    t._swap_head(old_version)
-    assert os.path.basename(t._head_dir()) == newest  # no regression
-    assert os.path.isdir(os.path.join(str(tmp_path / "t"), newest))
-    assert {r["v"] for r in t.read().collect()} == {2}
+def test_delayed_vacuum_cannot_destroy_newer_commit(spark, tmp_path):
+    """r8 ADVICE #3: the vacuum of a delayed writer of version N that
+    runs AFTER N+1 committed must not rmtree N+1's snapshot: it only
+    deletes dirs of versions below N, whatever its keep set."""
+    path = str(tmp_path / "t")
+    t = ManagedTable(spark, path, keys=["k"])
+    t.overwrite(spark.createDataFrame([Row(k="a", v=1)]))  # v0
+    t.merge(spark.createDataFrame([Row(k="a", v=2)]))      # v1
+    t.merge(spark.createDataFrame([Row(k="a", v=3)]))      # v2
+    retained = _table_files(path)
+    # replay v1's vacuum late, with nothing to keep
+    t._vacuum(1, set())
+    assert _table_files(path) == retained
+    assert t.versions() == [1, 2]
+    assert {r["v"] for r in t.read().collect()} == {3}
 
 
 def test_merge_checks_read_seq_before_snapshot(spark, tmp_path):
-    """r8 ADVICE #1: a gated merge must capture base_seq BEFORE
-    resolving its base snapshot. A commit interleaved inside the
-    snapshot read then forces a CAS conflict + retry, so both merges
-    survive."""
+    """r8 ADVICE #1: a gated merge must capture its base version BEFORE
+    resolving its base snapshot. A commit interleaved right after the
+    snapshot is resolved then forces a claim conflict + retry, so both
+    merges survive."""
     path = str(tmp_path / "t")
     t = ManagedTable(spark, path, keys=["k"])
     t.overwrite(spark.createDataFrame([Row(k="base", v=0)]))
     other = ManagedTable(spark, path, keys=["k"])
     fired = {"done": False}
-    real_read = t._read_committed
+    real_snapshot = t._snapshot
 
-    def read_with_interleaved_commit(*args):
-        base = real_read(*args)
-        base.count()  # materialize BEFORE the interleaved commit lands
+    def snapshot_then_interleaved_commit(*args):
+        snap = real_snapshot(*args)  # resolved BEFORE the commit lands
         if not fired["done"]:
             fired["done"] = True
             other.merge(spark.createDataFrame([Row(k="intruder", v=9)]))
-        return real_read(*args)
+        return snap
 
-    t._read_committed = read_with_interleaved_commit
+    t._snapshot = snapshot_then_interleaved_commit
     checks = [{"name": "v_not_null", "type": "not_null",
                "columns": ["v"], "severity": "critical"}]
     report = t.merge(
@@ -707,35 +732,39 @@ def test_delta_log_partitioned_add_actions(spark, tmp_path):
 
 def test_delta_log_replay_matches_time_travel(spark, tmp_path):
     """Replaying the log up to version N reconstructs the SAME file set
-    the retained snapshot for commit N holds (the emulation's
-    versionAsOf)."""
+    the retained snapshot dir of version N holds (versionAsOf)."""
     path = str(tmp_path / "t")
     t = ManagedTable(spark, path, keys=["k"])
     t.overwrite(spark.createDataFrame([Row(k="a", v=1)]))
     t.merge(spark.createDataFrame([Row(k="a", v=2)]))
     _, active_v0 = t.delta_log_state(0)
-    prev_version = [v for v in t.versions()
-                    if v != os.path.basename(t._head_dir())]
-    assert len(prev_version) == 1
+    assert t.versions() == [0, 1]
+    assert {os.path.dirname(p) for p in active_v0} == {
+        os.path.basename(t._snapshot(0).path)
+    }
     old = {r["v"] for r in spark.read.parquet(
         *[os.path.join(path, p) for p in active_v0]).collect()}
     assert old == {1}
-    assert {r["v"] for r in t.read(prev_version[0]).collect()} == {1}
+    assert {r["v"] for r in t.read(0).collect()} == {1}
 
 
-def test_read_via_delta_log_matches_read(spark, tmp_path):
-    """The delta-log mirror is load-bearing: resolving the active file
-    set by log replay and scanning exactly those files reproduces the
-    table, including after MERGE rewrites."""
+def test_read_replays_the_log_to_any_retained_version(spark, tmp_path):
+    """The log is the only record of the table: read() resolves the
+    newest version from it, read(N) replays it to N, and each scans
+    exactly the files the log has active at that version, including
+    after MERGE rewrites."""
     t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
     t.overwrite(spark.createDataFrame([Row(k="a", v=1), Row(k="b", v=2)]))
     t.merge(spark.createDataFrame([Row(k="a", v=10), Row(k="c", v=3)]))
-    via_log = {r["k"]: r["v"] for r in t.read_via_delta_log().collect()}
-    via_head = {r["k"]: r["v"] for r in t.read().collect()}
-    assert via_log == via_head == {"a": 10, "b": 2, "c": 3}
+    assert {r["k"]: r["v"] for r in t.read().collect()} == {"a": 10, "b": 2, "c": 3}
     # log-replay time travel to version 0
-    v0 = {r["k"]: r["v"] for r in t.read_via_delta_log(0).collect()}
+    v0 = {r["k"]: r["v"] for r in t.read(0).collect()}
     assert v0 == {"a": 1, "b": 2}
+    for version in (0, 1):
+        _, active = t.delta_log_state(version)
+        files = {os.path.relpath(f.replace("file:", ""), t.path)
+                 for f in t.read(version).inputFiles()}
+        assert files == set(active)
 
 
 def test_history_lists_commits_newest_first(spark, tmp_path):
@@ -783,7 +812,7 @@ def test_checkpoint_replay_survives_pruned_json_log(spark, tmp_path):
     ldir = os.path.join(path, "_delta_log")
     for v in (0, 1, 2):
         os.remove(os.path.join(ldir, f"{v:020d}.json"))
-    got = {r["k"]: r["v"] for r in t.read_via_delta_log().collect()}
+    got = {r["k"]: r["v"] for r in t.read().collect()}
     assert got == {"a": 10, "b": 2, "c": 3, "d": 4}
     meta, active = t.delta_log_state()
     assert meta is not None and active
@@ -807,7 +836,7 @@ def test_checkpoint_time_travel_consistency(spark, tmp_path):
     ).delta_log_state(1)
     assert active1 == active1_js and meta1 == meta1_js
     # target at a RETAINED version reads through the checkpoint path
-    got2 = {r["k"]: r["v"] for r in t.read_via_delta_log(2).collect()}
+    got2 = {r["k"]: r["v"] for r in t.read(2).collect()}
     assert got2 == {"a": 9, "b": 2}
     # target AT the checkpoint: both paths must agree exactly
     meta_ck, active_ck = t._read_checkpoint(2)
@@ -876,7 +905,7 @@ def test_interval_zero_reader_is_genuinely_checkpoint_free(
     meta, active = raw.delta_log_state(2)
     assert meta is not None and len(active) >= 1
     got = {
-        r["k"]: r["v"] for r in raw.read_via_delta_log(2).collect()
+        r["k"]: r["v"] for r in raw.read(2).collect()
     }
     assert got == {"a": 9, "b": 2}
     # the checkpoint-consulting path, by contrast, does open the file
@@ -888,12 +917,14 @@ def test_interval_zero_reader_is_genuinely_checkpoint_free(
 
 
 def test_failed_checkpoint_write_does_not_abort_commit(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, capsys
 ):
     """r9 ADVICE #3: the checkpoint is a read-path optimization — a
     crash inside _write_checkpoint must not abort the publish (the
-    JSON commit is already durable); HEAD still advances and the data
-    is readable."""
+    JSON commit is already durable); the version still lands, the data
+    is readable, and the skip is a structured ``checkpoint_skipped``
+    event on stderr."""
+    import json
     path = str(tmp_path / "t")
     t = ManagedTable(spark, path, keys=["k"], checkpoint_interval=1)
 
@@ -910,8 +941,13 @@ def test_failed_checkpoint_write_does_not_abort_commit(
     assert not any(
         fn.endswith(".checkpoint.parquet") for fn in os.listdir(ldir)
     )
-    got_log = {r["k"]: r["v"] for r in t.read_via_delta_log().collect()}
+    got_log = {r["k"]: r["v"] for r in t.read(1).collect()}
     assert got_log == got
+    events = [json.loads(line) for line in capsys.readouterr().err.splitlines()
+              if line.startswith("{")]
+    skipped = [e for e in events if e["event"] == "checkpoint_skipped"]
+    assert [(e["table"], e["version"]) for e in skipped] == [(path, 1)]
+    assert skipped[0]["error"] == "OSError: disk full while writing checkpoint"
 
 
 def test_old_checkpoints_are_pruned_keep_last_two(spark, tmp_path):

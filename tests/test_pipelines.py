@@ -204,13 +204,17 @@ def test_gold_gated_publish(spark, gated_lake, tmp_path):
 
 
 def _table_state(path):
-    """Everything a failed publish must leave alone: HEAD, the commit
-    log, and the snapshot dirs (no ``.staged-*`` leftovers)."""
+    """Everything a failed publish must leave alone: every log file
+    with its bytes, and the snapshot dirs (no ``.staged-*``
+    leftovers)."""
     import os
 
-    with open(os.path.join(path, "_HEAD")) as f:
-        head = f.read()
-    return head, sorted(os.listdir(os.path.join(path, "_commits"))), sorted(
+    ldir = os.path.join(path, "_delta_log")
+    log = {}
+    for fn in sorted(os.listdir(ldir)):
+        with open(os.path.join(ldir, fn), "rb") as f:
+            log[fn] = f.read()
+    return log, sorted(
         d for d in os.listdir(path) if d.startswith((".staged-", "v-"))
     )
 
@@ -325,7 +329,7 @@ def test_gold_and_labels_commit_few_files_at_engine_width(
         table = ManagedTable(spark, str(tmp_path / path), keys=[])
         for as_of in (AS_OF, "2025-04-15"):
             stage(spark, gated_lake["silver"], table.path, as_of, "w-" + as_of)
-            assert len(_part_files(table._committed_dir())) <= 2, (path, as_of)
+            assert len(_part_files(table._snapshot().path)) <= 2, (path, as_of)
 
 
 def test_cached_plan_coalescing_changes_no_value(spark, gated_lake, engine_width, tmp_path):
@@ -414,7 +418,7 @@ def test_bronze_partition_pruning(spark, tmp_path):
     assert "ingest_date" in scan, plan
 
     # 2. Behavioral proof: corrupt every OTHER partition's directory.
-    head = table._head_dir()
+    head = table._snapshot().path
     poisoned = 0
     for d in sorted(os.listdir(head)):
         if d.startswith("ingest_date=") and not d.endswith("2025-01-01"):
