@@ -28,6 +28,12 @@ from pyspark.sql import SparkSession
 #:   both local[32] and a real cluster.
 #: - Arrow on: every pandas interchange (Pandas UDFs, toPandas for
 #:   bounded metadata) goes through Arrow batches.
+#: - Tungsten page 1 MB (the least Spark's own sizing picks): unset,
+#:   it scales with heap / cores (16 MB on a 2 GB, 4-core driver), and
+#:   each broadcast hash relation on non-long keys holds a whole page
+#:   until the ContextCleaner drops it after an old-generation GC, so
+#:   the heap a run keeps swung by 16 MB per relation with GC timing.
+#:   Cost: a task's 8192-page table caps its Tungsten memory at 8 GB.
 _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -36,6 +42,7 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.buffer.pageSize": "1m",
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.files.maxPartitionBytes": "128m",
     "spark.sql.parquet.filterPushdown": "true",
