@@ -4,14 +4,17 @@ from .text import (
     quality_cols,
     token_count_col,
 )
-from .vectors import cosine_similarity, l2_norm, to_double_array
+from .vectors import EMBED_DIM, cosine, dot, norm, sq_dist, to_double_array
 
 __all__ = [
     "token_count_col",
     "quality_cols",
     "lang_guess_col",
     "doc_fingerprint_cols",
-    "cosine_similarity",
-    "l2_norm",
+    "EMBED_DIM",
+    "cosine",
+    "dot",
+    "norm",
+    "sq_dist",
     "to_double_array",
 ]

@@ -1,125 +1,92 @@
-"""Vector column expressions over ``array<float>`` embeddings.
+"""Vector math over ``array<float|double>`` embedding columns.
 
-Native expressions only (``zip_with`` + ``aggregate``): the arithmetic
-runs JVM-side inside codegen, Arrow never ships rows to Python. The
-accumulation is sequential in element order, which makes results
-bit-reproducible across partitionings — and bit-comparable to the
-DuckDB oracle's list functions.
+One spelling: ``dot``, ``norm``, ``cosine`` and ``sq_dist`` each parse
+one SQL expression over column NAMES that folds a statically known
+width ``dim`` as a flat tree — seeded with 0.0, left-associative in
+element order, one ``CAST … AS DOUBLE`` per element. That is the fold
+order of ``aggregate(zip_with(a, b, …), 0.0, …)``, so results are
+bit-reproducible across partitionings and bit-equal to the DuckDB
+oracle's list functions; unlike the lambda spelling, which Spark
+interprets per row, the flat tree compiles in whole-stage codegen.
+
+Width guard: each primitive raises ``VECTOR_WIDTH_MISMATCH`` when
+either array's size is not ``dim`` (a wider vector would otherwise be
+silently truncated); a NULL vector yields NULL. The guard multiplies
+the fold from outside — ``CASE … THEN raise_error … ELSE 1.0 END *
+(fold)``, bit-exact — rather than wrapping it in a conditional
+branch, which subexpression elimination does not enter: the element
+casts shared by a cosine's three dots would be computed again. It is
+the left operand, so it runs even when the fold is NULL, and elements
+are read with ``try_element_at`` so a shorter vector reaches the guard
+instead of an index error.
 """
 
 from __future__ import annotations
 
-import functools as _functools
+import functools
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = [
-    "to_double_array",
-    "dot",
-    "l2_norm",
-    "cosine_similarity",
-    "dot_fixed",
-    "l2_norm_fixed",
-    "cosine_fixed",
-]
+__all__ = ["EMBED_DIM", "to_double_array", "dot", "norm", "cosine", "sq_dist"]
+
+#: Width of the ``embeddings`` fixture vectors.
+EMBED_DIM = 64
 
 
 def to_double_array(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def _fold(a: str, b: str, dim: int, sq_diff: bool = False) -> str:
+    """SQL text of the flat fold: Σ x·y, or Σ (x−y)² with ``sq_diff``."""
 
+    def term(i: int) -> str:
+        x = f"CAST(try_element_at({a}, {i}) AS DOUBLE)"
+        y = f"CAST(try_element_at({b}, {i}) AS DOUBLE)"
+        return f"({x} - {y}) * ({x} - {y})" if sq_diff else f"{x} * {y}"
 
-def l2_norm(v: Column) -> Column:
-    return F.sqrt(dot(v, v))
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity of two double arrays (callers cast first via
-    ``to_double_array`` so float→double widening matches the oracle)."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-# --------------------------------------------------------------------
-# Fixed-dimension flat spellings (r12 optimization round).
-#
-# The HOF spellings above are interpreted per row — lambdas defeat
-# whole-stage codegen, and the optimization-guide §4.1 measurement
-# showed them dominating every exact-rerank stage (3 aggregates ×
-# 64 lambda steps × |candidate pairs|). When the dimension is
-# statically known (the 64-dim embedding fixture, Matryoshka
-# prefixes), the same arithmetic spelled as a flat expression tree
-# code-generates. Bit-identity: the fold order is EXACTLY the HOF
-# fold — acc starts at 0.0 and accumulates left-to-right in element
-# order — so every IEEE intermediate equals the ``aggregate``
-# spelling's and results stay bit-equal to the DuckDB oracle.
-# Elements are cast to double individually (same widening as
-# ``to_double_array`` + multiply, without materializing the
-# intermediate array per row).
-# --------------------------------------------------------------------
-
-
-def _dot_sql(a: str, b: str, dim: int) -> str:
-    """SQL text of the flat dot product: 0.0-seeded, left-associative
-    (the exact ``aggregate`` fold order), one CAST per element."""
-    terms = " + ".join(
-        f"CAST(element_at({a}, {i}) AS DOUBLE)"
-        f" * CAST(element_at({b}, {i}) AS DOUBLE)"
-        for i in range(1, dim + 1)
-    )
+    terms = " + ".join(term(i) for i in range(1, dim + 1))
     return f"(CAST(0.0 AS DOUBLE) + {terms})"
 
 
-def dot_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b, dim))
-    acc = F.lit(0.0)
-    for i in range(1, dim + 1):
-        acc = acc + (
-            F.element_at(a, i).cast("double")
-            * F.element_at(b, i).cast("double")
-        )
-    return acc
+def _guarded(body: str, dim: int, *vecs: str) -> Column:
+    """``body`` times the width guard over the named vectors."""
+    names = list(dict.fromkeys(vecs))
+    bad = " OR ".join(f"array_size({v}) <> {dim}" for v in names)
+    msg = f"VECTOR_WIDTH_MISMATCH: {', '.join(names)} must have {dim} elements"
+    return F.expr(f"CASE WHEN {bad} THEN raise_error('{msg}') ELSE 1.0D END * {body}")
 
 
-def l2_norm_fixed(v: Column | str, dim: int) -> Column:
-    if isinstance(v, str):
-        return F.sqrt(F.expr(_dot_sql(v, v, dim)))
-    return F.sqrt(dot_fixed(v, v, dim))
+# Each primitive is cached: ONE py4j round trip (a single F.expr parse)
+# per distinct call per process, reused by every later query build —
+# the Column-ops construction of one 64-wide cosine measured 1.7 s of
+# py4j round trips (~600 calls) per build. Columns are immutable
+# unresolved expressions, so sharing one across plans is safe (the
+# same contract as a module-level F.col constant).
 
 
-@_functools.lru_cache(maxsize=64)
-def _cosine_fixed_cached(a: str, b: str, dim: int) -> Column:
-    # ONE py4j round trip (a single F.expr parse) per distinct
-    # (a, b, dim) per process, reused across every query build in the
-    # session: the r12 driver-cost breakdown measured the Column-ops
-    # construction of one 64-dim cosine at 1.7 s of py4j round trips
-    # PER QUERY BUILD (~600 calls), paid inside the bench's timed
-    # region on every run. Columns are immutable unresolved
-    # expressions, so sharing one across plans is safe (same contract
-    # as a module-level F.col constant).
-    return F.expr(
-        f"{_dot_sql(a, b, dim)} / "
-        f"(sqrt({_dot_sql(a, a, dim)}) * sqrt({_dot_sql(b, b, dim)}))"
+@functools.lru_cache(maxsize=128)
+def dot(a: str, b: str, dim: int = EMBED_DIM) -> Column:
+    return _guarded(_fold(a, b, dim), dim, a, b)
+
+
+@functools.lru_cache(maxsize=128)
+def norm(v: str, dim: int = EMBED_DIM) -> Column:
+    return _guarded(f"sqrt({_fold(v, v, dim)})", dim, v)
+
+
+@functools.lru_cache(maxsize=128)
+def cosine(a: str, b: str, dim: int = EMBED_DIM) -> Column:
+    return _guarded(
+        f"({_fold(a, b, dim)} / "
+        f"(sqrt({_fold(a, a, dim)}) * sqrt({_fold(b, b, dim)})))",
+        dim,
+        a,
+        b,
     )
 
 
-def cosine_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Flat codegen twin of :func:`cosine_similarity` for
-    statically-known dimension; accepts float or double arrays.
-    Pass column NAMES (not Columns) for the cached fast path — the
-    parsed expression tree is identical either way (0.0-seeded
-    left-associative fold, per-element CAST), so results are
-    bit-equal across the two paths and to the HOF spelling."""
-    if isinstance(a, str) and isinstance(b, str):
-        return _cosine_fixed_cached(a, b, dim)
-    return dot_fixed(a, b, dim) / (
-        l2_norm_fixed(a, dim) * l2_norm_fixed(b, dim)
-    )
+@functools.lru_cache(maxsize=128)
+def sq_dist(a: str, b: str, dim: int = EMBED_DIM) -> Column:
+    return _guarded(_fold(a, b, dim, sq_diff=True), dim, a, b)

@@ -443,7 +443,7 @@ def q_embedding_neardup_pairs(spark, sf_dir):
         F.col("vec_id") < _NEARDUP_PLANES
     ).select(F.col("vec_id").alias("plane_id"), "embedding")
     banded = banded_sign_buckets(corpus, planes, _NEARDUP_ROWS_PER_BAND)
-    return neardup_pairs(banded, corpus, _NEARDUP_THRESHOLD, dim=64)
+    return neardup_pairs(banded, corpus, _NEARDUP_THRESHOLD)
 
 
 # ----------------------------------------- near-dup cluster resolution
@@ -1346,11 +1346,11 @@ def q_embedding_density_clusters(spark, sf_dir):
         F.col("vec_id") < _NEARDUP_PLANES
     ).select(F.col("vec_id").alias("plane_id"), "embedding")
     banded = banded_sign_buckets(corpus, planes, _NEARDUP_ROWS_PER_BAND)
-    pairs = neardup_pairs(
-        banded, corpus, _NEARDUP_THRESHOLD, dim=64
-    ).select(
-        "doc_a", "doc_b"
-    ).localCheckpoint(eager=False)
+    pairs = (
+        neardup_pairs(banded, corpus, _NEARDUP_THRESHOLD)
+        .select("doc_a", "doc_b")
+        .localCheckpoint(eager=False)
+    )
     adj = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
         pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     )

@@ -108,6 +108,12 @@ def _adaptive_band_bits(n: int) -> int:
     return bb
 
 
+class BandWidthError(ValueError):
+    """A band width above the floor asked of a codes frame built at the
+    floor, whose extension columns ``h0..h7`` are literal zeros: every
+    band value would quietly lose its upper bits."""
+
+
 #: Integer CASE chain from __n (corpus count) to band width — spelled
 #: once, valid verbatim in Spark SQL and DuckDB.
 _BB_CASE = (
@@ -286,7 +292,11 @@ def _codes_frame(emb, with_label: bool = False, band_bits: int | None = None):
         F.expr(_word_expr(0)).cast("long").alias("w0"),
         F.expr(_word_expr(1)).cast("long").alias("w1"),
     ]
-    bbcol = F.lit(int(band_bits)).cast("long").alias("__bb")
+    # The metadata lets _spark_bands see, without a job, whether the
+    # extension columns are live.
+    bbcol = F.lit(int(band_bits)).cast("long").alias(
+        "__bb", metadata={"band_bits": int(band_bits)}
+    )
     if band_bits <= _BAND_BITS:
         return emb.select(
             *keep,
@@ -329,10 +339,10 @@ def _spark_bands(codes, band_bits: int | None = None):
     frozen-vs-adaptive parity test); otherwise the ``__bb`` column a
     ``_codes_frame``-built frame carries (adaptive, resolved from the
     corpus count); otherwise derive from COUNT(codes) in-plan (legacy
-    direct callers). NOTE: a frozen width wider than the codes
-    frame's own gate width only sees live extension bits when the
-    codes frame was built with the same ``band_bits`` (the streaming
-    path does exactly that).
+    direct callers). A frozen width above the floor over a codes frame
+    built at the floor raises :class:`BandWidthError` (its extension
+    columns are literal zeros); build the codes frame with the same
+    ``band_bits``, as the streaming path does.
 
     The result is ``localCheckpoint(eager=False)``-ed: every consumer
     self-joins the band frame (q-side ⋈ c-side on (b, band_val)), and
@@ -343,11 +353,20 @@ def _spark_bands(codes, band_bits: int | None = None):
     suffices; the checkpoint materializes the ~40-byte/row proxy once
     (guide §8: decide on small rows, and don't recompute the heavy
     transform per consumer)."""
+    schema = codes.schema
     if band_bits is not None:
-        withbb = (
-            codes.drop("__bb") if "__bb" in codes.columns else codes
-        ).withColumn("__bb", F.lit(int(band_bits)).cast("long"))
-    elif "__bb" in codes.columns:
+        built = (
+            schema["__bb"].metadata.get("band_bits")
+            if "__bb" in schema.names
+            else None
+        )
+        if band_bits > _BAND_BITS and built is not None and built <= _BAND_BITS:
+            raise BandWidthError(
+                f"band_bits={band_bits} over a codes frame built at "
+                f"band_bits={built}: its extension columns h0..h7 are zeros"
+            )
+        withbb = codes.withColumn("__bb", F.lit(int(band_bits)).cast("long"))
+    elif "__bb" in schema.names:
         withbb = codes
     else:
         geom = (
@@ -512,7 +531,7 @@ GROUP BY query_id
     "random embeddings the expected value is the 1/n_labels baseline.",
 )
 def q_knn_label_consensus(spark, sf_dir):
-    from ecom_churn_lakehouse_spark.functions.vectors import cosine_fixed
+    from ecom_churn_lakehouse_spark.functions.vectors import cosine
 
     bands = _spark_bands(_spark_codes(spark, sf_dir))
     cand = (
@@ -544,7 +563,7 @@ def q_knn_label_consensus(spark, sf_dir):
             "neighbor_id",
             "q_label",
             "c_label",
-            cosine_fixed("__qv", "__cv", 64).alias("__sim"),
+            cosine("__qv", "__cv").alias("__sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1072,7 +1091,7 @@ ORDER BY vec_a, vec_b
     "the candidate stream.",
 )
 def q_mutual_knn_graph(spark, sf_dir):
-    from ecom_churn_lakehouse_spark.functions.vectors import cosine_fixed
+    from ecom_churn_lakehouse_spark.functions.vectors import cosine
 
     bands = _spark_bands(_spark_codes(spark, sf_dir))
     cand = (
@@ -1100,7 +1119,7 @@ def q_mutual_knn_graph(spark, sf_dir):
         .select(
             "query_id",
             "neighbor_id",
-            cosine_fixed("__qv", "__cv", 64).alias("__sim"),
+            cosine("__qv", "__cv").alias("__sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1295,7 +1314,7 @@ ORDER BY cluster_id, vec_id
 def _spark_mutual_edges(spark, sf_dir):
     """Mutual-kNN edges (u < v) with exact-micro cosine weights — the
     Spark twin of the ``medges`` CTE."""
-    from ecom_churn_lakehouse_spark.functions.vectors import cosine_fixed
+    from ecom_churn_lakehouse_spark.functions.vectors import cosine
 
     bands = _spark_bands(_spark_codes(spark, sf_dir))
     cand = (
@@ -1325,7 +1344,7 @@ def _spark_mutual_edges(spark, sf_dir):
         .select(
             "query_id",
             "neighbor_id",
-            cosine_fixed("__qv", "__cv", 64).alias("__sim"),
+            cosine("__qv", "__cv").alias("__sim"),
         )
     )
     return _mutual_edges_from_scored(scored)
@@ -1642,7 +1661,7 @@ def _semdedup_apply_batch(spark, base, batch_df, batch_id, band_bits):
     is a batch_id-keyed partial through ``write_once`` (replay
     safety: the idempotent keyed-upsert publish discipline)."""
     from ecom_churn_lakehouse_spark.functions.vectors import (
-        cosine_fixed,
+        cosine,
         to_double_array,
     )
     new_bands = _semdedup_bands_of(batch_df, band_bits)
@@ -1676,7 +1695,7 @@ def _semdedup_apply_batch(spark, base, batch_df, batch_id, band_bits):
             vecs.select(F.col("vec_id").alias("hi"), F.col("ev").alias("__hv")),
             "hi",
         )
-        .select("lo", "hi", cosine_fixed("__lv", "__hv", 64).alias("sim"))
+        .select("lo", "hi", cosine("__lv", "__hv").alias("sim"))
     )
     write_once(scored, f"{base}/pairs/batch_id={batch_id}")
 
@@ -1771,7 +1790,7 @@ ORDER BY query_id
     "candidate-sized.",
 )
 def q_mrr_retrieval_eval(spark, sf_dir):
-    from ecom_churn_lakehouse_spark.functions.vectors import cosine_fixed
+    from ecom_churn_lakehouse_spark.functions.vectors import cosine
 
     bands = _spark_bands(_spark_codes(spark, sf_dir))
     q = bands.filter(F.col("vec_id") % 50 == 0).select(
@@ -1807,7 +1826,7 @@ def q_mrr_retrieval_eval(spark, sf_dir):
             "neighbor_id",
             "qlabel",
             "clabel",
-            cosine_fixed("__qv", "__cv", 64).alias("__sim"),
+            cosine("__qv", "__cv").alias("__sim"),
         )
     )
     topk = scored.withColumn(

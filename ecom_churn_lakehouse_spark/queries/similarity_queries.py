@@ -12,8 +12,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ecom_churn_lakehouse_spark.functions.vectors import (
-    cosine_fixed,
-    dot,
+    cosine,
+    norm,
+    sq_dist,
     to_double_array,
 )
 from ecom_churn_lakehouse_spark.registry import register
@@ -51,11 +52,10 @@ FROM embeddings
 )
 def q_vector_stats(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    v = to_double_array(F.col("embedding"))
     return emb.select(
         "vec_id",
         F.size("embedding").cast("int").alias("dim"),
-        F.round(F.sqrt(dot(v, v)), 6).alias("l2_norm"),
+        F.round(norm("embedding"), 6).alias("l2_norm"),
         "label",
     )
 
@@ -93,7 +93,7 @@ WHERE rn <= 5
 )
 def q_cosine_topk_bruteforce(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
-    return brute_force_topk(emb.filter(F.col("vec_id") < 10), emb, k=5, dim=64)
+    return brute_force_topk(emb.filter(F.col("vec_id") < 10), emb, k=5)
 
 
 # ----------------------------------------------- LSH-bucketed ANN top-k
@@ -189,7 +189,7 @@ def q_ann_ivf_topk(spark, sf_dir):
     centroids = emb.filter(F.col("vec_id") % 37 == 1).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    cells = ivf_assign_cells(emb, centroids, dim=64)
+    cells = ivf_assign_cells(emb, centroids)
     q = cells.filter(F.col("vec_id") % 50 == 0)
     return bucketed_topk(q, cells, emb, k=3)
 
@@ -208,7 +208,7 @@ def q_ann_lsh_topk(spark, sf_dir):
     )
     buckets = hyperplane_lsh_buckets(emb, planes)
     q = buckets.filter(F.col("vec_id") % 50 == 0)
-    return bucketed_topk(q, buckets, emb, k=3, dim=64)
+    return bucketed_topk(q, buckets, emb, k=3)
 
 
 # ------------------------- nearest-centroid assignment (k-means step)
@@ -275,12 +275,11 @@ def q_label_centroid_confusion(spark, sf_dir):
             lambda x: x.getField("c"),
         ).alias("centroid")
     )
-    diff_sq = F.zip_with(v, F.col("centroid"), lambda a, b: (a - b) * (a - b))
     dists = emb.crossJoin(F.broadcast(cent_arr)).select(
         "vec_id",
         "label",
         "c_label",
-        F.aggregate(diff_sq, F.lit(0.0), lambda acc, x: acc + x).alias("d"),
+        sq_dist("embedding", "centroid").alias("d"),
     )
     assigned = dists.groupBy("vec_id", "label").agg(
         F.min(F.struct(F.col("d").alias("d"), F.col("c_label").alias("cl")))
@@ -369,14 +368,13 @@ def q_ann_recall_eval(spark, sf_dir):
     )
     buckets = hyperplane_lsh_buckets(emb, planes)
     q = buckets.filter(F.col("vec_id") % 50 == 0)
-    lsh = bucketed_topk(q, buckets, emb, k=3, dim=64).select(
+    lsh = bucketed_topk(q, buckets, emb, k=3).select(
         "query_id", "neighbor_id", F.lit(1).alias("hit")
     )
     exact = brute_force_topk(
         emb.join(q.select("vec_id"), on="vec_id", how="left_semi"),
         emb,
         k=3,
-        dim=64,
     ).select("query_id", "neighbor_id")
     return (
         exact.join(lsh, on=["query_id", "neighbor_id"], how="left")
@@ -458,7 +456,7 @@ def q_ann_multiprobe_topk(spark, sf_dir):
     q = multiprobe_buckets(
         buckets.filter(F.col("vec_id") % 50 == 0), n_bits=8
     )
-    return bucketed_topk(q, buckets, emb, k=3, dim=64)
+    return bucketed_topk(q, buckets, emb, k=3)
 
 
 # --------------------------------------------- IVF nprobe=2 ANN top-k
@@ -526,7 +524,7 @@ def q_ann_ivf_nprobe_topk(spark, sf_dir):
     centroids = emb.filter(F.col("vec_id") % 37 == 1).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    corpus_cells = ivf_assign_cells(emb, centroids, dim=64)
+    corpus_cells = ivf_assign_cells(emb, centroids)
     query_cells = ivf_assign_cells(
         emb.join(
             emb.filter(F.col("vec_id") % 50 == 0).select("vec_id"),
@@ -535,9 +533,8 @@ def q_ann_ivf_nprobe_topk(spark, sf_dir):
         ),
         centroids,
         nprobe=2,
-        dim=64,
     )
-    return bucketed_topk(query_cells, corpus_cells, emb, k=3, dim=64)
+    return bucketed_topk(query_cells, corpus_cells, emb, k=3)
 
 
 # ------------------------------- contrastive hard-negative mining
@@ -597,7 +594,7 @@ def q_hard_negative_pairs(spark, sf_dir):
         F.col("label").alias("neg_label"),
         to_double_array(F.col("embedding")).alias("__cv"),
     )
-    sim_expr = cosine_fixed("__qv", "__cv", 64)
+    sim_expr = cosine("__qv", "__cv")
     scored = c.join(
         F.broadcast(q),
         (F.col("neg_id") != F.col("query_id"))
@@ -714,7 +711,7 @@ def q_hard_negative_pairs_ann(spark, sf_dir):
         "bucket",
         F.col("__v").alias("__cv"),
     )
-    sim = cosine_fixed("__qv", "__cv", 64)
+    sim = cosine("__qv", "__cv")
     scored = (
         q.join(c, on="bucket")
         .filter(
@@ -872,8 +869,8 @@ FROM deq
     "quantize-dequantize, then the two quality numbers that decide "
     "the bits budget: reconstruction MSE and cosine(original, "
     "dequantized). All native array expressions — map-only, zero "
-    "shuffle, codegen-resident; both engines round half-away-from-"
-    "zero so the quantized grid is identical.",
+    "shuffle, both folds flat (functions/vectors.py); both engines "
+    "round half-away-from-zero so the quantized grid is identical.",
 )
 def q_embedding_int8_quantization(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
@@ -886,19 +883,12 @@ def q_embedding_int8_quantization(spark, sf_dir):
         F.col("__v"), lambda x: F.round(x / F.col("__scale"), 0) * F.col("__scale")
     )
     withd = base.withColumn("__dv", dv)
-    err_sq = F.zip_with(
-        F.col("__v"), F.col("__dv"), lambda a, b: (a - b) * (a - b)
-    )
-    cos = cosine_fixed("__v", "__dv", 64)
+    cos = cosine("__v", "__dv")
     return withd.select(
         "vec_id",
         F.size("__v").cast("int").alias("dim"),
         F.round(F.col("__scale"), 6).alias("scale"),
-        F.round(
-            F.aggregate(err_sq, F.lit(0.0), lambda acc, x: acc + x)
-            / F.size("__v"),
-            6,
-        ).alias("mse"),
+        F.round(sq_dist("__v", "__dv") / F.size("__v"), 6).alias("mse"),
         F.round(cos, 6).alias("cos_recon"),
     )
 
@@ -1005,13 +995,8 @@ def q_kmeans_two_rounds(spark, sf_dir):
     ).select(F.col("vec_id").alias("cid"), F.col("ev").alias("centroid"))
 
     def assign(cent):
-        diff_sq = F.zip_with(
-            F.col("ev"), F.col("centroid"), lambda a, b: (a - b) * (a - b)
-        )
         scored = vecs.crossJoin(F.broadcast(cent)).select(
-            "vec_id",
-            "cid",
-            F.aggregate(diff_sq, F.lit(0.0), lambda acc, x: acc + x).alias("d"),
+            "vec_id", "cid", sq_dist("ev", "centroid").alias("d")
         )
         return scored.groupBy("vec_id").agg(
             F.min(F.struct(F.col("d").alias("d"), F.col("cid").alias("cid")))
@@ -1106,7 +1091,7 @@ def q_matryoshka_recall_eval(spark, sf_dir):
         "vec_id", F.slice(F.col("embedding"), 1, _MATRYOSHKA_DIM).alias("embedding")
     )
     tqueries = trunc.filter(F.col("vec_id") % 50 == 0)
-    fullk = brute_force_topk(queries, emb, k=3, dim=64).select("query_id", "neighbor_id")
+    fullk = brute_force_topk(queries, emb, k=3).select("query_id", "neighbor_id")
     trunck = brute_force_topk(
         tqueries, trunc, k=3, dim=_MATRYOSHKA_DIM
     ).select(
@@ -1353,11 +1338,6 @@ LIMIT 20
 def q_rrf_hybrid_retrieval(spark, sf_dir):
     from pyspark.sql.window import Window
 
-    from ecom_churn_lakehouse_spark.functions.vectors import (
-        dot,
-        l2_norm,
-        to_double_array,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.col("text")), r"\s+")
@@ -1390,7 +1370,7 @@ def q_rrf_hybrid_retrieval(spark, sf_dir):
     )
     dense = cand.join(F.broadcast(qv)).select(
         "doc_id",
-        cosine_fixed("e", "v", 64).alias("sim"),
+        cosine("e", "v").alias("sim"),
     )
     dense_r = dense.select(
         "doc_id",
@@ -1695,18 +1675,13 @@ WHERE rn <= 3
 def q_ann_ivfpq_topk(spark, sf_dir):
     from pyspark.sql.window import Window
 
-    from ecom_churn_lakehouse_spark.functions.vectors import (
-        dot,
-        l2_norm,
-        to_double_array,
-    )
     from ecom_churn_lakehouse_spark.similarity.ann import ivf_assign_cells
 
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") % 37 == 1).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    assigned = ivf_assign_cells(emb, centroids, dim=64)
+    assigned = ivf_assign_cells(emb, centroids)
 
     vecs = emb.select(
         "vec_id", to_double_array(F.col("embedding")).alias("ev")
@@ -1789,7 +1764,7 @@ def q_ann_ivfpq_topk(spark, sf_dir):
             "query_id",
             "neighbor_id",
             "adc_micro",
-            cosine_fixed("q_ev", "n_ev", 64).alias("sim"),
+            cosine("q_ev", "n_ev").alias("sim"),
         )
     )
     w_final = Window.partitionBy("query_id").orderBy(
@@ -1911,16 +1886,11 @@ def q_ann_nprobe_recall_curve(spark, sf_dir):
     centroids = emb.filter(F.col("vec_id") % 37 == 1).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    corpus_cells = ivf_assign_cells(emb, centroids, dim=64)
+    corpus_cells = ivf_assign_cells(emb, centroids)
     queries_df = emb.filter(F.col("vec_id") % 50 == 0)
     # Ranked query cells: ivf_assign_cells emits a query's cells in
     # rank order but drops the rank itself, so recompute the ranked
     # assignment here (same cosine + ccid tie-break spelling).
-    from ecom_churn_lakehouse_spark.functions.vectors import (
-        dot,
-        l2_norm,
-        to_double_array,
-    )
 
     cents = centroids.select(
         F.col("centroid_id").alias("ccid"),
@@ -1930,7 +1900,7 @@ def q_ann_nprobe_recall_curve(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         to_double_array(F.col("embedding")).alias("qev"),
     )
-    sim_qc = cosine_fixed("qev", "ccv", 64)
+    sim_qc = cosine("qev", "ccv")
     w_rank = Window.partitionBy("query_id").orderBy(
         F.desc("__sim"), "ccid"
     )
@@ -1974,7 +1944,7 @@ def q_ann_nprobe_recall_curve(spark, sf_dir):
             "query_id",
             "neighbor_id",
             "mr",
-            cosine_fixed("q_ev", "n_ev", 64).alias("sim"),
+            cosine("q_ev", "n_ev").alias("sim"),
         )
     )
     fan = scored.withColumn(
@@ -1991,7 +1961,7 @@ def q_ann_nprobe_recall_curve(spark, sf_dir):
         .filter(F.col("rn") <= 3)
         .select("nprobe", "query_id", "neighbor_id")
     )
-    exact = brute_force_topk(queries_df, emb, k=3, dim=64).select(
+    exact = brute_force_topk(queries_df, emb, k=3).select(
         "query_id", "neighbor_id", F.lit(1).alias("hit")
     )
     nq = exact.agg(
@@ -2074,13 +2044,13 @@ def q_ann_filtered_topk(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") % 50 == 0)
     pre = brute_force_topk(
-        queries_df, emb.filter(F.col("label") == 1), k=5, dim=64
+        queries_df, emb.filter(F.col("label") == 1), k=5
     ).select(
         F.lit("prefilter").alias("strategy"), "query_id", "neighbor_id", "cosine_sim"
     )
     labels = emb.select(F.col("vec_id").alias("neighbor_id"), "label")
     post = (
-        brute_force_topk(queries_df, emb, k=5, dim=64)
+        brute_force_topk(queries_df, emb, k=5)
         .join(F.broadcast(labels), "neighbor_id")
         .filter(F.col("label") == 1)
         .select(
@@ -2249,7 +2219,7 @@ def q_ann_topk_diversity_filter(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") % 50 == 0)
-    topk = brute_force_topk(queries_df, emb, k=10, dim=64).withColumn(
+    topk = brute_force_topk(queries_df, emb, k=10).withColumn(
         "rank",
         F.row_number()
         .over(W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), "neighbor_id"))
@@ -2273,7 +2243,7 @@ def q_ann_topk_diversity_filter(spark, sf_dir):
         F.col("nv").alias("b_v"),
     )
     pair_sim_ppm = F.floor(
-        cosine_fixed("a_v", "b_v", 64) * 1000000
+        cosine("a_v", "b_v") * 1000000
     ).cast("long")
     flagged = (
         a.join(
@@ -2511,12 +2481,11 @@ def q_label_silhouette_screen(spark, sf_dir):
             lambda x: x.getField("c"),
         ).alias("centroid")
     )
-    diff_sq = F.zip_with(v, F.col("centroid"), lambda a, b: (a - b) * (a - b))
     dists = emb.crossJoin(F.broadcast(cent_arr)).select(
         "vec_id",
         "label",
         "c_label",
-        F.aggregate(diff_sq, F.lit(0.0), lambda acc, x: acc + x).alias("d"),
+        sq_dist("embedding", "centroid").alias("d"),
     )
     ab = dists.groupBy("vec_id", "label").agg(
         F.max(
@@ -3026,7 +2995,7 @@ def _ann_index_probe(spark, base, k=3):
     buckets = idx.select("vec_id", "bucket")
     vectors = idx.select("vec_id", "embedding")
     q = buckets.filter(F.col("vec_id") % 50 == 0)
-    return bucketed_topk(q, buckets, vectors, k=k, dim=64)
+    return bucketed_topk(q, buckets, vectors, k=k)
 
 
 @register(

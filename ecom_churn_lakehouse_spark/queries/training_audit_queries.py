@@ -388,9 +388,9 @@ ORDER BY vec_a, vec_b
 )
 def q_semantic_dedup_pairs(spark, sf_dir):
     from ecom_churn_lakehouse_spark.functions.vectors import (
-        cosine_fixed,
-        dot_fixed,
-        l2_norm_fixed,
+        cosine,
+        dot,
+        norm,
         to_double_array,
     )
     from ecom_churn_lakehouse_spark.similarity.ann import banded_sign_buckets
@@ -406,7 +406,7 @@ def q_semantic_dedup_pairs(spark, sf_dir):
         F.col("vec_id").alias("cid"),
         to_double_array(F.col("embedding")).alias("cv"),
     )
-    cos = cosine_fixed("embedding", "cv", 64)
+    cos = cosine("embedding", "cv")
     # argmax centroid with min-cid tie-break: lexicographic max over
     # (cos, -cid) — one aggregate, no window sort.
     assigned = (
@@ -429,9 +429,9 @@ def q_semantic_dedup_pairs(spark, sf_dir):
         _SEMDEDUP_ROWS_PER_BAND,
     )
     # Norms once per row: the pair cosine below is one dot over the two
-    # norms, the same IEEE operations in the same order as cosine_fixed.
+    # norms, the same IEEE operations in the same order as ``cosine``.
     meta = assigned.select(
-        "vec_id", "cluster_id", "ev", l2_norm_fixed("ev", 64).alias("n")
+        "vec_id", "cluster_id", "ev", norm("ev").alias("n")
     )
     a = banded.alias("ba").join(meta.alias("ma"), on="vec_id").select(
         F.col("vec_id").alias("vec_a"), "band", "bucket",
@@ -443,7 +443,7 @@ def q_semantic_dedup_pairs(spark, sf_dir):
         F.col("cluster_id").alias("__cb"), F.col("ev").alias("__vb"),
         F.col("n").alias("__nb"),
     )
-    pair_cos = dot_fixed("__va", "__vb", 64) / (F.col("__na") * F.col("__nb"))
+    pair_cos = dot("__va", "__vb") / (F.col("__na") * F.col("__nb"))
     cand = (
         a.join(b, on=["band", "bucket"])
         .filter(

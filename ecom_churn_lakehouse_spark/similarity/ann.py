@@ -4,8 +4,9 @@ Two tiers, as a 100 TB design demands:
 
 - ``brute_force_topk``: exact cosine top-k — the correctness baseline.
   Query set × corpus via broadcast of the (small) query side; the
-  corpus is never replicated. Per-row arithmetic is native
-  ``zip_with``/``aggregate`` in whole-stage codegen. Cost is
+  corpus is never replicated. Per-row arithmetic is the width-checked
+  flat fold of ``functions/vectors.py`` (``dim`` defaults to
+  ``EMBED_DIM``; a vector of any other width raises). Cost is
   O(|Q|·|corpus|) — fine for |Q| in the thousands, the wrong tool for
   all-pairs.
 - ``hyperplane_lsh_buckets``: random-hyperplane (sign) LSH. Buckets are
@@ -25,22 +26,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ecom_churn_lakehouse_spark.functions.vectors import (
-    cosine_fixed,
-    cosine_similarity,
-    dot_fixed,
-    l2_norm_fixed,
+    EMBED_DIM,
+    cosine,
+    dot,
+    norm,
     to_double_array,
 )
-
-def _cos(a: str, b: str, dim: int | None):
-    """Exact cosine over the (already double-cast) named columns —
-    the flat cached codegen spelling when the caller knows the static
-    dimension (bit-identical fold order, r12), the generic interpreted
-    HOF otherwise (callers that pass sliced/truncated vectors)."""
-    if dim is not None:
-        return cosine_fixed(a, b, dim)
-    return cosine_similarity(F.col(a), F.col(b))
-
 
 __all__ = [
     "brute_force_topk",
@@ -59,7 +50,7 @@ def brute_force_topk(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
+    dim: int = EMBED_DIM,
 ) -> DataFrame:
     """Exact cosine top-k neighbors per query vector.
 
@@ -74,7 +65,7 @@ def brute_force_topk(
         F.col(id_col).alias("neighbor_id"),
         to_double_array(F.col(vec_col)).alias("__cv"),
     )
-    sim = _cos("__qv", "__cv", dim)
+    sim = cosine("__qv", "__cv", dim)
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", sim.alias("__sim"))
@@ -170,6 +161,11 @@ def banded_sign_buckets(
     naive explode-per-plane + groupBy(id, band) form this removes the
     only shuffle of the bucketing stage (planes × |corpus| rows) and
     the per-plane row overhead: the stage is map-only at any scale.
+
+    The plane dot products are the package's one vector fold outside
+    ``functions/vectors.py``: the plane set is a runtime array, so the
+    fold stays a nested ``aggregate``/``zip_with`` (interpreted per
+    row) instead of a flat tree over a static width.
     """
     v = vectors.select(
         F.col(id_col), to_double_array(F.col(vec_col)).alias("__v")
@@ -212,7 +208,7 @@ def neardup_pairs(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
+    dim: int = EMBED_DIM,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the dedup scale path).
 
@@ -235,27 +231,21 @@ def neardup_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
+    # Norms once per row, not once per candidate pair: the same IEEE
+    # operations in the same order as ``cosine`` (bit-identical), and
+    # the pair stage stays under the 64 KB codegen method limit.
     emb = vectors.select(
         F.col(id_col), to_double_array(F.col(vec_col)).alias("__v")
-    )
-    if dim is not None:
-        # Norms once per row, not once per candidate pair: the same IEEE
-        # operations in the same order as cosine_fixed (bit-identical),
-        # and the pair stage stays under the 64 KB codegen method limit.
-        emb = emb.withColumn("__n", l2_norm_fixed("__v", dim))
+    ).withColumn("__n", norm("__v", dim))
 
     def side(s):
         return emb.select(
             F.col(id_col).alias(f"doc_{s}"),
-            *(F.col(c).alias(f"{c}{s}") for c in emb.columns[1:]),
+            *(F.col(c).alias(f"{c}{s}") for c in ("__v", "__n")),
         )
 
     scored = cand.join(side("a"), on="doc_a").join(side("b"), on="doc_b")
-    sim = (
-        cosine_similarity(F.col("__va"), F.col("__vb"))
-        if dim is None
-        else dot_fixed("__va", "__vb", dim) / (F.col("__na") * F.col("__nb"))
-    )
+    sim = dot("__va", "__vb", dim) / (F.col("__na") * F.col("__nb"))
     return (
         scored.select(
             "doc_a", "doc_b", F.round(sim, 6).alias("cosine_sim")
@@ -271,7 +261,7 @@ def ivf_assign_cells(
     vec_col: str = "embedding",
     centroid_id_col: str = "centroid_id",
     nprobe: int = 1,
-    dim: int | None = None,
+    dim: int = EMBED_DIM,
 ) -> DataFrame:
     """IVF coarse quantization: assign each vector to its nearest
     ``nprobe`` centroids by cosine (ties break on centroid id).
@@ -296,7 +286,7 @@ def ivf_assign_cells(
         F.col(centroid_id_col).alias("__cid"),
         to_double_array(F.col(vec_col)).alias("__c"),
     )
-    sim = _cos("__v", "__c", dim)
+    sim = cosine("__v", "__c", dim)
     scored = v.join(F.broadcast(c)).select(
         F.col(id_col), F.col("__cid"), sim.alias("__sim")
     )
@@ -315,7 +305,7 @@ def bucketed_topk(
     k: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
+    dim: int = EMBED_DIM,
 ) -> DataFrame:
     """Exact cosine top-k restricted to same-bucket candidates.
 
@@ -332,7 +322,7 @@ def bucketed_topk(
     c = corpus_with_bucket.select(
         F.col(id_col).alias("neighbor_id"), "bucket"
     ).join(emb.select(F.col(id_col).alias("neighbor_id"), F.col("__v").alias("__cv")), on="neighbor_id")
-    sim = _cos("__qv", "__cv", dim)
+    sim = cosine("__qv", "__cv", dim)
     scored = (
         q.join(c, on="bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))

@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ecom_churn_lakehouse_spark.functions.vectors import to_double_array
 from ecom_churn_lakehouse_spark.similarity.ann import (
     bucketed_topk,
     hyperplane_lsh_buckets,

@@ -124,3 +124,28 @@ def test_band_values_cross_engine_above_floor(spark, tmp_path):
         ).collect()
     }
     assert frozen == got
+
+
+def test_frozen_width_above_floor_needs_live_extension_columns(spark):
+    """A codes frame built at the floor carries literal-zero extension
+    columns: a frozen width above the floor over it must fail loudly
+    instead of emitting band values without their upper bits."""
+    from ecom_churn_lakehouse_spark.queries.hashing_queries import (
+        BandWidthError,
+        _codes_frame,
+        _spark_bands,
+        _spark_codes,
+    )
+    from ecom_churn_lakehouse_spark.sources import load_table
+
+    floor = _spark_codes(spark, SF)  # N=500 -> built at bb=8
+    with pytest.raises(BandWidthError, match="band_bits=9"):
+        _spark_bands(floor, band_bits=9)
+    # a width the frame was built for is served unchanged
+    adaptive = {tuple(r) for r in _spark_bands(floor).collect()}
+    assert {tuple(r) for r in _spark_bands(floor, band_bits=8).collect()} == adaptive
+
+    # a frame built above the floor has live extension columns for any
+    # width up to the cap
+    live = _codes_frame(load_table(spark, SF, "embeddings"), band_bits=9)
+    _spark_bands(live, band_bits=12)

@@ -76,7 +76,12 @@ def test_image_features_feed_similarity(spark):
     assert all(abs(sum(r["features"]) - 1.0) < 1e-9 for r in rows)
     # the extracted vectors plug straight into the ANN surface
     topk = brute_force_topk(
-        feats.limit(2), feats, k=3, id_col="doc_id", vec_col="features"
+        feats.limit(2),
+        feats,
+        k=3,
+        id_col="doc_id",
+        vec_col="features",
+        dim=IMAGE_FEATURE_DIM,
     )
     assert topk.count() == 6
 

@@ -16,10 +16,7 @@ from ecom_churn_lakehouse_spark.functions.text import (
     lang_guess_col,
     token_count_col,
 )
-from ecom_churn_lakehouse_spark.functions.vectors import (
-    cosine_similarity,
-    to_double_array,
-)
+from ecom_churn_lakehouse_spark.functions.vectors import cosine
 
 
 def test_token_count(spark):
@@ -46,11 +43,7 @@ def test_cosine_similarity_exact(spark):
     )
     sims = [
         round(r["s"], 9)
-        for r in df.select(
-            cosine_similarity(
-                to_double_array(F.col("a")), to_double_array(F.col("b"))
-            ).alias("s")
-        ).collect()
+        for r in df.select(cosine("a", "b", dim=2).alias("s")).collect()
     ]
     assert sims == [1.0, 0.0]
 
@@ -116,7 +109,7 @@ def test_embedding_neardup_pairs(spark):
     assert banded.groupBy("vec_id").count().filter("count <> 2").count() == 0
     got = {
         (r["doc_a"], r["doc_b"]): r["cosine_sim"]
-        for r in neardup_pairs(banded, vecs, threshold=0.95).collect()
+        for r in neardup_pairs(banded, vecs, threshold=0.95, dim=4).collect()
     }
     assert got.get((0, 1)) == 1.0          # exact dup
     assert (0, 2) in got and got[(0, 2)] > 0.99   # near dup
