@@ -1,4 +1,4 @@
-from .checks import CheckResult, DQGateFailure, DQReport, assert_single_value, run_checks
+from .checks import CheckResult, DQGateFailure, DQReport, run_checks
 from .expectations import ExpectationSuite, load_expectations_yaml, parse_expectations
 
 __all__ = [
@@ -6,7 +6,6 @@ __all__ = [
     "DQGateFailure",
     "DQReport",
     "ExpectationSuite",
-    "assert_single_value",
     "load_expectations_yaml",
     "parse_expectations",
     "run_checks",

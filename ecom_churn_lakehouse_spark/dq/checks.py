@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "DQGateFailure",
-    "assert_single_value",
     "compile_check",
     "run_checks",
     "observe_checks",
@@ -52,7 +51,9 @@ def compile_check(spec: dict[str, Any]) -> Column:
       generalization)
 
     ``unique`` (D2) is group-based, handled separately in
-    :func:`run_checks`.
+    :func:`run_checks`. The frame checks (``row_count``,
+    ``single_value``) judge aggregates, not rows: see
+    :func:`_check_aggs`.
     """
     t = spec["type"]
     if t == "not_null":
@@ -89,6 +90,10 @@ class CheckResult:
     severity: str
     bad_rows: int
     passed: bool
+    #: why a frame check failed, in the words of its gate
+    detail: str | None = None
+    #: ``single_value``: each homogeneous column's value
+    values: dict[str, Any] | None = None
 
 
 @dataclass
@@ -111,42 +116,70 @@ class DQReport:
             "row_count": self.row_count,
             "ok": self.ok,
             "rows_deleted": self.rows_deleted,
-            "checks": [vars(r) for r in self.results],
+            # detail/values only where a frame check set them
+            "checks": [
+                {k: v for k, v in vars(r).items() if v is not None}
+                for r in self.results
+            ],
         }
 
     def write_json(self, path: str) -> None:
         with open(path, "w") as f:
-            json.dump(self.to_dict(), f, indent=2)
+            json.dump(self.to_dict(), f, indent=2, default=str)
+
+    def raise_if_blocked(self) -> None:
+        """Raise :class:`DQGateFailure` naming every blocking failure
+        (and what a failed frame check found); no-op when ``ok``."""
+        failed = self.blocking_failures
+        if not failed:
+            return
+        details = "; ".join(r.detail for r in failed if r.detail)
+        raise DQGateFailure(
+            f"critical DQ failures: {[r.name for r in failed]}"
+            + (f": {details}" if details else ""),
+            self,
+        )
 
 
 class DQGateFailure(ValueError):
-    """Critical DQ failure: publish blocked (dq.py:87-91 semantics)."""
+    """Critical DQ failure: publish blocked (dq.py:87-91 semantics).
+    ``report`` is the gated :class:`DQReport` when the failure came
+    from one."""
+
+    def __init__(self, message: str, report: DQReport | None = None):
+        super().__init__(message)
+        self.report = report
 
 
-def assert_single_value(df: DataFrame, *columns: str) -> tuple:
-    """A8 single-distinct-value assertion (version homogeneity gate,
-    build_training_snapshot.py:32-38 / train_stub.py:44-50): each
-    column must hold exactly one distinct value across the frame;
-    returns the values. All columns share one bounded pass: at most
-    2 distinct rows are collected."""
-    rows = df.select(*columns).distinct().limit(2).collect()
-    if not rows:
-        raise ValueError(f"columns {list(columns)} must be homogeneous; found no rows")
-    for c in columns:
-        if len(rows) > 1 and rows[0][c] != rows[1][c]:
-            raise ValueError(
-                f"column {c!r} must be homogeneous; found multiple values "
-                f"(e.g. {[r[c] for r in rows]})"
-            )
-    return tuple(rows[0])
+#: Frame checks judge aggregates over the whole frame, not rows, so
+#: they ride the same single aggregation as the row checks:
+#: - ``row_count``: at least ``min`` rows (an eligibility gate, e.g.
+#:   labels.py:154-163's non-empty label spine);
+#: - ``single_value``: each of ``columns`` holds exactly one value
+#:   across a non-empty frame (A8 version homogeneity,
+#:   build_training_snapshot.py:32-38), judged from its min, max and
+#:   non-null count; NULL counts as a value, so an all-NULL column is
+#:   homogeneous and a partly-NULL one is not.
+_FRAME_CHECKS = ("row_count", "single_value")
 
 
 def _check_aggs(row_checks: list[dict[str, Any]]) -> list[Column]:
-    """Row count plus one conditional violation count per row check —
-    the single aggregation both :func:`run_checks` and
-    :func:`observe_checks` evaluate."""
+    """Row count, one conditional violation count per row-predicate
+    check and the aggregates of each frame check — the single
+    aggregation both :func:`run_checks` and :func:`observe_checks`
+    evaluate."""
     aggs = [F.count(F.lit(1)).alias("__n")]
     for i, spec in enumerate(row_checks):
+        if spec["type"] == "row_count":
+            continue  # answered by __n
+        if spec["type"] == "single_value":
+            for j, c in enumerate(spec["columns"]):
+                aggs += [
+                    F.min(c).alias(f"__c{i}_{j}_min"),
+                    F.max(c).alias(f"__c{i}_{j}_max"),
+                    F.count(c).alias(f"__c{i}_{j}_nn"),
+                ]
+            continue
         # coalesce: SUM over an empty frame is NULL, not 0
         aggs.append(
             F.coalesce(
@@ -156,17 +189,44 @@ def _check_aggs(row_checks: list[dict[str, Any]]) -> list[Column]:
     return aggs
 
 
+def _row_result(spec: dict[str, Any], i: int, counts) -> tuple[int, str | None, dict | None]:
+    """``(bad, detail, values)`` of row or frame check ``i``: the
+    violating rows of a row predicate; for ``row_count`` the missing
+    rows, for ``single_value`` the columns that are not homogeneous
+    (all of them on an empty frame)."""
+    if spec["type"] not in _FRAME_CHECKS:
+        return int(counts[f"__c{i}"]), None, None
+    n = int(counts["__n"])
+    if spec["type"] == "row_count":
+        short = max(int(spec["min"]) - n, 0)
+        return short, f"expected at least {spec['min']} rows, found {n}" if short else None, None
+    columns = spec["columns"]
+    if not n:
+        return len(columns), f"columns {columns} must be homogeneous; found no rows", None
+    values, problems = {}, []
+    for j, c in enumerate(columns):
+        lo, hi, nn = (counts[f"__c{i}_{j}_{k}"] for k in ("min", "max", "nn"))
+        if nn == 0 or (nn == n and lo == hi):
+            values[c] = lo
+        else:
+            problems.append(
+                f"column {c!r} must be homogeneous; found multiple values "
+                f"(e.g. {[lo if nn == n else None, hi]})"
+            )
+    return len(problems), "; ".join(problems) or None, values
+
+
 def _report(counts, checks: list[dict[str, Any]], unique_bad=None) -> DQReport:
-    """Severity-gated report: row checks first (counts from
-    :func:`_check_aggs`), then ``unique`` checks with their duplicate
-    key-group counts (``unique_bad``; all 0 when omitted)."""
+    """Severity-gated report: row and frame checks first (aggregates
+    from :func:`_check_aggs`), then ``unique`` checks with their
+    duplicate key-group counts (``unique_bad``; all 0 when omitted)."""
     row_checks = [c for c in checks if c["type"] != "unique"]
     unique_checks = [c for c in checks if c["type"] == "unique"]
     named = [
-        (spec, spec.get("name", f"{spec['type']}_{i}"), int(counts[f"__c{i}"]))
+        (spec, spec.get("name", f"{spec['type']}_{i}"), _row_result(spec, i, counts))
         for i, spec in enumerate(row_checks)
     ] + [
-        (spec, spec.get("name", "unique_" + "_".join(spec["keys"])), int(bad))
+        (spec, spec.get("name", "unique_" + "_".join(spec["keys"])), (int(bad), None, None))
         for spec, bad in zip(unique_checks, unique_bad or [0] * len(unique_checks))
     ]
     return DQReport(
@@ -178,8 +238,10 @@ def _report(counts, checks: list[dict[str, Any]], unique_bad=None) -> DQReport:
                 severity=spec.get("severity", "critical"),
                 bad_rows=bad,
                 passed=bad == 0,
+                detail=detail,
+                values=values,
             )
-            for spec, name, bad in named
+            for spec, name, (bad, detail, values) in named
         ],
     )
 
@@ -195,15 +257,15 @@ def observe_checks(df: DataFrame, checks: list[dict[str, Any]]):
     the executors as rows stream through, for free.
 
     Returns ``(observed_df, observation)``; feed the observation to
-    :func:`report_from_observation` AFTER the action has run. Only
-    row-predicate checks are supported: ``unique`` is group-based, and
+    :func:`report_from_observation` AFTER the action has run. Row and
+    frame checks are supported: ``unique`` is group-based, and
     ``merge`` answers it with its key probe, a window count per key
     observed on the same write.
     """
     from pyspark.sql import Observation
 
     if any(c["type"] == "unique" for c in checks):
-        raise ValueError("observe_checks supports row-predicate checks only")
+        raise ValueError("observe_checks supports row and frame checks only")
     obs = Observation()
     return df.observe(obs, *_check_aggs(checks)), obs
 
@@ -224,10 +286,11 @@ def run_checks(
 ) -> DQReport:
     """Evaluate all checks; return a report with severity gating applied.
 
-    Row-predicate checks are fused into ONE aggregation job
+    Row-predicate and frame checks are fused into ONE aggregation job
     (conditional sums), unlike the reference's per-check jobs. Unique
     checks each need a groupBy. Quarantine (D8) writes at most
-    ``sample_rows`` violating rows per failed check as parquet.
+    ``sample_rows`` violating rows per failed row or unique check as
+    parquet (a frame check has no violating rows).
     """
     row_checks = [c for c in checks if c["type"] != "unique"]
     unique_checks = [c for c in checks if c["type"] == "unique"]
@@ -240,12 +303,15 @@ def run_checks(
     if quarantine_dir:
         # Failed-row extraction: the check predicate, or a semi-join
         # back to the duplicate key set (J5, dq.py:31-35).
-        violating = [df.filter(compile_check(c)) for c in row_checks] + [
+        violating = [
+            None if c["type"] in _FRAME_CHECKS else df.filter(compile_check(c))
+            for c in row_checks
+        ] + [
             df.join(d.select(*c["keys"]), on=c["keys"], how="left_semi")
             for c, d in zip(unique_checks, dup_groups)
         ]
         for result, bad in zip(report.results, violating):
-            if result.bad_rows:
+            if result.bad_rows and bad is not None:
                 bad.limit(sample_rows).write.mode("overwrite").parquet(
                     f"{quarantine_dir}/{result.name}"
                 )

@@ -4,7 +4,7 @@ from .text import (
     quality_cols,
     token_count_col,
 )
-from .vectors import EMBED_DIM, cosine, dot, norm, sq_dist, to_double_array
+from .vectors import EMBED_DIM, cosine, dot, norm, sq_dist, to_double_array, width_guard
 
 __all__ = [
     "token_count_col",
@@ -17,4 +17,5 @@ __all__ = [
     "norm",
     "sq_dist",
     "to_double_array",
+    "width_guard",
 ]

@@ -28,7 +28,7 @@ import functools
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["EMBED_DIM", "to_double_array", "dot", "norm", "cosine", "sq_dist"]
+__all__ = ["EMBED_DIM", "to_double_array", "dot", "norm", "cosine", "sq_dist", "width_guard"]
 
 #: Width of the ``embeddings`` fixture vectors.
 EMBED_DIM = 64
@@ -50,12 +50,18 @@ def _fold(a: str, b: str, dim: int, sq_diff: bool = False) -> str:
     return f"(CAST(0.0 AS DOUBLE) + {terms})"
 
 
-def _guarded(body: str, dim: int, *vecs: str) -> Column:
-    """``body`` times the width guard over the named vectors."""
+def _guard(dim: int, *vecs: str) -> str:
+    """SQL text of the width guard over the named vectors: 1.0, or
+    ``raise_error`` when one has not ``dim`` elements."""
     names = list(dict.fromkeys(vecs))
     bad = " OR ".join(f"array_size({v}) <> {dim}" for v in names)
     msg = f"VECTOR_WIDTH_MISMATCH: {', '.join(names)} must have {dim} elements"
-    return F.expr(f"CASE WHEN {bad} THEN raise_error('{msg}') ELSE 1.0D END * {body}")
+    return f"CASE WHEN {bad} THEN raise_error('{msg}') ELSE 1.0D END"
+
+
+def _guarded(body: str, dim: int, *vecs: str) -> Column:
+    """``body`` times the width guard over the named vectors."""
+    return F.expr(f"{_guard(dim, *vecs)} * {body}")
 
 
 # Each primitive is cached: ONE py4j round trip (a single F.expr parse)
@@ -90,3 +96,11 @@ def cosine(a: str, b: str, dim: int = EMBED_DIM) -> Column:
 @functools.lru_cache(maxsize=128)
 def sq_dist(a: str, b: str, dim: int = EMBED_DIM) -> Column:
     return _guarded(_fold(a, b, dim, sq_diff=True), dim, a, b)
+
+
+@functools.lru_cache(maxsize=128)
+def width_guard(a: str, b: str, dim: int = EMBED_DIM) -> Column:
+    """The primitives' width guard alone, for a fold they cannot spell
+    (one whose element offset is a column): multiply the fold by it,
+    from the left, reading elements with ``try_element_at``."""
+    return F.expr(_guard(dim, a, b))

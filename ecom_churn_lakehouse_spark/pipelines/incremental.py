@@ -25,7 +25,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ecom_churn_lakehouse_spark.pipelines.medallion import (
     _GOLD_GATES,
@@ -75,37 +74,27 @@ def incremental_gold_update(
     )
     fv = feature_version or _contract("gold_customer_features").contract_hash
     snapshot_id = canonical_hash({"as_of": as_of_date, "fv": fv})
-    feats = (
-        customer_features(orders, as_of_date)
+    feats = customer_features(orders, as_of_date).withColumn("_deleted", F.lit(False))
+    # One row per changed key: its recomputed features, or — for a key
+    # with NO surviving orders (full CDC erasure), which produces no
+    # feature row — a tombstone; without it the stale gold row would
+    # outlive the data that justified it. merge(delete_col=...) removes
+    # them in the same pass that upserts the recomputed rows, and
+    # observes their count on that write. The MERGE's key branch needs
+    # only the keys, so the optimizer drops the join there and the
+    # feature plan runs once.
+    source = (
+        keys.join(feats, on="customer_id", how="left")
+        .withColumn("_deleted", F.coalesce("_deleted", F.lit(True)))
         .withColumn("as_of_date", F.to_date(F.lit(as_of_date)))
         .withColumn("_snapshot_id", F.lit(snapshot_id))
         .withColumn("_feature_version", F.lit(fv))
         .withColumn("_gold_run_id", F.lit(run_id))
         .withColumn("_gold_ts", F.current_timestamp())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Changed keys with NO surviving orders (full CDC erasure) produce
-    # no feature row — without a tombstone their stale gold row would
-    # outlive the data that justified it. merge(delete_col=...) removes
-    # them in the same pass that upserts the recomputed rows, and
-    # observes their count on that write.
-    vanished = keys.join(
-        feats.select("customer_id"), on="customer_id", how="left_anti"
-    ).withColumn("as_of_date", F.to_date(F.lit(as_of_date)))
-    for field in feats.schema.fields:
-        if field.name not in vanished.columns:
-            vanished = vanished.withColumn(
-                field.name, F.lit(None).cast(field.dataType)
-            )
-    source = feats.withColumn("_deleted", F.lit(False)).unionByName(
-        vanished.select(*feats.columns).withColumn("_deleted", F.lit(True))
     )
     # Same blocking gates as the full run, observed on the delta
     # slice's upserts only (the untouched remainder already passed).
-    try:
-        report = gold.merge(source, checks=_GOLD_GATES, delete_col="_deleted")
-    finally:
-        feats.unpersist()
+    report = gold.merge(source, checks=_GOLD_GATES, delete_col="_deleted")
     n, n_deleted = report.row_count, report.rows_deleted
     log_event(
         "gold_incremental_published",

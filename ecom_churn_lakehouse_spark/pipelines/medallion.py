@@ -13,11 +13,14 @@ reference's stage semantics end-to-end (SURVEY.md §3):
   (``labels.py``, ``build_training_snapshot.py``, ``build_latest_features.py``)
 
 Every keyed publish is ONE call, ``ManagedTable.merge(df, checks=...)``:
-the stage's blocking DQ gates, its row count and MERGE's key probe
-(which answers the grain check) are all observed on the publish write
-itself, and a failing gate raises :class:`DQGateFailure` before the
-commit, so readers never see ungated data. Bronze's and the export's
-row counts ride their writes the same way.
+the stage's blocking DQ gates (row predicates, the labels' eligibility
+``row_count`` and the snapshot's ``single_value`` homogeneity), its row
+count and MERGE's key probe (which answers the grain check) are all
+observed on the publish write itself, and a failing gate raises
+:class:`DQGateFailure` before the commit, so readers never see ungated
+data. Bronze's, silver's preclean split and the export's row counts
+ride their writes the same way: no stage runs a probe job before its
+publish.
 
 Fixes the reference's recompute defect (§3.2): multi-action lineages
 are persisted once instead of re-derived per action.
@@ -39,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from ecom_churn_lakehouse_spark.contracts import Contract
-from ecom_churn_lakehouse_spark.dq import DQGateFailure, assert_single_value
+from ecom_churn_lakehouse_spark.dq import DQGateFailure
 from ecom_churn_lakehouse_spark.logging_util import log_event
 from ecom_churn_lakehouse_spark.operators.windows import dedup_top1
 from ecom_churn_lakehouse_spark.plans.churn import (
@@ -221,7 +224,15 @@ def silver_publish(
         & F.col("order_purchase_ts").isNotNull()
         & F.col("order_status").isin(*ALLOWED_STATUSES)
     )
-    clean = normalized.filter(valid)
+    # The preclean split's counts ride the publish write: observed
+    # below the validity filter, so every branch of the MERGE that
+    # scans the source sees every row.
+    split = Observation()
+    clean = normalized.observe(
+        split,
+        F.count_if(~valid).alias("invalid"),
+        F.count_if(valid).alias("clean"),
+    ).filter(valid)
     invalid = normalized.filter(~valid)
 
     # W1 deterministic dedup; losers quarantined
@@ -234,19 +245,27 @@ def silver_publish(
     ]
     deduped = dedup_top1(clean, ["order_id"], order)
 
-    n_invalid, n_clean = normalized.agg(F.count_if(~valid), F.count_if(valid)).first()
-    if n_invalid:
-        invalid.write.mode("overwrite").parquet(f"{quarantine_dir}/preclean_invalid")
-
     silver_out = (
         deduped.withColumn("_silver_run_id", F.lit(run_id))
         .withColumn("_silver_ts", F.current_timestamp())
         .withColumn("_schema_version", F.lit(_contract("silver_orders").contract_hash))
     )
+
+    def quarantine() -> tuple[int, int]:
+        n_invalid, n_clean = split.get["invalid"], split.get["clean"]
+        if n_invalid:
+            invalid.write.mode("overwrite").parquet(f"{quarantine_dir}/preclean_invalid")
+        return n_invalid, n_clean
+
     try:
         report = ManagedTable(spark, silver_path, keys=["order_id"]).merge(
             silver_out, checks=_SILVER_DQ_CHECKS
         )
+    except DQGateFailure:
+        quarantine()  # the staged write ran, so the split is observed
+        raise
+    else:
+        n_invalid, n_clean = quarantine()
     finally:
         normalized.unpersist()
     n_dedup = report.row_count
@@ -371,23 +390,30 @@ def label_snapshot(
         {"name": "grain_unique", "type": "unique", "keys": ["customer_id", "as_of_date"]},
         {"name": "label_domain", "type": "domain", "column": "churn_label", "allowed": [0, 1]},
     ]
+    # Eligibility gate (labels.py:154-163): churn_labels' broadcast bound
+    # frame yields an EMPTY spine when as_of + horizon exceeds
+    # max(order_date). Publishing that would silently produce an empty
+    # training set, so fail loudly like the reference does — unless
+    # silver itself is empty, which only the failure path asks.
+    eligible = {"name": "label_window_observable", "type": "row_count", "min": 1}
+    table = ManagedTable(spark, labels_path, keys=["customer_id", "as_of_date"])
     labels = labels.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        if labels.isEmpty() and not orders.isEmpty():
-            # Eligibility gate (labels.py:154-163): churn_labels' broadcast
-            # bound frame yields an EMPTY spine when as_of + horizon exceeds
-            # max(order_date). Publishing that would silently produce an
-            # empty training set, so fail loudly like the reference does.
-            end = orders.agg(F.max("order_date")).collect()[0][0]
+        report = table.merge(labels, checks=[*gates, eligible])
+    except DQGateFailure as failure:
+        report = failure.report
+        if report is None or [r.name for r in report.blocking_failures] != [eligible["name"]]:
+            raise
+        end = orders.agg(F.max("order_date")).first()[0]
+        if end is not None:
             raise DQGateFailure(
                 "Requested as_of_date is not training-eligible because the full "
                 "future label window is not observable. "
                 f"as_of_date={as_of_date}, label_horizon_days={horizon_days}, "
-                f"dataset_end_date={end}"
-            )
-        report = ManagedTable(
-            spark, labels_path, keys=["customer_id", "as_of_date"]
-        ).merge(labels, checks=gates)
+                f"dataset_end_date={end}",
+                report,
+            ) from None
+        report = table.merge(labels, checks=gates)
     finally:
         labels.unpersist()
     return StageResult(rows_published=report.row_count, metadata=report.to_dict())
@@ -420,11 +446,17 @@ def training_snapshot_publish(
         .withColumn("_training_ts", F.current_timestamp())
     )
     # A8 version-homogeneity gates (build_training_snapshot.py:32-38):
-    # exactly one feature version and one label horizon in the snapshot.
-    fv, _ = assert_single_value(snap, "_feature_version", "_label_horizon_days")
-    n = ManagedTable(
+    # exactly one feature version and one label horizon in the snapshot,
+    # observed on the publish write like every other gate.
+    homogeneous = {
+        "name": "version_homogeneous",
+        "type": "single_value",
+        "columns": ["_feature_version", "_label_horizon_days"],
+    }
+    report = ManagedTable(
         spark, snapshot_path, keys=["customer_id", "as_of_date"]
-    ).merge(snap).row_count
+    ).merge(snap, checks=[homogeneous])
+    n, fv = report.row_count, report.results[0].values["_feature_version"]
     _write_stage_metadata(
         snapshot_path,
         run_id,

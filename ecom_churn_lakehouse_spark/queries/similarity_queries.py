@@ -16,6 +16,7 @@ from ecom_churn_lakehouse_spark.functions.vectors import (
     norm,
     sq_dist,
     to_double_array,
+    width_guard,
 )
 from ecom_churn_lakehouse_spark.registry import register
 from ecom_churn_lakehouse_spark.similarity.ann import (
@@ -1468,6 +1469,18 @@ _PQ_DIMS = 8  # dims per subspace
 _PQ_K = 4  # centroids per subspace (seed vectors vec_id < 4)
 
 
+def _pq_sub_d2(v: str, c: str):
+    """Squared L2 distance between ``v`` and ``c`` over subspace ``m``
+    (a column): a Python ``sum`` of element differences at the runtime
+    offset ``m * _PQ_DIMS``, behind the vector primitives' width guard."""
+    idx = lambda j: (F.col("m") * _PQ_DIMS + j + 1).cast("int")  # noqa: E731
+    return width_guard(v, c, _PQ_M * _PQ_DIMS) * sum(
+        (F.try_element_at(v, idx(j)) - F.try_element_at(c, idx(j)))
+        * (F.try_element_at(v, idx(j)) - F.try_element_at(c, idx(j)))
+        for j in range(_PQ_DIMS)
+    )
+
+
 def _pq_sql() -> str:
     d2 = " + ".join(
         f"(v.ev[m*{_PQ_DIMS}+{j+1}] - c.cv[m*{_PQ_DIMS}+{j+1}])"
@@ -1537,15 +1550,7 @@ def q_embedding_pq_codes(spark, sf_dir):
             "m", F.explode(F.array(*[F.lit(m) for m in range(_PQ_M)]))
         )
     )
-    idx = lambda j: (F.col("m") * _PQ_DIMS + j + 1).cast("int")  # noqa: E731
-    d2 = sum(
-        (
-            F.element_at("ev", idx(j)) - F.element_at("cv", idx(j))
-        )
-        * (F.element_at("ev", idx(j)) - F.element_at("cv", idx(j)))
-        for j in range(_PQ_DIMS)
-    )
-    scored = sub.select("vec_id", "cid", "m", d2.alias("d2"))
+    scored = sub.select("vec_id", "cid", "m", _pq_sub_d2("ev", "cv").alias("d2"))
     w = Window.partitionBy("vec_id", "m").orderBy("d2", "cid")
     best = scored.withColumn("rn", F.row_number().over(w)).filter(
         F.col("rn") == 1
@@ -1696,15 +1701,9 @@ def q_ann_ivfpq_topk(spark, sf_dir):
             "m", F.explode(F.array(*[F.lit(m) for m in range(_PQ_M)]))
         )
     )
-    idx = lambda j: (F.col("m") * _PQ_DIMS + j + 1).cast("int")  # noqa: E731
-    d2_code = sum(
-        (F.element_at("ev", idx(j)) - F.element_at("cv", idx(j)))
-        * (F.element_at("ev", idx(j)) - F.element_at("cv", idx(j)))
-        for j in range(_PQ_DIMS)
-    )
     w_code = Window.partitionBy("vec_id", "m").orderBy("d2", "cid")
     codes = (
-        sub.select("vec_id", "cid", "m", d2_code.alias("d2"))
+        sub.select("vec_id", "cid", "m", _pq_sub_d2("ev", "cv").alias("d2"))
         .withColumn("rn", F.row_number().over(w_code))
         .filter(F.col("rn") == 1)
         .select("vec_id", "m", "cid")
@@ -1724,12 +1723,6 @@ def q_ann_ivfpq_topk(spark, sf_dir):
         on="bucket",
     ).filter(F.col("neighbor_id") != F.col("query_id"))
 
-    kidx = lambda j: (F.col("m") * _PQ_DIMS + j + 1).cast("int")  # noqa: E731
-    d2_adc = sum(
-        (F.element_at("qv", kidx(j)) - F.element_at("cv", kidx(j)))
-        * (F.element_at("qv", kidx(j)) - F.element_at("cv", kidx(j)))
-        for j in range(_PQ_DIMS)
-    )
     adc = (
         cand.join(
             codes.withColumnRenamed("vec_id", "neighbor_id"),
@@ -1738,7 +1731,7 @@ def q_ann_ivfpq_topk(spark, sf_dir):
         .join(F.broadcast(pqc), on="cid")
         .groupBy("query_id", "neighbor_id")
         .agg(
-            F.sum(F.floor(d2_adc * 1000000).cast("long"))
+            F.sum(F.floor(_pq_sub_d2("qv", "cv") * 1000000).cast("long"))
             .cast("long")
             .alias("adc_micro")
         )

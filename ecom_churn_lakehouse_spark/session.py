@@ -34,6 +34,15 @@ from pyspark.sql import SparkSession
 #:   until the ContextCleaner drops it after an old-generation GC, so
 #:   the heap a run keeps swung by 16 MB per relation with GC timing.
 #:   Cost: a task's 8192-page table caps its Tungsten memory at 8 GB.
+#: - JVM case mapping, not ICU: with ICU on, the first ``lower()`` or
+#:   ``upper()`` in a JVM runs ``CollationAwareUTF8String.<clinit>``,
+#:   which title-cases all 1,114,112 code points: on a cold local[4]
+#:   JVM the first ``lower()`` query took 1.9 s with ICU and 0.5 s
+#:   without, and silver's first task pays it.
+#:   Without ICU, non-ASCII strings go through the JVM's
+#:   ``String.toLowerCase()``/``toUpperCase()`` (full Unicode mapping,
+#:   final sigma included, in the JVM's default locale): the case
+#:   mapping of pyspark 3.5, the reference's version.
 _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -56,6 +65,7 @@ _DEFAULT_CONF: dict[str, str] = {
     # py4j classloading storm during getOrCreate, reproduced in
     # isolation with that single key.)
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    "spark.sql.icu.caseMappings.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

@@ -197,6 +197,11 @@ def banded_sign_buckets(
             p["__bitval"],
         ).otherwise(zero),
     )
+    # Never NULL (a NULL vector's CASE adds 0), but only the coalesce
+    # says so to the optimizer: a nullable bucket lets it infer
+    # isnotnull(bucket) from the band join downstream and push that
+    # into this cross join's condition, evaluating the HOF twice.
+    bucket = F.coalesce(bucket, zero)
     return v.join(F.broadcast(h_band)).select(
         F.col(id_col), "band", bucket.alias("bucket")
     )

@@ -817,10 +817,10 @@ class ManagedTable:
 
         Nothing runs before the publish: the key probe (rows in
         duplicate key groups, from a ``count`` window over the keys),
-        the row-predicate checks and the row count of the upserts are
-        observed (``df.observe``) on the staged snapshot write itself
-        and checked before the commit claim. A non-unique source or a
-        failing critical check raises
+        the row and frame checks (``row_count``, ``single_value``) and
+        the row count of the upserts are observed (``df.observe``) on
+        the staged snapshot write itself and checked before the commit
+        claim. A non-unique source or a failing critical check raises
         :class:`~ecom_churn_lakehouse_spark.dq.checks.DQGateFailure`;
         the staged snapshot is abandoned, so the log and the snapshot
         dirs are untouched, exactly like a failed Delta transaction.
@@ -892,11 +892,7 @@ class ManagedTable:
             if found["dup_rows"]:
                 raise DQGateFailure(f"merge source not unique on keys {self.keys}")
             report = report_from_observation(attempt["checks"], checks)
-            if not report.ok:
-                raise DQGateFailure(
-                    "critical DQ failures: "
-                    f"{[r.name for r in report.blocking_failures]}"
-                )
+            report.raise_if_blocked()
             report.rows_deleted = found.get("tombstones", 0)
             attempt["report"] = report
 

@@ -81,21 +81,24 @@ def train_churn_model(
 ) -> TrainedModel:
     """Fit logistic regression on a training snapshot DataFrame.
 
-    The collect is bounded: above MAX_DRIVER_ROWS a deterministic
-    hash-based sample is taken in Spark first (never a full-table
-    toPandas, the reference's scale hazard).
+    The collect is bounded: at most MAX_DRIVER_ROWS + 1 rows come
+    back, in one job. Only when the cap is exceeded is the snapshot
+    counted and a deterministic hash-based sample taken in Spark
+    (never a full-table toPandas, the reference's scale hazard).
     """
     cols = [*FEATURE_COLS, label_col]
     df = snapshot.select(*cols)
-    n_total = df.count()
-    if n_total > MAX_DRIVER_ROWS:
+    pdf = df.limit(MAX_DRIVER_ROWS + 1).toPandas()
+    n_total = len(pdf)
+    sampled = n_total > MAX_DRIVER_ROWS
+    if sampled:
+        n_total = df.count()
         frac = MAX_DRIVER_ROWS / n_total
         # deterministic: keep rows whose key-hash falls in [0, frac)
-        df = df.filter(
+        pdf = df.filter(
             (F.pmod(F.xxhash64(*FEATURE_COLS), F.lit(1_000_000)) / 1_000_000.0)
             < F.lit(frac)
-        )
-    pdf = df.toPandas()
+        ).toPandas()
 
     x = pdf[FEATURE_COLS].to_numpy(dtype=float)
     y = pdf[label_col].to_numpy(dtype=float)
@@ -124,7 +127,7 @@ def train_churn_model(
         intercept=float(b),
         n_rows=int(n),
         train_accuracy=acc,
-        metadata={"sampled": n_total > MAX_DRIVER_ROWS, "total_rows": int(n_total)},
+        metadata={"sampled": sampled, "total_rows": int(n_total)},
     )
 
 

@@ -1,6 +1,7 @@
 import json
 import sys
 import threading
+import uuid
 from contextlib import contextmanager
 from pathlib import Path
 
@@ -37,6 +38,24 @@ def engine_width(spark):
         yield int(_DEFAULT_CONF[key])
     finally:
         spark.conf.set(key, prev)
+
+
+@pytest.fixture
+def jobs(spark):
+    """``jobs(fn)`` runs ``fn`` under a fresh Spark job group and
+    returns how many jobs it started."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture

@@ -210,3 +210,27 @@ checks:
     assert {r.name for r in report.blocking_failures} == {
         "customer_id_not_null", "unique_order_id", "allowed_order_status",
     }
+
+
+def test_frame_checks_judge_the_whole_frame(spark):
+    row_count = {"name": "enough", "type": "row_count", "min": 3}
+    same = {"name": "same", "type": "single_value", "columns": ["v", "w", "z"]}
+    df = spark.createDataFrame(
+        [("a", 1, None), ("a", 2, None)], "v string, w int, z string")
+    by_name = {r.name: r for r in run_checks(df, [row_count, same]).results}
+    assert (by_name["enough"].bad_rows, by_name["enough"].detail) == (
+        1, "expected at least 3 rows, found 2")
+    # v and the all-NULL z are homogeneous; w is not
+    assert by_name["same"].bad_rows == 1 and not by_name["same"].passed
+    assert by_name["same"].values == {"v": "a", "z": None}
+    assert "column 'w' must be homogeneous" in by_name["same"].detail
+    # a partly-NULL column holds two values
+    mixed = spark.createDataFrame([("a",), (None,)], "v string")
+    report = run_checks(mixed, [{"type": "single_value", "columns": ["v"]}])
+    assert report.results[0].bad_rows == 1
+    # an empty frame has no value at all
+    report = run_checks(df.limit(0), [row_count, same])
+    assert [r.bad_rows for r in report.results] == [3, 3]
+    assert "found no rows" in report.results[1].detail
+    assert "enough" not in [r.name for r in run_checks(
+        df, [{**row_count, "min": 2}, same]).blocking_failures]

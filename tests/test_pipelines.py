@@ -383,6 +383,128 @@ def test_training_snapshot_homogeneity_gate(spark, tmp_path, column):
     assert not ManagedTable(spark, snapshot, keys=keys).exists()
 
 
+def _lake(spark, tmp_path, rows=RAW_ROWS):
+    """A fresh lake with ``rows`` ingested into bronze."""
+    lake = {k: str(tmp_path / k) for k in (
+        "raw", "bronze", "audit", "silver", "quarantine", "gold", "labels",
+        "snapshot", "keys")}
+    spark.createDataFrame(rows).write.parquet(lake["raw"])
+    bronze_ingest(spark, lake["raw"], lake["bronze"], lake["audit"], "b1")
+    return lake
+
+
+def test_stage_job_budget(spark, tmp_path, jobs):
+    # every count, probe and gate rides the publish write: no stage
+    # runs a job before its publish (the parent ran silver 6, labels 7,
+    # snapshot 6 and incremental gold 17 jobs on this lake)
+    from ecom_churn_lakehouse_spark.pipelines.incremental import incremental_gold_update
+
+    lake = _lake(spark, tmp_path)
+    # the CDC keys, one of them erased (a tombstone)
+    spark.createDataFrame([("cust_1",), ("cust_9",)], "customer_id string").coalesce(
+        1
+    ).write.parquet(lake["keys"])
+    keys = spark.read.parquet(lake["keys"])
+    ran = {
+        "silver": jobs(lambda: silver_publish(
+            spark, lake["bronze"], lake["silver"], lake["quarantine"], "s")),
+        "gold": jobs(lambda: gold_features(spark, lake["silver"], lake["gold"], AS_OF, "g")),
+        "labels": jobs(lambda: label_snapshot(
+            spark, lake["silver"], lake["labels"], AS_OF, "l")),
+        "snapshot": jobs(lambda: training_snapshot_publish(
+            spark, lake["gold"], lake["labels"], lake["snapshot"], AS_OF, "t")),
+        "gold_incremental": jobs(lambda: incremental_gold_update(
+            spark, lake["silver"], lake["gold"], keys, AS_OF, "i")),
+    }
+    budget = {"silver": 4, "gold": 6, "labels": 7, "snapshot": 3, "gold_incremental": 9}
+    assert all(ran[k] <= budget[k] for k in budget), ran
+
+
+def test_silver_republish_over_grown_bronze_counts(spark, tmp_path):
+    # the second publish MERGEs into an existing table, whose plan scans
+    # the source in both branches; the observed preclean split must
+    # still report every bronze row exactly once
+    lake = _lake(spark, tmp_path)
+    silver_publish(spark, lake["bronze"], lake["silver"], lake["quarantine"], "s1")
+    grown = str(tmp_path / "raw2")
+    spark.createDataFrame([
+        Row(order_id="ord-7", customer_id="cust_5", order_status="delivered",
+            order_purchase_timestamp="2025-03-01 10:00:00"),  # new
+        Row(order_id="ORD-2", customer_id="cust_1", order_status="canceled",
+            order_purchase_timestamp="2025-03-10 13:00:00"),  # ord-2 change, later ts
+        Row(order_id="ord-8", customer_id="cust_6", order_status="bogus",
+            order_purchase_timestamp="2025-03-02 10:00:00"),  # status not allowed
+    ]).write.parquet(grown)
+    bronze_ingest(spark, grown, lake["bronze"], lake["audit"], "b2")
+    s = silver_publish(spark, lake["bronze"], lake["silver"], lake["quarantine"], "s2")
+    # 10 bronze rows: 3 invalid, 7 clean in 5 orders (2 duplicate rejects)
+    assert (s.rows_published, s.rows_rejected) == (5, 5)
+    silver = ManagedTable(spark, lake["silver"], keys=["order_id"]).read()
+    by_id = {r["order_id"]: r["order_status"] for r in silver.collect()}
+    assert set(by_id) == {"ord-1", "ord-2", "ord-3", "ord-6", "ord-7"}
+    assert by_id["ord-2"] == "canceled"
+    assert spark.read.parquet(f"{lake['quarantine']}/preclean_invalid").count() == 3
+
+
+def test_failed_silver_gate_still_writes_quarantine(spark, tmp_path, monkeypatch):
+    lake = _lake(spark, tmp_path)
+    with pytest.raises(DQGateFailure, match="impossible"):
+        _fail_silver(spark, lake, monkeypatch)
+    assert not ManagedTable(spark, lake["silver"], keys=["order_id"]).exists()
+    invalid = spark.read.parquet(f"{lake['quarantine']}/preclean_invalid")
+    assert sorted(r["order_id"] for r in invalid.collect()) == ["ord-4", "ord-5"]
+
+
+def test_failed_labels_gate_leaves_table_absent(spark, gated_lake, tmp_path):
+    labels = str(tmp_path / "labels")
+    with pytest.raises(DQGateFailure, match="not observable.*dataset_end_date=2025-06-15"):
+        label_snapshot(spark, gated_lake["silver"], labels, "2025-05-31", "f")
+    assert not ManagedTable(spark, labels, keys=[]).exists()
+
+
+def test_empty_silver_publishes_empty_labels(spark, tmp_path):
+    silver, labels = str(tmp_path / "silver"), str(tmp_path / "labels")
+    ManagedTable(spark, silver, keys=["order_id"]).overwrite(
+        spark.createDataFrame(
+            [], "order_id string, customer_id string, "
+            "order_purchase_ts timestamp, order_status string",
+        )
+    )
+    r = label_snapshot(spark, silver, labels, AS_OF, "e")
+    assert r.rows_published == 0
+    assert ManagedTable(spark, labels, keys=[]).read().count() == 0
+
+
+def test_failed_snapshot_gate_leaves_table_unchanged(spark, gated_lake, tmp_path):
+    keys = ["customer_id", "as_of_date"]
+    labels = ManagedTable(spark, str(tmp_path / "labels"), keys=keys)
+    labels.overwrite(ManagedTable(spark, gated_lake["labels"], keys=keys).read())
+    snapshot = ManagedTable(spark, str(tmp_path / "snapshot"), keys=keys)
+    t = training_snapshot_publish(
+        spark, gated_lake["gold"], labels.path, snapshot.path, AS_OF, "ok")
+    assert t.rows_published == 2
+    rows, state = sorted(snapshot.read().collect(), key=str), _table_state(snapshot.path)
+    # one customer's label now comes from another horizon
+    labels.overwrite(labels.read().withColumn(
+        "_label_horizon_days",
+        F.when(F.col("customer_id") == "cust_1", 90).otherwise(F.col("_label_horizon_days")),
+    ))
+    with pytest.raises(DQGateFailure, match="column '_label_horizon_days' must be homogeneous"):
+        training_snapshot_publish(
+            spark, gated_lake["gold"], labels.path, snapshot.path, AS_OF, "bad")
+    assert _table_state(snapshot.path) == state
+    assert sorted(snapshot.read().collect(), key=str) == rows
+
+
+def test_lower_matches_python_str_lower(spark):
+    # silver normalizes keys and statuses with lower(); the session maps
+    # case with the JVM, as the reference's pyspark 3.5 does, instead of
+    # ICU, and non-ASCII text keeps Python's mapping (final sigma too)
+    s = "ÀÉÎ ΣΑΣ STRASSE"
+    got = spark.createDataFrame([(s,)], "s string").select(F.lower("s")).first()[0]
+    assert got == s.lower() == "àéî σας strasse"
+
+
 def test_bronze_partition_pruning(spark, tmp_path):
     """The ingest_date-partitioned bronze layout is actually EXPLOITED
     (SURVEY §4: the reference writes the partitioning but never filters

@@ -115,6 +115,28 @@ def test_embedding_neardup_pairs(spark):
     assert (0, 2) in got and got[(0, 2)] > 0.99   # near dup
     assert all(3 not in p for p in got)    # unrelated vector never pairs
 
+
+def test_banded_buckets_evaluate_the_plane_fold_once(spark):
+    # A nullable bucket let the optimizer infer isnotnull(bucket) from
+    # the band join and push it into the bucketing cross join's
+    # condition, evaluating the nested HOF twice per (vector, band).
+    from ecom_churn_lakehouse_spark.similarity.ann import (
+        banded_sign_buckets,
+        neardup_pairs,
+    )
+
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 0.2, -0.3, 0.5]), (1, [1.0, 0.2, -0.3, 0.5]), (2, None)],
+        "vec_id long, embedding array<double>",
+    )
+    planes = vecs.filter("vec_id < 2").select(F.col("vec_id").alias("plane_id"), "embedding")
+    banded = banded_sign_buckets(vecs, planes, rows_per_band=1)
+    plan = neardup_pairs(banded, vecs, 0.95, dim=4)._jdf.queryExecution().optimizedPlan()
+    assert "isnotnull(aggregate(" not in plan.toString()
+    # a NULL vector still lands in bucket 0 of every band, as before
+    assert {(r["band"], r["bucket"]) for r in banded.filter("vec_id = 2").collect()} == {
+        (0, 0), (1, 0)}
+
 def test_bpe_token_count(spark):
     from ecom_churn_lakehouse_spark.functions.text import bpe_token_count_col
 

@@ -143,3 +143,39 @@ def test_training_lineage_roundtrips_into_serving(spark, snapshot, tmp_path):
     some_id = next(iter(svc.client._by_key))
     out = svc.predict(some_id)
     assert out is not None and 0.0 <= out["churn_probability"] <= 1.0
+
+
+def _synthetic_snapshot(spark, n):
+    import pandas as pd
+
+    from ecom_churn_lakehouse_spark.training.train import FEATURE_COLS
+
+    # from pandas: a LocalRelation, so the collect is the only job
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {c: [float((i * (k + 3)) % 17) for i in range(n)] for k, c in enumerate(FEATURE_COLS)}
+            | {"churn_label": [i % 2 for i in range(n)]}
+        )
+    )
+
+
+def test_unsampled_training_collects_in_one_job(spark, jobs):
+    snap = _synthetic_snapshot(spark, 200)
+    assert jobs(lambda: train_churn_model(snap)) == 1
+    m = train_churn_model(snap)
+    assert m.n_rows == 200
+    assert m.metadata == {"sampled": False, "total_rows": 200}
+
+
+def test_training_samples_above_the_driver_cap(spark, monkeypatch):
+    import ecom_churn_lakehouse_spark.training.train as train
+
+    snap = _synthetic_snapshot(spark, 200)
+    monkeypatch.setattr(train, "MAX_DRIVER_ROWS", 200)  # at the cap: no sample
+    assert train.train_churn_model(snap).metadata == {"sampled": False, "total_rows": 200}
+    monkeypatch.setattr(train, "MAX_DRIVER_ROWS", 50)
+    m = train.train_churn_model(snap)
+    assert m.metadata == {"sampled": True, "total_rows": 200}
+    # the deterministic hash sample keeps about a quarter of the rows
+    assert 0 < m.n_rows < 200
+    assert train.train_churn_model(snap).coef == m.coef

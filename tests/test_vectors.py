@@ -118,3 +118,26 @@ def test_ann_operator_raises_on_width_mismatch(spark):
     with pytest.raises(Exception, match=WIDTH_ERROR):
         brute_force_topk(vecs, vecs, k=2).collect()
     assert brute_force_topk(vecs, vecs, k=2, dim=4).count() == 8
+
+
+@pytest.mark.parametrize("width", [EMBED_DIM - 1, EMBED_DIM + 1], ids=["narrower", "wider"])
+@pytest.mark.parametrize("query", ["q_embedding_pq_codes", "q_ann_ivfpq_topk"])
+def test_pq_subspace_distances_raise_on_width_mismatch(spark, tmp_path, query, width):
+    """The PQ entries read subspace elements at a runtime offset, so
+    only the guard stops a wider vector's tail from being dropped (or
+    a narrower one from failing with an index error)."""
+    import pandas as pd
+
+    from ecom_churn_lakehouse_spark.queries import similarity_queries
+
+    rng = np.random.default_rng(width)
+    pd.DataFrame(
+        {
+            "vec_id": np.arange(60, dtype=np.int64),
+            "embedding": [rng.standard_normal(width).astype(np.float32).tolist()
+                          for _ in range(60)],
+            "label": np.zeros(60, dtype=np.int32),
+        }
+    ).to_parquet(tmp_path / "embeddings.parquet", index=False)
+    with pytest.raises(Exception, match=WIDTH_ERROR):
+        getattr(similarity_queries, query)(spark, str(tmp_path)).collect()
